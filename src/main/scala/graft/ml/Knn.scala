@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.{QueryDef, Tables, Work}
+import graft.functions.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,7 +55,15 @@ object Knn {
     * ([[predictShuffled]]) instead of OOMing the executors on an
     * oversized broadcast.
     */
-  def predictDistributed(queries: DataFrame, refs: DataFrame, k: Int): DataFrame = {
+  def predictDistributed(queries: DataFrame, refs: DataFrame, k: Int): DataFrame =
+    voteTopK(scoredPairs(queries, refs), k)
+
+  /** Scored pairs (qid, rid, label, carry…, dist) over queries × refs —
+    * the broadcast-or-shuffle choice [[predictDistributed]] and
+    * [[accuracies]] share. `carry` names extra query- or reference-side
+    * columns passed through to the vote. */
+  private def scoredPairs(queries: DataFrame, refs: DataFrame,
+      carry: Seq[String] = Nil): DataFrame = {
     val maxBc = queries.sparkSession.conf
       .getOption("spark.graft.knn.maxBroadcastRows")
       .map(_.toLong).getOrElse(2000000L)
@@ -81,12 +90,10 @@ object Knn {
           refs.limit(capProbe + 1).count() > maxBc
         }
     }
-    if (overCap) predictShuffled(queries, refs, k)
-    else voteTopK(
-      queries.crossJoin(broadcast(refs))
-        .select(col("qid"), col("rid"), col("label"),
-          sqDist(col("qvec"), col("rvec")).as("dist")),
-      k)
+    if (overCap) shuffledPairs(queries, refs, 0, carry)
+    else queries.crossJoin(broadcast(refs))
+      .select((Seq("qid", "rid", "label") ++ carry).map(col) :+
+        sqDist(col("qvec"), col("rvec")).as("dist"): _*)
   }
 
   /** EXACT non-broadcast predict — the block-nested join as a shuffle:
@@ -101,17 +108,21 @@ object Knn {
     * every (query, ref) pair exactly once.
     */
   def predictShuffled(queries: DataFrame, refs: DataFrame, k: Int,
-      blocks: Int = 0): DataFrame = {
+      blocks: Int = 0): DataFrame =
+    voteTopK(shuffledPairs(queries, refs, blocks, Nil), k)
+
+  private def shuffledPairs(queries: DataFrame, refs: DataFrame,
+      blocks: Int, carry: Seq[String]): DataFrame = {
     val spark = queries.sparkSession
     val b = if (blocks > 0) blocks
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val refB = refs.withColumn("blk", pmod(hash(col("rid")), lit(b)))
-    val qB = queries.select(col("qid"), col("qvec"),
-      explode(array((0 until b).map(lit(_)): _*)).as("blk"))
-    val scored = qB.join(refB.hint("shuffle_hash"), "blk")
-      .select(col("qid"), col("rid"), col("label"),
-        sqDist(col("qvec"), col("rvec")).as("dist"))
-    voteTopK(scored, k)
+    val qCarry = carry.filter(queries.columns.contains)
+    val qB = queries.select((Seq("qid", "qvec") ++ qCarry).map(col) :+
+      explode(array((0 until b).map(lit(_)): _*)).as("blk"): _*)
+    qB.join(refB.hint("shuffle_hash"), "blk")
+      .select((Seq("qid", "rid", "label") ++ carry).map(col) :+
+        sqDist(col("qvec"), col("rvec")).as("dist"): _*)
   }
 
   /** Shared vote stage: scored (qid, rid, label, dist) → (qid,
@@ -126,15 +137,50 @@ object Knn {
   private def voteTopK(scored: DataFrame, k: Int): DataFrame =
     scored
       .groupBy("qid")
-      .agg(graft.functions.TopK.smallestK(
-        col("dist"), col("rid"), col("label"), k).as("nbrs"))
-      // max over (count, -label) structs = (count desc, label asc)
-      .select(col("qid"),
-        (-array_max(transform(array_distinct(col("nbrs.label")),
-          l => struct(
-            size(filter(col("nbrs.label"), x => x === l)).as("c"),
-            (-l).as("nl"))))
-          .getField("nl")).as("pred_label"))
+      .agg(TopK.smallestK(col("dist"), col("rid"), col("label"), k).as("nbrs"))
+      .select(col("qid"), majority(col("nbrs.label")).as("pred_label"))
+
+  /** Majority label of an array of neighbor labels, ties (count desc,
+    * label asc): max over (count, -label) structs. */
+  private def majority(labels: Column): Column =
+    -array_max(transform(array_distinct(labels),
+      l => struct(
+        size(filter(labels, x => x === l)).as("c"),
+        (-l).as("nl"))))
+      .getField("nl")
+
+  /** Accuracy of each (reference set, k) model on one query set
+    * (qid, qvec, true_label), in ONE Spark execution: the models'
+    * reference rows, tagged with the model index, form one reference
+    * side ([[predictDistributed]]'s route) scanned against one scan of
+    * the queries; each (model, qid) heap of max(k) neighbors is sliced
+    * to the model's own k before the vote, so every model is scored
+    * on exactly its own top-k. The truth label rides in the vote
+    * group, so qid need only be unique within this execution (a
+    * monotonically_increasing_id is). A model with no scored rows
+    * scores 0.0.
+    */
+  def accuracies(queries: DataFrame, models: Seq[(DataFrame, Int)]): Seq[Double] = {
+    require(models.nonEmpty, "accuracies needs at least one model")
+    val refs = models.zipWithIndex.map { case ((r, _), m) =>
+      r.select(lit(m).as("model"), col("rid"), col("rvec"), col("label"))
+    }.reduce(_ union _)
+    val ks = models.map(_._2)
+    val kOf = element_at(array(ks.map(lit(_)): _*), col("model") + 1)
+    val counts = scoredPairs(queries, refs, Seq("model", "true_label"))
+      .groupBy("model", "qid", "true_label")
+      .agg(TopK.smallestK(col("dist"), col("rid"), col("label"), ks.max)
+        .as("nbrs"))
+      .groupBy("model")
+      .agg(
+        count(when(majority(slice(col("nbrs.label"), lit(1), kOf)) ===
+          col("true_label"), true)).as("c"),
+        count(lit(1)).as("n"))
+      .collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    models.indices.map(m =>
+      counts.get(m).fold(0.0) { case (c, n) => c.toDouble / n })
+  }
 
   /** Pivot-pruned EXACT predict (REPOSE-style reference-point pruning,
     * SURVEY.md §7.3): the 100 TB form of the brute-force crossJoin.
@@ -407,22 +453,43 @@ object Knn {
       refs: Array[Ref], k: Int): Unit =
     spark.udf.register(name, udf(predictFn(spark, refs, k))): Unit
 
+  /** A saved model's reference set, as [[save]] writes it and [[load]]
+    * reads it back — declared, so a load infers no schema. */
+  val RefSchema: StructType = StructType(Seq(
+    StructField("rid", LongType),
+    StructField("rvec", ArrayType(DoubleType)),
+    StructField("label", IntegerType)))
+
   /** Persist a trained model: reference set parquet + metadata — the
     * reference's joblib.dump + register_model_version
-    * (processor.py:131-138), file-backed.
+    * (processor.py:131-138), file-backed. The reference set is written
+    * in the canonical [[RefSchema]] columns.
     */
   def save(refs: DataFrame, dir: String, k: Int): Unit = {
     Work.clean(dir)
-    refs.write.mode("overwrite").parquet(s"$dir/refs")
+    refs.select(RefSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode("overwrite").parquet(s"$dir/refs")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/meta.json"), s"""{"k":$k}""")
   }
 
+  /** Load a model [[save]] wrote: (reference set, k). A missing or
+    * malformed `meta.json` or a missing `refs/` fails naming `dir`. */
   def load(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val meta = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/meta.json"))
-    val k = "\"k\":(\\d+)".r.findFirstMatchIn(meta).get.group(1).toInt
-    (spark.read.parquet(s"$dir/refs"), k)
+    val metaPath = java.nio.file.Paths.get(s"$dir/meta.json")
+    val meta =
+      try java.nio.file.Files.readString(metaPath)
+      catch {
+        case e: java.io.IOException => throw new IllegalStateException(
+          s"KNN model at $dir: cannot read meta.json ($e)", e)
+      }
+    val k = "\"k\":(\\d+)".r.findFirstMatchIn(meta).map(_.group(1).toInt)
+      .getOrElse(throw new IllegalStateException(
+        s"""KNN model at $dir: meta.json has no "k" field: $meta"""))
+    val (f, refsPath) = Work.fs(s"$dir/refs")
+    if (!f.exists(refsPath)) throw new IllegalStateException(
+      s"KNN model at $dir: reference set $refsPath is missing")
+    (spark.read.schema(RefSchema).parquet(s"$dir/refs"), k)
   }
 
   // --- embeddings-table split shared by queries and oracle ------------

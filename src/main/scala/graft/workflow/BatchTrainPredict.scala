@@ -1,7 +1,6 @@
 package graft.workflow
 
 import graft.{QueryDef, Tables, Work}
-import graft.ml.Knn
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,18 +59,6 @@ object BatchTrainPredict {
       array(col("sl"), col("sw"), col("pl"), col("pw"))
         .cast(ArrayType(DoubleType)).as("rvec"),
       col("type").cast(IntegerType).as("label"))
-
-  private[workflow] def accuracy(queries: DataFrame, refs: DataFrame, k: Int): Double = {
-    val row = Knn.predictDistributed(queries, refs, k)
-      .join(queries.select("qid", "true_label"), "qid")
-      .agg(
-        sum((col("pred_label") === col("true_label")).cast(LongType)).as("c"),
-        count(lit(1)).as("n"))
-      .collect().head
-    // empty validation set: sum is null and count 0 — score 0, not NPE
-    if (row.isNullAt(0) || row.getLong(1) == 0L) 0.0
-    else row.getLong(0).toDouble / row.getLong(1)
-  }
 
   /** Wire the four jobs and control edges onto `wf` (workflow.py:40-120):
     * every job is a [[ProcessorGraph]] of the reference's ten processor

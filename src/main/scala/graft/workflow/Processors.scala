@@ -89,6 +89,9 @@ object Processors {
   /** Champion-challenger validation — exact reference semantics
     * (ModelValidator processor.py:154-199): score candidate vs deployed
     * on the validation input; promote on >=, demote the old champion.
+    * Both models are scored in one Spark pass over one scan of the
+    * validation input ([[Knn.accuracies]]), with no intermediate
+    * materialization.
     */
   final class ModelValidator(artifactName: String) extends Processor {
     override def process(ctx: ExecutionContext,
@@ -103,14 +106,13 @@ object Processors {
           reg.updateModelVersionStage(model, latest.version, Stage.Deployed)
           ()
         case Some(dep) =>
-          // materialize: qid is monotonically_increasing_id — freeze the
-          // assignment once so the prediction join cannot mis-align
-          val validation = Work.materialize("wf_validation",
-            BatchTrainPredict.asQueries(inputs.head))
-          val (newRefs, k1) = Knn.load(ctx.spark, latest.path)
-          val newScore = BatchTrainPredict.accuracy(validation, newRefs, k1)
-          val (depRefs, k2) = Knn.load(ctx.spark, dep.path)
-          val depScore = BatchTrainPredict.accuracy(validation, depRefs, k2)
+          // query side spread over the cores: every validation row is
+          // scored against both reference sets, and a one-file CSV
+          // scans as one task
+          val queries = BatchTrainPredict.asQueries(
+            inputs.head.repartition(ctx.spark.sparkContext.defaultParallelism))
+          val Seq(newScore, depScore) = Knn.accuracies(queries,
+            Seq(Knn.load(ctx.spark, latest.path), Knn.load(ctx.spark, dep.path)))
           reg.appendToArtifact(artifactName,
             s"deployed model version: ${dep.version} scores: $depScore")
           reg.appendToArtifact(artifactName,

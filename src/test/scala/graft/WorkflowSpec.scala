@@ -57,6 +57,28 @@ class WorkflowSpec extends SparkSpec {
     assert(artifact.linesIterator.size == 2)
     assert(artifact.contains("deployed model version: 1"))
     assert(artifact.contains("generated model version: 2"))
+    // the identical retrain ties, and both scores equal a brute-force
+    // k=5 accuracy over the collected model and validation rows
+    val scores = artifact.linesIterator.map(_.split("scores: ")(1).toDouble).toSeq
+    assert(scores(0) == scores(1), s"identical retrain must tie: $scores")
+    val (refsDf, k) = graft.ml.Knn.load(spark, versions.head.path)
+    val refs = refsDf.collect().map(r =>
+      graft.ml.Knn.Ref(r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
+    val predict = graft.ml.Knn.predictFn(spark, refs, k)
+    val test = BTP.csvScan(spark, cfg.testCsv).collect()
+    val correct = test.count(r => predict((0 until 4).map(r.getFloat(_).toDouble)) ==
+      r.getFloat(4).toInt)
+    assert(scores(0) == correct.toDouble / test.length,
+      s"scores $scores vs brute force $correct/${test.length}")
+  }
+
+  test("validate leaves no materialized scratch behind") {
+    val cfg = mkFixtures(s"${Work.dir}/test_wf_scratch")
+    def leftovers = Option(new java.io.File(Work.dir).list()).toSeq.flatten
+      .count(_.startsWith("mat_wf_validation_"))
+    val before = leftovers
+    (1 to 3).foreach(_ => BTP.runOnce(spark, cfg))
+    assert(leftovers == before)
   }
 
   test("predict fires only after DEPLOYED despite VALIDATED firing first") {
