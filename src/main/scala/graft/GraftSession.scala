@@ -24,13 +24,13 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      // dev A/B knob: with parallelismFirst=false AQE coalesces tiny
-      // shuffles by size instead of keeping >= defaultParallelism
-      // partitions (fewer tasks for the many small intermediate
-      // shuffles of a local bench; Spark's own docs recommend false
-      // for production)
+      // Spark's default, pinned: AQE keeps >= defaultParallelism
+      // partitions when coalescing. false coalesces tiny shuffles by
+      // size (fewer tasks for a local bench's small intermediate
+      // shuffles; Spark's own docs recommend false for production) —
+      // a deployment overrides it like any session conf
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+        "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // The default whole-stage-codegen class cache holds 100 entries —
       // a 113-query interleaved bench pass thrashes it, so every run of
@@ -42,21 +42,8 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
 
-  /** Whether the whole-plan rewrites are ambient-on for engine
-    * sessions. DEFAULT TRUE since r15: SOAK_r14's paired A/B
-    * adjudicated the rules-on posture safe (geomean ratio 0.96, no key
-    * loses beyond noise, 197/197 oracle-green ambient, 12/12 intended
-    * plan matches, zero unintended) — so the real deployment posture
-    * IS the default posture, and the scoped/rules-on double
-    * bookkeeping is retired. Kill switch: `SPARK_GRAFT_RULES_ON=0`
-    * (env, for harness runs) or setting the per-rule EnabledConf to
-    * false on the session (per-conf, for a user session). `=1` still
-    * means on (the old soak spelling, now a no-op). */
-  def rulesOnByDefault: Boolean =
-    !sys.env.get("SPARK_GRAFT_RULES_ON").contains("0")
-
   /** Silence the benign `WindowExec: No Partition Defined` warning in
-    * HARNESS mains only (Bench/Verify/StressMain/Soak — r15 verdict
+    * HARNESS mains only (Bench/Verify/StressMain/Profile — r15 verdict
     * #7). The suite's four unpartitioned windows are all value-domain-
     * or k-bounded by construction (Quality KS cumulative, Dedup span
     * windows, Embeddings quantile frame, Corpus tercile cumulative —
@@ -79,21 +66,20 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(s)
     // whole-plan optimizer extensions — registered always, and since
-    // r15 ENABLED ambiently by default (adjudication in
-    // [[rulesOnByDefault]]); a session that wants a rule off sets its
-    // EnabledConf to false
+    // r15 ENABLED ambiently by default: SOAK_r14's paired A/B
+    // adjudicated the rules-on posture safe (geomean ratio 0.96, no key
+    // loses beyond noise, 197/197 oracle-green ambient, 12/12 intended
+    // plan matches, zero unintended). A session that wants a rule off
+    // sets its EnabledConf to false — the per-conf kill switch.
     graft.plans.RangeJoinRewrite.ensureRegistered(s)
     graft.plans.TopKRewrite.ensureRegistered(s)
-    if (rulesOnByDefault) {
-      // default, not force: getOrCreate can return a REUSED session on
-      // which the user already set EnabledConf=false — the documented
-      // per-conf kill switch — and an unconditional set would silently
-      // revert that opt-out on the next get() (r15 review). Only an
-      // UNSET conf receives the default.
-      Seq(plans.RangeJoinRewrite.EnabledConf,
-          plans.TopKRewrite.EnabledConf).foreach { k =>
-        if (s.conf.getOption(k).isEmpty) s.conf.set(k, "true")
-      }
+    // default, not force: getOrCreate can return a REUSED session on
+    // which the user already set EnabledConf=false, and an
+    // unconditional set would silently revert that opt-out on the next
+    // get() (r15 review). Only an UNSET conf receives the default.
+    Seq(plans.RangeJoinRewrite.EnabledConf,
+        plans.TopKRewrite.EnabledConf).foreach { k =>
+      if (s.conf.getOption(k).isEmpty) s.conf.set(k, "true")
     }
     s
   }
@@ -123,19 +109,15 @@ object GraftSession {
     * the TUNING confs (bin width, max-k, max-cells) per key so a key
     * that tunes a rewrite cannot change the plans later keys measure,
     * then restore the AMBIENT posture — since r15 that posture is
-    * rules-ON by default (adjudicated in [[rulesOnByDefault]]; the
-    * real `spark.sql.extensions` deployment shape, where every
-    * matching plan in the suite must take either a correct rewrite or
-    * a safe skip path — SOAK_r14 measured exactly that, 197/197
-    * green). `SPARK_GRAFT_RULES_ON=0` reverts the harness to the old
-    * scoped posture for A/B regression runs (SoakAb/SoakPlanDiff).
+    * rules-ON (adjudicated at [[get]]; the real `spark.sql.extensions`
+    * deployment shape, where every matching plan in the suite must
+    * take either a correct rewrite or a safe skip path — SOAK_r14
+    * measured exactly that, 197/197 green).
     */
   def applyQueryConfPolicy(s: SparkSession): Unit = {
     resetQueryConfs(s)
-    if (rulesOnByDefault) {
-      s.conf.set(plans.RangeJoinRewrite.EnabledConf, "true")
-      s.conf.set(plans.TopKRewrite.EnabledConf, "true")
-    }
+    s.conf.set(plans.RangeJoinRewrite.EnabledConf, "true")
+    s.conf.set(plans.TopKRewrite.EnabledConf, "true")
   }
 
   /** Set `confs`, build the DataFrame, FORCE its optimization while

@@ -35,23 +35,14 @@ object StressMain {
     // job counter: growth rows report (rows, jobs, wall) — a jobs
     // blowup with flat wall is the local[32] tell of a plan that
     // re-executes at cluster scale (round-7 verdict #4)
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCount.incrementAndGet(): Unit
-      })
+    val counter = graft.ops.JobCounter.install(spark)
     def t(name: String)(body: => Long): Double = {
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .drain(spark.sparkContext)
-      val j0 = jobCount.get()
+      val j0 = counter.snapshot().jobs
       val t0 = System.nanoTime()
       val n = body
       val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .drain(spark.sparkContext)
-      println(f"[stress] $name%-34s $sec%8.2f s  rows=$n jobs=${jobCount.get() - j0}")
+      val jobs = counter.snapshot().jobs - j0
+      println(f"[stress] $name%-34s $sec%8.2f s  rows=$n jobs=$jobs")
       sec
     }
 

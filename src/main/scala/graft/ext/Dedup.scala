@@ -280,7 +280,7 @@ object Dedup {
     * every qualifying pair shares a prefix entry. Rare-first ordering
     * is what makes the filter bite: hot shingles (the df² explosion)
     * land in suffixes and never generate candidates. */
-  private[graft] def prefixIndex(sh: DataFrame): DataFrame = {
+  private def prefixIndex(sh: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // One explicit sh-hash exchange FEEDS BOTH the df aggregate and
     // the join's stream side (ReuseExchange dedups them; both
@@ -317,7 +317,7 @@ object Dedup {
   private[graft] def prefixCandidates(sh: DataFrame): DataFrame =
     prefixCandidatesOn(prefixIndex(sh))
 
-  private[graft] def prefixCandidatesOn(pre: DataFrame): DataFrame =
+  private def prefixCandidatesOn(pre: DataFrame): DataFrame =
     pre.select(col("sh"), col("doc_id").as("a"))
       .join(pre.select(col("sh"), col("doc_id").as("b")), "sh")
       .filter(col("a") < col("b"))
@@ -325,7 +325,7 @@ object Dedup {
 
   /** Exact Jaccard verification of candidate (a, b) id pairs against
     * the full shingle sets — the shared tail of the prefix and
-    * MinHash-LSH paths (and what ProfileNgram times). Shape: chained
+    * MinHash-LSH paths. Shape: chained
     * candidate ⋈ sets_a ⋈ sets_b. The r13 profile also MEASURED the
     * two-fetch alternative (va = cands ⋈ sets_a, vb = cands ⋈ sets_b,
     * merge on (a,b)): +3 jobs and no wall win, and at scale it only
@@ -350,7 +350,7 @@ object Dedup {
     * ids resolve against `shA` only and the `b` ids against `shB` only.
     * For the self-join case both sides are the same frame
     * ([[verifyJaccard]]); for the cross-corpus incremental case the
-    * split is the r16 measured cut (ProfileIncPub, sf0.1, candidates
+    * split is the r16 measured cut (sf0.1, candidates
     * persisted so the arms time ONLY the verify join: 0.37 s warm vs
     * 0.75 s for joining both ids against the history-sized union —
     * history is scanned once instead of twice, and the `b` side is
@@ -485,7 +485,6 @@ object Dedup {
     // store — cheaper, and recoverable by lineage recompute.
     val reliable = spark.conf
       .getOption("spark.graft.cc.reliableCheckpoint").exists(_.toBoolean)
-    val debug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     val und = edges.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
       .persist()
@@ -539,15 +538,12 @@ object Dedup {
     // min(src, min(dst)) per src — ONE shuffle instead of a distinct
     // materialization plus two joins. `changed` falls out as
     // cluster != doc_id.
-    val t0r1 = System.nanoTime()
     val round1 = und.groupBy(col("src").as("doc_id"))
       .agg(min(col("dst")).as("min_dst"))
       .select(col("doc_id"),
         least(col("min_dst"), col("doc_id")).as("cluster"))
       .withColumn("changed", col("cluster") =!= col("doc_id"))
     val (r1Leaf, r1Rows, r1Changed) = materializeLeaf(round1)
-    if (debug) System.err.println(
-      f"[cc] round 1 (fused init): changed=$r1Changed%d ${(System.nanoTime() - t0r1) / 1e9}%.2f s")
     // Below this row count the label side of the per-round joins is
     // broadcast (a LogicalRDD leaf has no stats, so AQE would otherwise
     // plan shuffle joins for a frame of a few thousand rows — measured
@@ -563,7 +559,6 @@ object Dedup {
     var i = 1
     var converged = r1Changed == 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       val lab = if (labelRows <= bcastRows) broadcast(labels) else labels
       // self rows carry the pre-round label so the aggregate can emit a
       // per-doc `changed` flag for free: each doc_id appears exactly
@@ -585,8 +580,6 @@ object Dedup {
         .agg(min(col("cluster")).as("cluster"), min(col("old")).as("old"))
         .withColumn("changed", !(col("cluster") <=> col("old")))
       val (nextLeaf, nRows, nChanged) = materializeLeaf(next)
-      if (debug) System.err.println(
-        f"[cc] round ${i + 1}: changed=$nChanged%d ${(System.nanoTime() - t0) / 1e9}%.2f s")
       converged = nChanged == 0
       labels = nextLeaf.select("doc_id", "cluster")
       labelRows = nRows
@@ -2641,7 +2634,7 @@ object Dedup {
         b.count(): Unit
         b
       } else bandBuckets(minhashSignatures(shI))
-    // split verify (r16, ProfileIncPub-measured): `a` ids are history
+    // split verify (r16-measured): `a` ids are history
     // ids and `b` ids increment ids, so each side joins only its own
     // shingle frame — the stored history table is scanned once instead
     // of twice (the union spelling resolved BOTH ids against

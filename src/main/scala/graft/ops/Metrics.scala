@@ -94,6 +94,92 @@ object GraftMetrics {
     spark.listenerManager.unregister(m)
 }
 
+/** Cumulative Spark (jobs, stages, tasks) at one instant; subtract two
+  * snapshots for the cost of what ran between them. */
+final case class JobCounts(jobs: Int, stages: Int, tasks: Int) {
+  def -(o: JobCounts): JobCounts =
+    JobCounts(jobs - o.jobs, stages - o.stages, tasks - o.tasks)
+}
+
+/** The one job/stage/task counter the harness mains and tests share.
+  * Counts at job start from the job's planned `stageInfos` (skipped
+  * stages included — that is the plan's shape, not the cluster's
+  * luck), and keeps a per-job histogram keyed by short call site,
+  * which attributes eager `Work.materialize` builds to their source
+  * lines. Scheduler events arrive on an asynchronous bus, so every
+  * read drains it first: an undrained read under-counts the action
+  * just run and leaks its late jobs into the next baseline.
+  *
+  * {{{
+  *   val c = JobCounter.install(spark)
+  *   val c0 = c.snapshot()
+  *   // ... run an action ...
+  *   val cost = c.snapshot() - c0
+  * }}}
+  */
+final class JobCounter private (sc: org.apache.spark.SparkContext)
+    extends org.apache.spark.scheduler.SparkListener {
+  import org.apache.spark.sql.execution.SQLExecution
+  import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+    SparkListenerSQLExecutionStart}
+
+  private var counts = JobCounts(0, 0, 0)
+  private val sites = scala.collection.mutable.Map.empty[String, Int]
+  // live SQL execution id -> its description, which is the short call
+  // site of the action that started it. AQE submits a query's stage
+  // jobs from a pool thread whose own call site names no user code, so
+  // a job inside an execution is attributed to the execution. Touched
+  // only by the bus thread, which delivers events one at a time.
+  private val execSites = scala.collection.mutable.Map.empty[String, String]
+
+  override def onOtherEvent(
+      e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      execSites(s.executionId.toString) = s.description
+    case s: SparkListenerSQLExecutionEnd =>
+      execSites.remove(s.executionId.toString): Unit
+    case _ => ()
+  }
+
+  override def onJobStart(
+      j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+    // outside any execution, the result stage (created last, highest
+    // id) is named after the job's call site
+    val site = Option(j.properties)
+      .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      .flatMap(execSites.get).filter(_.nonEmpty)
+      .orElse(j.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+      .getOrElse("?")
+    synchronized {
+      counts = JobCounts(counts.jobs + 1, counts.stages + j.stageInfos.size,
+        counts.tasks + j.stageInfos.map(_.numTasks).sum)
+      sites(site) = sites.getOrElse(site, 0) + 1
+    }
+  }
+
+  def snapshot(): JobCounts = {
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+    synchronized(counts)
+  }
+
+  /** Cumulative jobs per short call site, drained like [[snapshot]]. */
+  def callSites(): Map[String, Int] = {
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+    synchronized(sites.toMap)
+  }
+}
+
+object JobCounter {
+  def install(spark: SparkSession): JobCounter = {
+    val c = new JobCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(c)
+    c
+  }
+
+  def uninstall(spark: SparkSession, c: JobCounter): Unit =
+    spark.sparkContext.removeSparkListener(c)
+}
+
 /** One micro-batch's progress snapshot. */
 final case class BatchProgress(
     queryName: String,

@@ -3,7 +3,7 @@ package graft.registry
 import graft.workflow.{EventBus, Events}
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -210,12 +210,25 @@ final class Registry(workdir: String, val bus: EventBus) {
       s"""{"name":${q(a.name)},"uri":${q(a.uri)}}""")
     val json =
       s"""{"datasets":[${ds.mkString(",")}],"models":[${ms.mkString(",")}],"artifacts":[${as.mkString(",")}]}"""
-    Files.writeString(stateFile, json, StandardCharsets.UTF_8): Unit
+    // write a sibling then rename over the state file: an in-place
+    // rewrite truncates first, so a crash mid-write would leave a torn
+    // registry.json that no later process can load
+    val tmp = stateFile.resolveSibling("registry.json.tmp")
+    Files.writeString(tmp, json, StandardCharsets.UTF_8)
+    Files.move(tmp, stateFile, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING): Unit
   }
 
   private def load(): Unit = if (Files.exists(stateFile)) {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(Files.readString(stateFile))
+    def corrupt(why: String, cause: Throwable): Nothing =
+      throw new IllegalStateException(
+        s"registry state file $stateFile cannot be loaded: $why", cause)
+    val root =
+      try mapper.readTree(Files.readString(stateFile))
+      catch { case e: java.io.IOException => corrupt(e.getMessage, e) }
+    // an empty file parses to a missing node, not an error
+    if (root == null || !root.isObject) corrupt("not a JSON object", null)
     root.path("datasets").elements().asScala.foreach { d =>
       val m = DatasetMeta(d.path("name").asText(), d.path("format").asText(),
         d.path("uri").asText())

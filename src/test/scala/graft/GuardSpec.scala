@@ -191,6 +191,39 @@ class GuardSpec extends SparkSpec {
       reloaded.getDataset("c").isDefined)
   }
 
+  test("registry persists by atomic replace: no temp file is left behind") {
+    val wd = s"${Work.dir}/test_guard_reg_atomic"
+    Work.clean(wd)
+    val reg = new graft.registry.Registry(wd, new graft.workflow.EventBus)
+    reg.registerDataset("a", "csv", "/data/a.csv")
+    reg.registerModel("m")
+    reg.registerModelVersion("m", "/models/m/1"): Unit
+    reg.renameDataset("a", "b"): Unit
+    reg.registerVersionedArtifact("idx", "/idx/1", Some("v1")): Unit
+    val left = new java.io.File(wd).list().toSet
+    assert(left == Set("registry.json"), s"workdir holds $left")
+    val reloaded = new graft.registry.Registry(wd, new graft.workflow.EventBus)
+    assert(reloaded.getDataset("b").isDefined &&
+      reloaded.modelVersions("m").size == 1 &&
+      reloaded.resolveArtifact("idx", Some("v1")).isDefined)
+  }
+
+  test("a torn registry.json fails loudly, naming the file") {
+    val wd = s"${Work.dir}/test_guard_reg_torn"
+    Work.clean(wd)
+    val reg = new graft.registry.Registry(wd, new graft.workflow.EventBus)
+    reg.registerDataset("a", "csv", "/data/a.csv")
+    val state = java.nio.file.Paths.get(wd, "registry.json")
+    val json = java.nio.file.Files.readString(state)
+    // a crash mid-write, and one right after the truncate
+    Seq(json.take(json.length / 2), "").foreach { torn =>
+      java.nio.file.Files.writeString(state, torn)
+      val e = intercept[IllegalStateException](
+        new graft.registry.Registry(wd, new graft.workflow.EventBus))
+      assert(e.getMessage.contains(state.toString), e.getMessage)
+    }
+  }
+
   test("media codecs fail loudly on undecodable payloads") {
     intercept[IllegalArgumentException](
       graft.ext.ImageCodec.decode(Array[Byte](9, 9, 9)))

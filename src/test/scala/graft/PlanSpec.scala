@@ -909,35 +909,85 @@ class PlanSpec extends SparkSpec {
     val df = Tables(spark, sf, "orders")
       .select(graft.ops.Relational.cents(
         org.apache.spark.sql.functions.col("o_totalprice")).as("cents"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
+    val counter = graft.ops.JobCounter.install(spark)
     try {
       val before = {
         // baseline: the same action un-observed
         df.write.format("noop").mode("overwrite").save()
-        org.apache.spark.sql.graftbridge.ListenerBridge
-          .drain(spark.sparkContext)
-        jobs.get()
+        counter.snapshot().jobs
       }
       val got = graft.ops.ObservedGate.run(df, "gate",
         Seq(count(lit(1)).as("rows"), sum("cents").as("total_cents"))) {
         observed => observed.write.format("noop").mode("overwrite").save()
       }
-      org.apache.spark.sql.graftbridge.ListenerBridge
-        .drain(spark.sparkContext)
-      val observedJobs = jobs.get() - before
+      val observedJobs = counter.snapshot().jobs - before
       assert(observedJobs <= 2, // the noop write's own job(s), no extra scan
         s"observe must not add a data pass: $observedJobs jobs")
       val wantRows = df.count()
       val wantSum = df.agg(sum("cents")).head().getLong(0)
       assert(got("rows") == wantRows, s"got=$got want rows=$wantRows")
       assert(got("total_cents") == wantSum, s"got=$got want=$wantSum")
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally graft.ops.JobCounter.uninstall(spark, counter)
+  }
+
+  test("JobCounter: a snapshot delta is the action's jobs and the sum " +
+      "over their planned stages; idle reads zero; uninstall stops it") {
+    val counter = graft.ops.JobCounter.install(spark)
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(j): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val idle0 = counter.snapshot()
+      assert(counter.snapshot() - idle0 == graft.ops.JobCounts(0, 0, 0))
+      // a shuffle makes the job multi-stage, so stages and tasks differ
+      // from the job count
+      val c0 = counter.snapshot()
+      Tables(spark, sf, "orders").repartition(3,
+          org.apache.spark.sql.functions.col("o_custkey"))
+        .groupBy("o_custkey").count()
+        .write.format("noop").mode("overwrite").save()
+      val d = counter.snapshot() - c0
+      val js = starts.toArray(
+        Array.empty[org.apache.spark.scheduler.SparkListenerJobStart]).toSeq
+      assert(js.nonEmpty && d.stages > d.jobs, s"$d")
+      assert(d == graft.ops.JobCounts(js.size,
+        js.map(_.stageInfos.size).sum,
+        js.flatMap(_.stageInfos).map(_.numTasks).sum), s"$d vs $js")
+      assert(counter.callSites().values.sum == counter.snapshot().jobs)
+      graft.ops.JobCounter.uninstall(spark, counter)
+      val u0 = counter.snapshot()
+      spark.range(10).write.format("noop").mode("overwrite").save()
+      assert(counter.snapshot() == u0)
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      graft.ops.JobCounter.uninstall(spark, counter)
+    }
+  }
+
+  test("Profile: one relational key's call-site histogram totals its " +
+      "job count and the report brackets the executed plan") {
+    val counter = graft.ops.JobCounter.install(spark)
+    try {
+      val r = Profile.run(spark, sf, counter, "q1_agg")
+      assert(r.counts.jobs > 0 && r.sites.values.sum == r.counts.jobs,
+        s"${r.counts} vs ${r.sites}")
+      val rep = r.report
+      assert(rep.contains("===PLAN BEGIN q1_agg===") &&
+        rep.contains("===PLAN END q1_agg==="), rep)
+      // the AQE-final plan of the timed write, not the unexecuted one
+      assert(rep.contains("isFinalPlan=true"), rep)
+    } finally {
+      graft.ops.JobCounter.uninstall(spark, counter)
+      // Profile applies the harness conf policy (rewrites on); restore
+      // the suite's scoped posture for the tests that follow
+      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+      spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
+    }
   }
 
   test("native expressions stay inside whole-stage codegen spans") {
@@ -1128,8 +1178,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rules-on ambient default (r15): applyQueryConfPolicy restores " +
-      "both rewrite confs after resetting the tuning confs; " +
-      "SPARK_GRAFT_RULES_ON=0 is the only harness kill switch") {
+      "both rewrite confs after resetting the tuning confs") {
     val tk = graft.plans.TopKRewrite.EnabledConf
     val rj = graft.plans.RangeJoinRewrite.EnabledConf
     try {
@@ -1137,11 +1186,6 @@ class PlanSpec extends SparkSpec {
       spark.conf.set(graft.plans.TopKRewrite.MaxKConf, "7")
       spark.conf.set(tk, "false")
       GraftSession.applyQueryConfPolicy(spark)
-      // environment guard FIRST: under SPARK_GRAFT_RULES_ON=0 the
-      // confs below are unset and conf.get would throw an opaque
-      // NoSuchElementException before this diagnostic (r15 review)
-      assert(GraftSession.rulesOnByDefault,
-        "test environment must not set SPARK_GRAFT_RULES_ON=0")
       // ambient default: both rules ON (the SOAK_r14-adjudicated
       // deployment posture), tuning confs back to defaults
       assert(spark.conf.get(tk) == "true")
