@@ -175,8 +175,9 @@ object StressMain {
       c => Dedup.incrementalPairsFused(Dedup.plantedCorpus(c),
           col("doc_id") % 100000000L < Dedup.PlantedOffset).count(),
       n => repDocs(docs, n))
-    // r15: published-history incremental — the index publish happens
-    // OUTSIDE the timed region (it is history-ingest-time work);
+    // r15: published-history incremental (a one-segment segmented
+    // index) — the index publish happens OUTSIDE the timed region (it
+    // is history-ingest-time work);
     // history grows n× while the increment stays FIXED, so the
     // increment-side JOB COUNT must stay flat and wall must grow far
     // sub-linearly (only the stored-table scans and the verify join
@@ -192,10 +193,10 @@ object StressMain {
         // the replicated index in the shared work dir (r15 review)
         val path = Work.scratch(s"histidx_$n")
         Work.clean(path)
-        Dedup.publishHistoryIndex(spark, path,
+        Dedup.publishHistorySegment(spark, path, "hist",
           Dedup.plantedCorpus(repDocs(docs, n)).filter(histPred))
         val sec = t(s"incremental_pub_hist $label")(
-          Dedup.incrementalAgainstIndex(spark, path, inc1).count())
+          Dedup.incrementalAgainstSegmentedIndex(spark, path, inc1).count())
         Work.clean(path)
         sec
       }
@@ -210,7 +211,8 @@ object StressMain {
     // Locally the stored sides broadcast below ~10 MB so the 1x row
     // matches the plain twin; the N× rows exercise the layout once the
     // stored side crosses the threshold (the 100 TB regime PlanSpec
-    // pins with broadcast disabled).
+    // pins with broadcast disabled). The bucketed index is the same
+    // one-segment publish, re-laid-out by compactSegments.
     if (only.isEmpty || only.contains("incremental_pub_bucketed")) {
       val histPred = col("doc_id") % 100000000L < Dedup.PlantedOffset
       val inc1 = Dedup.plantedCorpus(repDocs(docs, 1))
@@ -218,10 +220,11 @@ object StressMain {
       def runAt(n: Int, label: String): Double = {
         val path = Work.scratch(s"histidxb_$n")
         Work.clean(path)
-        Dedup.publishHistoryIndexBucketed(spark, path,
+        Dedup.publishHistorySegment(spark, path, "hist",
           Dedup.plantedCorpus(repDocs(docs, n)).filter(histPred))
+        Dedup.compactSegments(spark, path, "bucketed", retire = false)
         val sec = t(s"incremental_pub_bucketed $label")(
-          Dedup.incrementalAgainstIndexBucketed(spark, path, inc1).count())
+          Dedup.incrementalAgainstSegmentedIndex(spark, path, inc1).count())
         Work.clean(path)
         sec
       }

@@ -1034,9 +1034,9 @@ object Dedup {
     * [[minhashDedup]] carries).
     *
     * 100 TB shape: in production the history side's index is a
-    * PUBLISHED artifact — [[publishHistoryIndex]] writes it once at
-    * history-ingest time, [[incrementalAgainstIndex]] joins each
-    * increment against the stored tables, so per-increment compute is
+    * PUBLISHED artifact — [[publishHistorySegment]] writes it once at
+    * history-ingest time, [[incrementalAgainstSegmentedIndex]] joins
+    * each increment against the stored tables, so per-increment compute is
     * ∝ increment, not corpus (witnessed by `dedup_incremental_pub` and
     * the StressMain flat-jobs growth row). The in-query spelling here
     * computes both sides in one union-tagged shingle pass (ONE
@@ -1101,7 +1101,7 @@ object Dedup {
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
 
-  // --- published history index (the production daily-crawl shape) ----
+  // --- history index (the production daily-crawl shape) -------------
 
   /** Both `dedup_incremental` spellings share one oracle: the
     * brute-force cross-slice inverted-index join. */
@@ -1134,26 +1134,6 @@ object Dedup {
     },
     Some(incrementalOracleSql))
 
-  /** Write the history-side near-dup index — shingle sets (`sh/`, the
-    * verify side) and banded MinHash buckets (`bb/`, the candidate
-    * side) — to `path` under the _SUCCESS-gated, jvm-tagged-rename
-    * publish discipline of [[Dsir.ensureLogRatios]]. Runs ONCE at
-    * history-ingest time; every later increment only READS the two
-    * tables. The parent `_SUCCESS` marker is created only after both
-    * subtables landed, so a reader can never observe a half-published
-    * index; a completed index is never rewritten. */
-  def publishHistoryIndex(s: SparkSession, path: String,
-      history: DataFrame): Unit = {
-    // Work.publish: _SUCCESS-gated, staged in a per-call UNIQUE
-    // sweepable scr_ dir (two same-JVM threads can never share a
-    // staging dir, and a crashed publish is reclaimed by the stale
-    // sweep instead of leaking an index-sized dir — r15 review)
-    Work.publish(path)(stagePlainIndex(_, history)): Unit
-  }
-
-  /** Shingle + MinHash-band a corpus batch and write the two plain
-    * parquet subtables into a staging dir — the shared ingest core of
-    * [[publishHistoryIndex]] and [[publishHistorySegment]]. */
   /** THE single writer of the plain (sh, bb, lshplan) segment layout
     * (r20 review: three call sites had each spelled it out — a future
     * layout change must land exactly once). `sh` must be
@@ -1169,6 +1149,9 @@ object Dedup {
     writeRecord(tmp, "lshplan", DefaultBandPlan.token)
   }
 
+  /** Shingle + MinHash-band a corpus batch and stage its plain
+    * subtables into a staging dir — the ingest core of
+    * [[publishHistorySegment]]. */
   private[graft] def stagePlainIndex(tmp: String, batch: DataFrame): Unit = {
     val sh = shingleSets(batch.select(col("doc_id"), col("text")))
       .persist()
@@ -1199,18 +1182,34 @@ object Dedup {
     * lose. Ordering is irrelevant to the union semantics. Returns the
     * segment path.
     *
-    * PRECONDITION (the segmented face of the disjoint-id contract):
-    * doc_ids must be disjoint ACROSS segments — the monolithic publish
-    * gets this for free from being one batch, but a batch folded twice
-    * under two different ids (a retry spelled '2026-08-15' then
+    * PRECONDITION: doc_ids must be disjoint ACROSS segments — a batch
+    * folded twice under two ids (a retry spelled '2026-08-15' then
     * '20260815' defeats the same-id short-circuit) duplicates its rows
-    * in the union and the verify join fans out over them. The
-    * `spark.graft.dedup.checkDisjointIds` debug check also scans the
-    * assembled history side for duplicate doc_ids, so the segmented
-    * reader fails fast on a double-fold, not just on an
-    * increment-vs-history overlap. */
+    * in the union and the verify join fans out over them;
+    * [[checkDisjointIds]] catches that double-fold too. */
   def publishHistorySegment(s: SparkSession, indexDir: String,
-      segmentId: String, batch: DataFrame): String = {
+      segmentId: String, batch: DataFrame): String =
+    publishSegment(indexDir, segmentId)(stagePlainIndex(_, batch))
+
+  /** [[publishHistorySegment]] from an ALREADY-SHINGLED frame
+    * `(doc_id, shs, n)` — the composition face for callers that have
+    * the shingles cached (the curation stream shingles its batch once
+    * for in-batch pair generation and must not pay the UDF pass plus
+    * a persist+count AGAIN inside the fold; r19 verdict #1). The
+    * caller guarantees the frame is exactly
+    * `shingleSets(docs)`-shaped: same UDF, and rows with empty
+    * shingle sets already dropped (`n > 0` — provably the same guard,
+    * see [[shingleSets]]'s tokensWs invariant). Same `_SUCCESS` gate,
+    * same manifest refresh, same idempotent-retry discipline. */
+  def publishHistorySegmentShingled(s: SparkSession, indexDir: String,
+      segmentId: String, shingled: DataFrame): String =
+    publishSegment(indexDir, segmentId)(stageShingledIndex(_, shingled))
+
+  /** The commit body shared by both segment publish faces: validate the
+    * id, make sure the index dir exists, publish `seg_<id>` through
+    * `stage`, then refresh the manifest. */
+  private def publishSegment(indexDir: String, segmentId: String)(
+      stage: String => Unit): String = {
     require(segmentId.matches("[A-Za-z0-9._-]+"),
       s"segment id must be a plain file-name token, got '$segmentId'")
     val (fsys, dirPath) = Work.fs(indexDir)
@@ -1224,8 +1223,7 @@ object Dedup {
         fsys.getFileStatus(dirPath).isDirectory,
       s"segment index dir $indexDir cannot be created (a file in the " +
         "way, or an unwritable parent)")
-    val seg = Work.publish(
-      s"$indexDir/seg_$segmentId")(stagePlainIndex(_, batch))
+    val seg = Work.publish(s"$indexDir/seg_$segmentId")(stage)
     // manifest update AFTER the commit, and also on the _SUCCESS
     // short-circuit: the idempotent retry of a publish that crashed
     // between its commit and its manifest update is what repairs the
@@ -1234,42 +1232,6 @@ object Dedup {
     seg
   }
 
-  /** [[publishHistorySegment]] from an ALREADY-SHINGLED frame
-    * `(doc_id, shs, n)` — the composition face for callers that have
-    * the shingles cached (the curation stream shingles its batch once
-    * for in-batch pair generation and must not pay the UDF pass plus
-    * a persist+count AGAIN inside the fold; r19 verdict #1). The
-    * caller guarantees the frame is exactly
-    * `shingleSets(docs)`-shaped: same UDF, and rows with empty
-    * shingle sets already dropped (`n > 0` — provably the same guard,
-    * see [[shingleSets]]'s tokensWs invariant). Same `_SUCCESS` gate,
-    * same manifest refresh, same idempotent-retry discipline. */
-  def publishHistorySegmentShingled(s: SparkSession, indexDir: String,
-      segmentId: String, shingled: DataFrame): String = {
-    require(segmentId.matches("[A-Za-z0-9._-]+"),
-      s"segment id must be a plain file-name token, got '$segmentId'")
-    val (fsys, dirPath) = Work.fs(indexDir)
-    fsys.mkdirs(dirPath): Unit
-    require(fsys.exists(dirPath) &&
-        fsys.getFileStatus(dirPath).isDirectory,
-      s"segment index dir $indexDir cannot be created (a file in the " +
-        "way, or an unwritable parent)")
-    val seg = Work.publish(s"$indexDir/seg_$segmentId")(
-      stageShingledIndex(_, shingled))
-    updateManifest(indexDir)
-    seg
-  }
-
-  /** Union frames over every complete segment of a segmented index,
-    * as ONE multi-path parquet scan per subtable — not a unionByName
-    * chain, which keeps a scan node (and its jobs) per segment: the
-    * chained spelling measured +2 jobs per folded day in the
-    * steady-state growth row, a per-day plan growth a year of segments
-    * would compound; the multi-path scan reads N segments exactly like
-    * one N-times-larger table (jobs flat, StressMain row). Production
-    * addendum: an LSM-style periodic compaction of old segments keeps
-    * the FILE count bounded too — the scan shape here makes that an
-    * economy knob, not a correctness one. */
   /** Write a small in-artifact metadata record (the bucket layout, a
     * compaction's fold list) through the Hadoop FS API. Lives beside
     * the data it describes so a publish/rename moves them together. */
@@ -1298,58 +1260,29 @@ object Dedup {
     * by file count inverted the intent — a just-collapsed
     * 1-file/bucket standing segment, the largest-bytes intended
     * winner, sorted LAST and could be demoted by several many-file
-    * small victims). */
-  private def shLayout(path: String): (Int, Long) = {
+    * small victims). `buckets` is the segment's own bucket count (its
+    * `buckets` record), never an engine-wide constant. */
+  private def shLayout(path: String, buckets: Int): (Int, Long) = {
     val (fsys, shDir) = Work.fs(s"$path/sh")
     val parts = fsys.listStatus(shDir).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))
-    (math.ceil(parts.size.toDouble / HistIdxBuckets).toInt,
+    (math.ceil(parts.size.toDouble / buckets).toInt,
       parts.map(_.getLen).sum)
   }
 
   /** Files per bucket of a published bucketed segment's sh table —
-    * the aligned-fold dial's input. */
-  private def filesPerBucket(path: String): Int = shLayout(path)._1
+    * the aligned-fold dial's input — counted against the bucket count
+    * the segment's own record declares. */
+  private def filesPerBucket(path: String): Int =
+    shLayout(path, bucketCountOf(path).getOrElse(HistIdxBuckets))._1
 
   /** Bucket count of a published bucketed segment/index, None for a
     * plain one (or a corrupt record — the strict validation lives in
     * [[bucketedHistoryIndex]], which is the read path that matters). */
   private def bucketCountOf(path: String): Option[Int] =
-    readRecordOpt(path, "buckets")
+    Work.readSmallRecord(path, "buckets")
       .map(_.trim.split(" ")(0)).filter(t => t.nonEmpty && t.forall(_.isDigit))
       .map(_.toInt)
-
-  /** A record vanishing mid-read (concurrent retirement of the whole
-    * segment dir) is the same outcome as not existing — callers treat
-    * None as "gone", and activeSnapshots retries its whole pass on it.
-    * One shared implementation with every other small control record
-    * ([[graft.Work.readSmallRecord]], r18 review). */
-  private def readRecordOpt(dir: String, name: String): Option[String] =
-    Work.readSmallRecord(dir, name)
-
-  /** One (path, children) snapshot per segment dir of a segmented
-    * index — a single `listStatus` per segment resolves `_SUCCESS`,
-    * `folds` and `buckets` presence in ONE metadata call instead of
-    * three sequential probes (on the object-storage target of the
-    * Hadoop-FS port, per-call latency × segments is the reader's whole
-    * metadata bill; r17 review). Retries bounded times when a listed
-    * segment dir VANISHES mid-pass: that only happens when a
-    * concurrent compaction just retired it, in which case the next
-    * pass sees the compacted segment complete and the fold filter
-    * takes over — without the retry, the racing reader could observe
-    * a set that is neither the old one nor the new one (r17 review of
-    * the r16-#2 atomicity claim). */
-  /** Canonical string spelling of a segment path — the shared
-    * [[graft.Work.spell]] (r18 review: one spelling rule for every
-    * string-keyed artifact path): default-filesystem paths come back
-    * PLAIN, so every tag/table-name derivation downstream
-    * (Work.publishTag in bucketedHistoryIndex AND retireSegments'
-    * catalog cleanup — they must agree, r17 review #1) matches a
-    * caller addressing the same artifact by plain path; paths on any
-    * other filesystem stay fully qualified (stripping their scheme
-    * would re-resolve them against the wrong store). */
-  private def segSpelling(p: org.apache.hadoop.fs.Path): String =
-    Work.spell(p)
 
   /** Test-visible count of full segment-listing passes — the pin that
     * manifest-backed reads cost O(1) metadata calls, not O(segments)
@@ -1357,6 +1290,19 @@ object Dedup {
   private[graft] val listingPasses =
     new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** One (path, children) snapshot per segment dir of a segmented
+    * index — a single `listStatus` per segment resolves `_SUCCESS`,
+    * `folds` and `buckets` presence in ONE metadata call instead of
+    * three sequential probes (on the object-storage target of the
+    * Hadoop-FS port, per-call latency × segments is the reader's whole
+    * metadata bill; r17 review). Retries bounded times when a listed
+    * segment dir VANISHES mid-pass (a concurrent retirement): the next
+    * pass sees the compacted segment complete and the fold filter
+    * takes over, so a racing reader never observes a set that is
+    * neither the old one nor the new one. Paths come back in the
+    * [[graft.Work.spell]] spelling, so every tag derived from them
+    * (bucketedHistoryIndex's tables, retireSegments' catalog cleanup)
+    * agrees with a caller addressing the same artifact by plain path. */
   private def segSnapshots(
       indexDir: String): Seq[(String, Set[String])] = {
     listingPasses.incrementAndGet(): Unit
@@ -1372,7 +1318,7 @@ object Dedup {
               st.getPath.getName.startsWith("seg_"))
             .map(_.getPath)
         return segs.map { p =>
-          (segSpelling(p), fsys.listStatus(p).map(_.getPath.getName).toSet)
+          (Work.spell(p), fsys.listStatus(p).map(_.getPath.getName).toSet)
         }.sortBy(_._1)
       } catch {
         // the whole pass retries — a concurrent retirement (or a
@@ -1401,49 +1347,26 @@ object Dedup {
     * complete segment's fold record, i.e. folded and possibly retired.
     * THE replay guard for idempotent per-batch folds (r18 review): a
     * policy compaction can fold and retire a batch's segment before
-    * the stream checkpoint commits the batch, so a bare `_SUCCESS`
-    * probe on a replay would say "never ran" and the replayed batch
-    * would re-dedup against a history that already contains its own
-    * docs — emitting a self-pair per doc and overwriting the batch's
-    * correct pair sink. Cost (r18 ADVICE): one exists() for the
-    * committed-and-still-present common case (sufficient — a complete
-    * segment dir IS committed); a name that is absent pays one
-    * O(segments) listing pass fused with the fold-record sweep
-    * ([[foldGate]] — the streaming fold calls that directly so the
-    * same pass also serves its history probe). */
+    * the stream checkpoint commits the batch, and a bare `_SUCCESS`
+    * probe would then re-dedup the replay against its own docs. Cost:
+    * one exists() when the segment is still present, else one
+    * [[foldGate]] pass. */
   def segmentCommitted(indexDir: String, name: String): Boolean = {
     val n = if (name.startsWith("seg_")) name else s"seg_$name"
     Work.isComplete(s"$indexDir/$n") || foldGate(indexDir, name)._1
   }
 
-  /** One CONSISTENT pass serving the streaming fold's whole pre-batch
-    * decision: (is `name` committed?, the complete segment paths). The
-    * fold-record reads retry WITH the listing they came from — a
-    * concurrent retirement vanishing a listed record would otherwise
-    * silently drop its victims from the folded set and turn a
-    * committed replay into a re-run (r18 review: the same vanish race
-    * activeSnapshotsByListing retries, re-introduced un-retried). One
-    * listing serves both answers, so the fresh-batch hot path pays
-    * ONE O(segments) pass, not two (r18 review). */
+  /** One CONSISTENT pass ([[foldListing]]) serving the streaming
+    * fold's whole pre-batch decision: (is `name` committed?, the
+    * complete segment paths). One listing serves both answers, so the
+    * fresh-batch hot path pays ONE O(segments) pass, not two (r18
+    * review). */
   private[graft] def foldGate(indexDir: String,
       name: String): (Boolean, Seq[String]) = {
     val n = if (name.startsWith("seg_")) name else s"seg_$name"
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
-      val snaps = segSnapshots(indexDir).filter(_._2("_SUCCESS"))
-      val complete = snaps.map(_._1)
-      if (complete.exists(segName(_) == n)) return (true, complete)
-      val reads = snaps.filter(_._2("folds"))
-        .map { case (p, _) => readRecordOpt(p, "folds") }
-      if (!reads.contains(None))
-        return (reads.flatten.flatMap(_.split("\n")).map(_.trim)
-          .contains(n), complete)
-    }
-    throw new IllegalStateException(
-      s"fold-gate computation over $indexDir kept racing concurrent " +
-        "retirements after 5 attempts — is something deleting fold " +
-        "records outside compactSegments/retireSegments?")
+    val (snaps, folded) = foldListing(indexDir, "fold-gate computation")
+    val complete = snaps.map(_._1)
+    (complete.exists(segName(_) == n) || folded(n), complete)
   }
 
   /** The segments a reader should scan RIGHT NOW: the complete ones,
@@ -1453,30 +1376,21 @@ object Dedup {
     * incomplete → not listed, victims still present) or the new set
     * (compacted segment complete → its fold record excludes every
     * victim whether or not retirement has deleted them yet), never
-    * both, never neither; and [[segSnapshots]] retries a listing a
-    * concurrent retirement made INconsistent (a listed segment dir
-    * vanishing mid-pass), so the guarantee covers the
-    * list-while-retiring race too (r17 review). The one remaining
-    * race — a SCAN that pinned victim file paths before the fold and
-    * executes after retirement — is the retirement grace window
-    * documented on [[compactSegments]]. Fold records are written
-    * TRANSITIVE at compaction time (a compaction of compactions
-    * carries its victims' victims), so one record-read level is
-    * always enough. */
+    * both, never neither; [[foldListing]] retries a pass a concurrent
+    * retirement made inconsistent (r17 review). The one remaining
+    * race — a SCAN that pinned victim file paths before the fold — is
+    * the retirement grace window of [[compactSegments]]. Fold records
+    * are TRANSITIVE, so one record-read level is always enough. */
   def activeSegments(indexDir: String): Seq[String] =
     activeSnapshots(indexDir).map(_._1)
 
   /** Reader-side active set: the MANIFEST when the index carries one
-    * (ONE metadata read however many segments exist — on object
-    * stores LIST is the slow call, and a year of tiered cadence holds
-    * 10-30 segments = that many listStatus round-trips per query
-    * without it; r17 verdict #5), else the listing fold-filter pass.
-    * The manifest is only ever written FROM a fresh listing by the
-    * mutators (publish/compact/retire), so it can lag a crashed
-    * mutation by exactly that mutation — which reads as "the mutation
-    * hasn't happened yet", the same state a pre-mutation listing
-    * reader saw, and the idempotent retry of the mutation repairs it
-    * (ExtSpec pins the repair). */
+    * (ONE metadata read however many segments exist — on object stores
+    * LIST is the slow call; r17 verdict #5), else the listing
+    * fold-filter pass. The manifest is only ever written FROM a fresh
+    * listing by the mutators, so it can lag a crashed mutation by
+    * exactly that mutation — "not happened yet", which the idempotent
+    * retry repairs (ExtSpec pins the repair). */
   private def activeSnapshots(
       indexDir: String): Seq[(String, Set[String])] =
     manifestSnapshots(indexDir)
@@ -1484,31 +1398,38 @@ object Dedup {
 
   private def activeSnapshotsByListing(
       indexDir: String): Seq[(String, Set[String])] = {
-    // the fold-record reads live INSIDE the retry with the listing
-    // they came from: a newer compaction can retire a superseded
-    // compacted segment between segSnapshots and readRecordOpt, in
-    // which case the record read of a segment the listing said was
-    // complete-with-folds returns None — silently dropping its victims
-    // from the folded set and sending the reader at retired dirs. That
-    // vanish is the same retryable inconsistency segSnapshots handles;
-    // the whole active-set computation retries as ONE consistent pass
-    // (r17 ADVICE low).
+    val (snaps, folded) =
+      foldListing(indexDir, "active-segment computation")
+    snaps.filterNot { case (p, _) => folded.contains(segName(p)) }
+  }
+
+  /** ONE consistent pass over a segmented index: (the complete segment
+    * snapshots, every segment name their `folds` records name). The
+    * fold-record reads live INSIDE the retry with the listing they came
+    * from: a newer compaction can retire a superseded compacted segment
+    * between the listing and its record read, in which case the record
+    * read of a segment the listing said was complete-with-folds returns
+    * None — silently dropping its victims from the folded set (a reader
+    * sent at retired dirs, a committed replay turned into a re-run).
+    * That vanish is the same retryable inconsistency segSnapshots
+    * handles, so the whole pass retries (r17 ADVICE low, r18 review).
+    * `what` names the computation in the give-up error. */
+  private def foldListing(indexDir: String,
+      what: String): (Seq[(String, Set[String])], Set[String]) = {
     var attempt = 0
     while (attempt < 5) {
       attempt += 1
       val snaps = segSnapshots(indexDir).filter(_._2("_SUCCESS"))
       val reads = snaps.filter(_._2("folds"))
-        .map { case (p, _) => readRecordOpt(p, "folds") }
-      if (!reads.contains(None)) {
-        val folded = reads.flatten
-          .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty).toSet
-        return snaps.filterNot { case (p, _) => folded.contains(segName(p)) }
-      }
+        .map { case (p, _) => Work.readSmallRecord(p, "folds") }
+      if (!reads.contains(None))
+        return (snaps, reads.flatten
+          .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty).toSet)
     }
     throw new IllegalStateException(
-      s"active-segment computation over $indexDir kept racing " +
-        "concurrent retirements after 5 attempts — is something " +
-        "deleting fold records outside compactSegments/retireSegments?")
+      s"$what over $indexDir kept racing concurrent retirements after " +
+        "5 attempts — is something deleting fold records outside " +
+        "compactSegments/retireSegments?")
   }
 
   private val ManifestName = "manifest"
@@ -1524,19 +1445,14 @@ object Dedup {
     * the stamp is [[updateManifest]]'s lost-update guard, ignored on
     * read.
     *
-    * STALENESS verification (r18 ADVICE medium): a well-formed
-    * manifest could in principle name RETIRED dirs — writers now
-    * serialize on a lock in [[updateManifest]], so this guards
-    * out-of-band tampering and pre-lock-era records rather than a
-    * live race. Every manifest read verifies its entries against ONE
-    * root listStatus (a single LIST call — the per-segment child
-    * listings segSnapshots pays stay skipped, so reader metadata
-    * remains O(1) calls): any named dir missing ⇒ fall back to the
-    * listing pass, whose fold filter serves the correct post-fold
-    * view, and the next successful mutation rewrites the manifest. */
+    * STALENESS verification (r18 ADVICE medium, against out-of-band
+    * tampering — writers serialize in [[updateManifest]]): every read
+    * checks its entries against ONE root listStatus, so reader
+    * metadata stays O(1) calls; any named dir missing ⇒ fall back to
+    * the listing pass, and the next mutation rewrites the manifest. */
   private def manifestSnapshots(
       indexDir: String): Option[Seq[(String, Set[String])]] =
-    readRecordOpt(indexDir, ManifestName).flatMap { txt =>
+    Work.readSmallRecord(indexDir, ManifestName).flatMap { txt =>
       val lines = txt.split("\n").map(_.trim).filter(_.nonEmpty)
       val headOk = lines.headOption.exists { h =>
         h.split(" ") match {
@@ -1554,7 +1470,7 @@ object Dedup {
                   (flavor == "bucketed" || flavor == "plain") =>
               val kids = if (flavor == "bucketed")
                 Set("_SUCCESS", "buckets") else Set("_SUCCESS")
-              Some((n, (segSpelling(Work.fs(s"$indexDir/$n")._2), kids)))
+              Some((n, (Work.spell(Work.fs(s"$indexDir/$n")._2), kids)))
             case _ => None
           }
         }
@@ -1581,20 +1497,14 @@ object Dedup {
     * Deriving the content from the listing (never incrementally) means
     * any successful mutation repairs any earlier crash's staleness.
     *
-    * Lost-update guard (r18 ADVICE medium, hardened r19 review):
-    * "two racing mutators both write a correct snapshot" only holds
-    * when each write postdates all prior MUTATIONS — a writer whose
-    * listing predates a concurrent mutation could land a snapshot that
-    * either NAMES retired dirs (reader crash) or OMITS a just-published
-    * segment (silently missing history until the next mutation).
-    * Manifest writers therefore SERIALIZE on an exclusive lock record:
-    * the listing, the stamp bump and the replace all happen inside it,
-    * so no write can be derived from a listing older than another
-    * writer's mutation in either direction (the first r19 spelling —
-    * a stamp-conditional replace — closed only the listing-long window
-    * and only the retired-dir direction survived the residual one;
-    * reader-side verification in [[manifestSnapshots]] remains as the
-    * belt for out-of-band manifest tampering). Never throws: false =
+    * Lost-update guard (r18 ADVICE medium, hardened r19 review): a
+    * writer whose listing predates a concurrent mutation could land a
+    * snapshot that NAMES retired dirs (reader crash) or OMITS a
+    * just-published segment (missing history), so manifest writers
+    * SERIALIZE on an exclusive lock record — the listing, the stamp
+    * bump and the replace all happen inside it; reader-side
+    * verification in [[manifestSnapshots]] remains as the belt for
+    * out-of-band tampering. Never throws: false =
     * the manifest could not be refreshed (lock wait exhausted, IO) —
     * readers fall back or serve the stale (victims-still-on-disk)
     * view, and the caller decides what to gate on it (compaction
@@ -1603,7 +1513,7 @@ object Dedup {
     try {
       Work.withExclusiveRecord(indexDir, "_lock_manifest",
         staleMs = 60000L, waitMs = 10000L) {
-        val s0 = readRecordOpt(indexDir, ManifestName)
+        val s0 = Work.readSmallRecord(indexDir, ManifestName)
           .flatMap(_.split("\n").headOption)
           .map(_.trim.split(" "))
           .collect { case Array("v1", st) if st.forall(_.isDigit) &&
@@ -1621,26 +1531,79 @@ object Dedup {
   private def segName(path: String): String =
     path.substring(path.lastIndexOf('/') + 1)
 
+  /** Union frames over every ACTIVE segment of a segmented index, as
+    * ONE multi-path parquet scan per subtable — not a unionByName
+    * chain, which keeps a scan node (and its jobs) per segment: the
+    * chained spelling measured +2 jobs per folded day in the
+    * steady-state growth row; the multi-path scan reads N segments
+    * exactly like one N-times-larger table (jobs flat, StressMain
+    * row). */
   def segmentedIndexFrames(s: SparkSession,
       indexDir: String): (DataFrame, DataFrame) = {
     val segs = activeSegments(indexDir)
     require(segs.nonEmpty,
       s"segmented history index at $indexDir has no complete segment")
-    (s.read.parquet(segs.map(p => s"$p/sh"): _*),
-      s.read.parquet(segs.map(p => s"$p/bb"): _*))
+    plainFrames(s, segs)
   }
 
-  /** [[incrementalAgainstIndex]] over a segmented index: the increment
-    * joins the union of all ACTIVE segments — identical rows to a
-    * monolithic index over the concatenated history (ExtSpec pins it),
-    * with per-day ingest ∝ batch instead of ∝ history. Flavor-aware:
-    * plain segments are one multi-path scan, bucketed (compacted)
-    * segments keep their exchange-free join plan
-    * ([[incrementalAgainstFlavors]]). */
+  /** (sh, bb) of `segs` as ONE multi-path parquet scan per subtable. */
+  private def plainFrames(s: SparkSession,
+      segs: Seq[String]): (DataFrame, DataFrame) =
+    (s.read.parquet(segs.map(p => s"$p/sh"): _*),
+      s.read.parquet(segs.map(p => s"$p/bb"): _*))
+
+  /** Near-dup pairs of `increment` against a PUBLISHED segmented
+    * history index — the production entry point: history is never
+    * re-shingled or re-hashed; the increment shingles/bands only ITSELF
+    * and joins the stored bucket tables of every ACTIVE segment, so
+    * per-increment compute is ∝ increment (StressMain's
+    * `incremental_pub_hist` row pins increment-side jobs FLAT as
+    * history scales 8×). Bit-identical output to [[incrementalPairs]]
+    * over the concatenated history (ExtSpec pins set equality), with
+    * per-day ingest ∝ batch instead of ∝ history. Flavor-aware
+    * ([[probeFlavors]]): plain segments are one multi-path
+    * scan whose verify join still shuffles ∝ history scan at 100 TB;
+    * bucketed segments ([[compactSegments]] with `bucketed = true`)
+    * keep their exchange-free stored-side joins (PlanSpec pins exactly
+    * 2 exchanges fewer). The compute saving (shingling + 64 hashes per
+    * history doc, per day) is the headline either way.
+    *
+    * PRECONDITION (r15 ADVICE): increment doc_ids must be DISJOINT
+    * from the stored history index's doc_ids (assign a re-crawl a
+    * fresh id; the in-query twin [[incrementalPairsFused]] gets this
+    * for free from its predicate split). Since r16's split verify the
+    * failure mode is semantic rather than structural: an overlapping
+    * id no longer duplicates verify rows (each candidate side resolves
+    * against exactly its own shingle frame), but a pair (a, b) with
+    * a == b would compare a document against its own re-crawl under
+    * one identity and downstream keep/cluster logic would conflate the
+    * two versions. External callers supply the increment independently
+    * of the published index, so a cheap debug check is available: set
+    * `spark.graft.dedup.checkDisjointIds=true` to fail fast on overlap
+    * ([[checkDisjointIds]]). */
   def incrementalAgainstSegmentedIndex(s: SparkSession, indexDir: String,
-      increment: DataFrame): DataFrame =
-    incrementalAgainstFlavors(s, segmentedIndexFlavors(s, indexDir),
-      increment, indexDir)
+      increment: DataFrame): DataFrame = {
+    val flavors = segmentedIndexFlavors(s, indexDir)
+    val shI = shingleSets(increment.select(col("doc_id"), col("text")))
+      .persist()
+    shI.count(): Unit
+    // with SEVERAL flavors the increment's banded buckets are persisted
+    // too: each flavor probes this (small) frame, and re-running the
+    // 64-hash MinHash pass per flavor would charge the increment k
+    // times for one day's crawl. Single-flavor indexes (the one-segment
+    // witnesses, any all-plain or fully compacted index) keep the lazy
+    // one-pass pipeline: a persist+count there is a pure extra job
+    // (r17 review)
+    val multi = flavors.size > 1
+    val bI = bandBuckets(minhashSignatures(shI))
+    if (multi) bI.persist().count(): Unit
+    try Work.materialize("incremental_pub",
+      probeFlavors(s, flavors, shI, bI, indexDir))
+    finally {
+      if (multi) bI.unpersist(): Unit
+      shI.unpersist(): Unit
+    }
+  }
 
   /** Composition face of [[incrementalAgainstSegmentedIndex]] for a
     * caller that already shingled (and CACHED) its increment: `shI`
@@ -1657,33 +1620,66 @@ object Dedup {
     * laziness; the batch face's persist+count spelling remains the
     * right shape for multi-consumer batch callers. */
   def incrementalAgainstSegmentedIndexShingled(s: SparkSession,
-      indexDir: String, shI: DataFrame): DataFrame = {
-    val flavors = segmentedIndexFlavors(s, indexDir)
-    // the same opt-in disjoint-id fail-fast the batch face enforces
-    // (r20 review: routing the curation stream through this face had
-    // silently dropped it): overlapping or history-duplicated ids
-    // corrupt the verify join and the callers' doc_id-keyed
-    // rejection — when the debug conf is on, fail pointedly
-    if (s.conf.getOption("spark.graft.dedup.checkDisjointIds")
-        .contains("true")) {
-      val shH = flavors.map(_._1.select("doc_id")).reduce(_ unionByName _)
-      val overlap = shH.join(shI.select("doc_id"), "doc_id").limit(5)
-        .collect().map(_.getLong(0))
-      require(overlap.isEmpty,
-        s"incremental dedup: increment doc_ids overlap the history " +
-          s"index at $indexDir (e.g. ${overlap.mkString(", ")}) — " +
-          "re-crawled docs must carry fresh ids")
-      val dup = shH.groupBy("doc_id").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).limit(5).collect().map(_.getLong(0))
-      require(dup.isEmpty,
-        s"incremental dedup: the history index at $indexDir carries " +
-          s"duplicate doc_ids (e.g. ${dup.mkString(", ")}) — was one " +
-          "batch folded into two segments under different ids?")
-    }
-    val bI = bandBuckets(minhashSignatures(shI))
+      indexDir: String, shI: DataFrame): DataFrame =
+    probeFlavors(s, segmentedIndexFlavors(s, indexDir), shI,
+      bandBuckets(minhashSignatures(shI)), indexDir)
+
+  /** Increment-vs-stored-index core of both probe faces, over one OR
+    * SEVERAL stored-side flavors — the several-flavor case is the
+    * composed steady-state layout (r16 verdict #3): bucketed compacted
+    * history plus a plain tail of recent segments. Every history doc
+    * lives in exactly ONE flavor (segments partition the crawl), so
+    * per-flavor candidate + verify joins unioned are row-identical to
+    * the single-frame spelling — and each flavor keeps ITS OWN join
+    * plan: the bucketed side joins exchange-free on its cluster keys
+    * while the plain tail shuffles only tail-sized data. A unioned
+    * stored side would instead shuffle EVERYTHING (a union scan
+    * carries no bucketing), re-paying the history-sized exchange the
+    * bucketed layout exists to delete. Split verify (r16-measured):
+    * `a` ids are history ids and `b` ids increment ids, so each side
+    * joins only its own shingle frame — the stored history table is
+    * scanned once, and the increment side stays AQE-broadcastable at
+    * daily-crawl scale. Both faces run the opt-in disjoint-id check
+    * (r20 review: routing the curation stream through the shingled
+    * face had silently dropped it). */
+  private def probeFlavors(s: SparkSession,
+      flavors: Seq[(DataFrame, DataFrame)], shI: DataFrame,
+      bI: DataFrame, indexDesc: String): DataFrame = {
+    checkDisjointIds(s, flavors, shI, indexDesc)
     flavors.map { case (shH, bH) =>
       verifyJaccardSplit(crossSideCandidates(bH, bI), shH, shI)
     }.reduce(_ unionByName _)
+  }
+
+  /** The opt-in disjoint-id fail-fast (`spark.graft.dedup
+    * .checkDisjointIds=true`) shared by both probe faces: an increment
+    * doc_id that also lives in the history index, or a doc_id the
+    * history carries twice (a batch folded into two segments under
+    * differently-spelled ids defeats the same-id short-circuit, r16
+    * review), corrupts the verify join and the callers' doc_id-keyed
+    * rejection — fail pointedly with an IllegalArgumentException
+    * naming the index. One ids-only semi-join plus one ids-only
+    * aggregate, paid only when the debug conf is on. */
+  private def checkDisjointIds(s: SparkSession,
+      flavors: Seq[(DataFrame, DataFrame)], shI: DataFrame,
+      indexDesc: String): Unit = {
+    if (!s.conf.getOption("spark.graft.dedup.checkDisjointIds")
+        .contains("true")) return
+    val shH = flavors.map(_._1.select("doc_id")).reduce(_ unionByName _)
+    val overlap = shH.join(shI.select("doc_id"), "doc_id").limit(5)
+      .collect().map(_.getLong(0))
+    if (overlap.nonEmpty)
+      throw new IllegalArgumentException(
+        s"incremental dedup: increment doc_ids overlap the history " +
+          s"index at $indexDesc (e.g. ${overlap.mkString(", ")}) — " +
+          "re-crawled docs must carry fresh ids")
+    val dup = shH.groupBy("doc_id").agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1).limit(5).collect().map(_.getLong(0))
+    if (dup.nonEmpty)
+      throw new IllegalArgumentException(
+        s"incremental dedup: the history index at $indexDesc carries " +
+          s"duplicate doc_ids (e.g. ${dup.mkString(", ")}) — was one " +
+          "batch folded into two segments under different ids?")
   }
 
   /** The stored-side frames of a segmented index, grouped by layout
@@ -1706,7 +1702,7 @@ object Dedup {
     // the snapshot). A segment without the record predates the plan
     // token — all such publishes used the default plan.
     snaps.foreach { case (p, _) =>
-      readRecordOpt(p, "lshplan").foreach { tok =>
+      Work.readSmallRecord(p, "lshplan").foreach { tok =>
         val sp = parseBandPlan(tok.trim, s"$p/lshplan")
         require(sp == DefaultBandPlan,
           s"history segment $p was published under LSH plan " +
@@ -1717,80 +1713,12 @@ object Dedup {
     }
     // flavor split straight off the listing snapshot — no extra
     // per-segment metadata probe (r17 review)
-    val (bucketedSegs, plainSegs) = {
-      val (b, p) = snaps.partition(_._2("buckets"))
-      (b.map(_._1), p.map(_._1))
-    }
-    val plain =
-      if (plainSegs.isEmpty) Seq.empty
-      else Seq((s.read.parquet(plainSegs.map(p => s"$p/sh"): _*),
-        s.read.parquet(plainSegs.map(p => s"$p/bb"): _*)))
-    plain ++ bucketedSegs.map(p => bucketedHistoryIndex(s, p))
+    val (bucketedSegs, plainSegs) = snaps.partition(_._2("buckets"))
+    (if (plainSegs.isEmpty) Seq.empty
+     else Seq(plainFrames(s, plainSegs.map(_._1)))) ++
+      bucketedSegs.map(p => bucketedHistoryIndex(s, p._1))
   }
 
-  /** LSM-fold `victims` (complete, active segments; default = every
-    * currently active one) into ONE compacted segment `seg_<compactId>`
-    * — re-LAYOUT only: the stored sh/bb parquet is read back and
-    * rewritten, nothing is re-shingled or re-hashed. `bucketed=true`
-    * (the steady-state default) writes the compacted segment in the
-    * CLUSTERED-BY layout of [[publishHistoryIndexBucketed]], so the
-    * one big history segment joins exchange-free while fresh daily
-    * segments keep landing plain beside it.
-    *
-    * Commit/race discipline: the compacted segment publishes under the
-    * same `_SUCCESS` gate as any segment, carrying a `folds` record
-    * that names every victim (transitively — a victim's own fold
-    * record is folded in, so [[activeSegments]] never needs to chase
-    * chains). A reader listing BEFORE the publish completes sees the
-    * old set; listing AFTER sees the new set ([[activeSegments]]'s
-    * fold filter — victims are excluded the instant the compacted
-    * segment is complete, deleted or not); there is no listing that
-    * sees both or neither. Victim dirs are then retired; a crash
-    * between publish and retire leaves a correct index (victims
-    * present but fold-filtered) and RETRYING the same compactId
-    * finishes the retirement (`_SUCCESS` short-circuit, then
-    * [[retireSegments]] of the recorded folds). Production note: an
-    * in-flight SCAN that pinned victim paths before the fold can still
-    * be reading them — retire after the longest query deadline (the
-    * standard LSM grace window), which is a deployment knob, not an
-    * index-format one; `retire=false` leaves retirement to the caller.
-    *
-    * `adoptAligned` (default true): bucket-aligned victims under the
-    * file dial are adopted at the raw file level (the append spelling
-    * — zero history IO), with the dial bounding the RESULT's
-    * per-bucket multiplicity (largest victims win the budget; the
-    * overflow is demoted to the collapse). `adoptAligned = false`
-    * forces the collapse for every victim — what a MAJOR compaction
-    * wants (reset file count), and what [[maybeCompact]]'s major
-    * passes.
-    *
-    * `concatAligned` (default false; r18 verdict #4): the collapse of
-    * bucket-ALIGNED victims runs as a raw per-bucket row-group CONCAT
-    * ([[concatBucketedSub]] — byte copy, no decode/shuffle/re-encode)
-    * instead of the Spark rewrite; plain/misaligned victims still
-    * rewrite (they need the shuffle into the bucket layout anyway).
-    * The merged files lose whole-file sort order, so the segment
-    * publishes with the `unsorted` layout flag and readers declare it
-    * without SORTED BY — plans that need an order sort explicitly
-    * (correct always; in the broadcast regime the flag is moot). The
-    * tradeoff is the LSM classic: byte-copy-speed majors against a
-    * possible stored-side sort in sort-merge-join plans.
-    *
-    * Concurrent compactors (r18 verdict #3 — enforced, not
-    * convention): every compaction runs under an index-level LEASE
-    * record (`_lease_compact`, created with the same no-overwrite
-    * rename primitive as the publish commit). Two compactors racing
-    * with the SAME id converge — the loser waits on the lease and
-    * lands in `committed()` when the winner's target appears; two
-    * compactors with DIFFERENT ids (the overlapping-victims hazard:
-    * both could commit, two active compacted segments would carry the
-    * same history docs, and incremental queries would emit duplicated
-    * pairs — r17 ADVICE) now FAIL CLEANLY: the second acquirer gets a
-    * pointed error naming the holder instead of double-publishing. A
-    * crashed holder's lease goes stale after
-    * `-Dgraft.dedup.compactLeaseMs` (default 15 min) and is taken
-    * over. [[compactIdFor]] remains the way independent compactors
-    * that picked the same victim set converge on one target. */
   /** Deterministic compaction id for a victim set: independent
     * compactors that each decided to fold the same segments derive
     * the SAME id, so the race collapses onto [[compactSegments]]'s
@@ -1872,8 +1800,15 @@ object Dedup {
     sys.props.get("graft.dedup.compactLeaseMs").map(_.toLong)
       .getOrElse(15L * 60 * 1000)
 
-  /** Acquire the index-level compaction lease (see [[compactSegments]]
-    * scaladoc). Returns Some(ownerToken) when acquired — the exact
+  /** Acquire the index-level compaction lease: the `_lease_compact`
+    * record, created with the same no-overwrite rename primitive as
+    * the publish commit. Two compactors with the SAME id converge (the
+    * loser waits and lands in `committed()` when the winner's target
+    * appears); a DIFFERENT id means overlapping victim sets that would
+    * both commit and duplicate history docs across two active segments
+    * (r17 ADVICE). A crashed holder's lease goes stale after
+    * `-Dgraft.dedup.compactLeaseMs` (default 15 min) and is taken
+    * over. Returns Some(ownerToken) when acquired — the exact
     * record content, which [[releaseCompactLease]] compares WHOLE
     * (r19 review: a compactId-prefix match let a stalled holder delete
     * a same-id taker's live lease on resume) — or None when the wait
@@ -1942,13 +1877,57 @@ object Dedup {
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
+  /** LSM-fold `victims` (complete, active segments; default = every
+    * currently active one) into ONE compacted segment `seg_<compactId>`
+    * — re-LAYOUT only: the stored sh/bb parquet is read back and
+    * rewritten, nothing is re-shingled or re-hashed. `bucketed=true`
+    * (the steady-state default) writes the compacted segment in the
+    * CLUSTERED-BY layout of [[stageBucketedSegment]], so the
+    * one big history segment joins exchange-free while fresh daily
+    * segments keep landing plain beside it.
+    *
+    * Commit/race discipline: the compacted segment publishes under the
+    * same `_SUCCESS` gate as any segment, carrying a TRANSITIVE `folds`
+    * record that names every victim; [[activeSegments]]' fold filter
+    * excludes the victims the instant it is complete, so no listing
+    * sees both sets or neither. Victim dirs are then retired (manifest
+    * first); a crash between publish and retire leaves a correct index
+    * and RETRYING the same compactId finishes the retirement. An
+    * in-flight SCAN that pinned victim paths before the fold can still
+    * be reading them: `graceMs` defers retirement ([[retireFolded]]),
+    * and `retire=false` leaves it to the caller.
+    *
+    * `adoptAligned` (default true): bucket-aligned victims under the
+    * file dial are adopted at the raw file level (zero history IO),
+    * the dial bounding the RESULT's per-bucket multiplicity.
+    * `adoptAligned = false` forces the collapse for every victim — what
+    * [[maybeCompact]]'s MAJOR passes to reset the file count.
+    *
+    * `concatAligned` (default false; r18 verdict #4): the collapse of
+    * bucket-ALIGNED victims runs as the raw row-group concat of
+    * [[concatBucketedSub]] instead of the Spark rewrite, publishing the
+    * `unsorted` layout flag; plain/misaligned victims still rewrite.
+    *
+    * Concurrent compactors (r18 verdict #3): every compaction runs
+    * under the index-level lease of [[acquireCompactLease]] — two
+    * compactors with the SAME id converge on one commit, two with
+    * DIFFERENT ids fail cleanly instead of double-publishing the
+    * history; [[compactIdFor]] is how independent compactors that
+    * picked the same victims converge.
+    *
+    * `buckets` (default [[HistIdxBuckets]]): the bucket count of a
+    * `bucketed` result. Only victims whose own `buckets` record carries
+    * the SAME count are bucket-aligned (adoptable, concat-collapsible);
+    * any other count is rewritten through the shuffle into this one. */
   def compactSegments(s: SparkSession, indexDir: String, compactId: String,
       victims: Seq[String] = Seq.empty, bucketed: Boolean = true,
       retire: Boolean = true, graceMs: Long = 0L,
       adoptAligned: Boolean = true,
-      concatAligned: Boolean = false): String = {
+      concatAligned: Boolean = false,
+      buckets: Int = HistIdxBuckets): String = {
     require(compactId.matches("[A-Za-z0-9._-]+"),
       s"compaction id must be a plain file-name token, got '$compactId'")
+    require(buckets > 0, s"bucket count must be positive, got $buckets")
     val target = s"$indexDir/seg_$compactId"
     // retry of a crashed compaction — or a SIBLING JVM committing the
     // same compactId first (the shared fixed-path witness does exactly
@@ -1957,21 +1936,12 @@ object Dedup {
     // victim-lookup or staging failure, so a loser of the race lands
     // here instead of surfacing a spurious error (r17 review).
     def committed(): String = {
-      // manifest BEFORE retirement (r18 review): the fold already
-      // excludes the victims from the active set, so the manifest must
-      // stop naming them before their dirs can be deleted — a reader
-      // resolving through a manifest that names deleted dirs would
-      // crash instead of falling back (the manifest parses fine; only
-      // its content is stale). If the manifest update itself failed,
-      // retirement is SKIPPED this pass: staleness with victims still
-      // on disk is the safe direction, and the next mutation's update
-      // repairs both. Retirement itself never changes the active set
-      // (victims are fold-filtered whether present or deleted), so no
-      // post-retire update is needed.
+      // manifest BEFORE retirement, and no retirement when the refresh
+      // failed — the ordering rule of retireSegmentsImpl (r18 review)
       val manifestFresh = updateManifest(indexDir)
       if (retire && manifestFresh) {
         if (graceMs <= 0L) {
-          val folded = readRecordOpt(target, "folds").toSeq
+          val folded = Work.readSmallRecord(target, "folds").toSeq
             .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty)
           retireSegmentsImpl(Some(s), indexDir,
             folded.filterNot(_ == s"seg_$compactId"),
@@ -2011,50 +1981,30 @@ object Dedup {
       s"segmented history index at $indexDir has nothing to compact")
     // transitive fold set: victims + everything they already folded
     val folds = (chosen.map(segName) ++ chosen.flatMap(p =>
-      readRecordOpt(p, "folds").toSeq.flatMap(_.split("\n"))
+      Work.readSmallRecord(p, "folds").toSeq.flatMap(_.split("\n"))
         .map(_.trim).filter(_.nonEmpty))).distinct.sorted
     def stageAll(useConcat: Boolean): Unit = Work.publish(target) { tmp =>
       if (bucketed) {
-        // bucket-ALIGNED victims (already published with the target
-        // spec — the standing compacted segment of a weekly/major
-        // fold) are folded by ADOPTING their data files verbatim
-        // (hard link / raw copy — r18, the append spelling): the
-        // standing history costs the fold no scan, no shuffle, no
-        // rewrite — only the plain/misaligned tail is ever staged
-        // through Spark, so the weekly fold's wall is ∝ tail. The
-        // adoption preserves the victim's per-bucket FILE multiplicity
-        // (+1 file/bucket per folded tail part), so once the standing
-        // segment reaches [[AlignedFoldMaxFilesPerBucket]] the fold
-        // degrades to a COLLAPSE back to one file per bucket — the
-        // IO-vs-file-count dial of any LSM. The collapse itself is the
-        // decoding rewrite, or — `concatAligned` (r18 verdict #4) —
-        // the raw row-group concat of [[concatBucketedSub]], which
-        // resets the file count at byte-copy cost instead of
-        // decode+shuffle+re-encode cost.
+        // bucket-ALIGNED victims (same spec as the target) are adopted
+        // verbatim while under the file dial, else collapsed back to
+        // one file per bucket — the IO-vs-file-count dial of any LSM
+        // (see stageBucketedSegment's `linkFrom`)
         val alignedAll = chosen.filter(p =>
-          bucketCountOf(p).contains(HistIdxBuckets))
+          bucketCountOf(p).contains(buckets))
         // ONE shLayout listing per aligned victim serves both the dial
         // filter and the greedy's byte ordering (r19 review: the
         // filter's filesPerBucket re-listed what the greedy's shLayout
         // had already fetched — two LIST round-trips per victim)
-        val layouts = alignedAll.map(p => (p, shLayout(p))).toMap
+        val layouts = alignedAll.map(p => (p, shLayout(p, buckets))).toMap
         val adoptCand =
           if (!adoptAligned) Seq.empty[String]
           else alignedAll.filter(p =>
             layouts(p)._1 < AlignedFoldMaxFilesPerBucket)
-        // the dial bounds the RESULT's per-bucket multiplicity, not
-        // just each victim's (r18 tiered re-run: a MAJOR adopting
-        // three 1-file/bucket weeklies landed sum+1 files per bucket —
-        // 262 files where the rewrite collapsed to ~70, regrowing the
-        // small-files problem the dial exists to bound). Greedy by
-        // BYTES, largest victim first — adoption's savings are the
-        // victim's bytes, so the weekly cadence's one big standing
-        // segment wins the budget even when a gaggle of many-file
-        // small victims competes (r18 ADVICE: the former file-count
-        // ordering put the 1-file standing segment LAST); file count
-        // remains the budget COST, and one multiplicity slot stays
-        // reserved for the staged part. Victims that don't fit are
-        // demoted to the collapse side.
+        // the dial bounds the RESULT's per-bucket multiplicity, not just
+        // each victim's (r18 tiered re-run): greedy by BYTES, largest
+        // victim first (adoption's savings are bytes; file count is the
+        // budget cost), one slot reserved for the staged part; victims
+        // that don't fit are demoted to the collapse side
         val aligned = {
           var sum = 0
           val budget = AlignedFoldMaxFilesPerBucket - 1
@@ -2064,26 +2014,16 @@ object Dedup {
               if (sum + f <= budget) { sum += f; true } else false
             }.map(_._1)
         }
-        // collapse routing: aligned victims not adopted (over-dial, or
-        // an adoptAligned=false major) go through the raw concat when
-        // asked; everything else — plain segments, misaligned bucket
-        // counts — must be rewritten through Spark (they need the
-        // shuffle into the bucket layout anyway)
+        // aligned victims not adopted go through the raw concat when
+        // asked; plain and misaligned victims are always rewritten
         val concatFrom =
           if (!useConcat) Seq.empty[String]
           else alignedAll.filterNot(aligned.toSet)
-        val rest = chosen.filterNot((aligned ++ concatFrom).toSet)
-        val restSh =
-          if (rest.isEmpty) Seq.empty
-          else Seq((s.read.parquet(rest.map(p => s"$p/sh"): _*), false))
-        val restBb =
-          if (rest.isEmpty) Seq.empty
-          else Seq((s.read.parquet(rest.map(p => s"$p/bb"): _*), false))
-        stageBucketedIndexParts(s, tmp, HistIdxBuckets,
-          restSh, restBb, linkFrom = aligned, concatFrom = concatFrom)
+        stageBucketedSegment(s, tmp, buckets,
+          rewrite = chosen.filterNot((aligned ++ concatFrom).toSet),
+          linkFrom = aligned, concatFrom = concatFrom)
       } else {
-        val sh = s.read.parquet(chosen.map(p => s"$p/sh"): _*)
-        val bb = s.read.parquet(chosen.map(p => s"$p/bb"): _*)
+        val (sh, bb) = plainFrames(s, chosen)
         sh.write.mode("overwrite").parquet(s"$tmp/sh")
         bb.write.mode("overwrite").parquet(s"$tmp/bb")
       }
@@ -2124,18 +2064,13 @@ object Dedup {
     * compaction-of-compactions retires whole segment paths — without
     * this, a long-lived metastore would accumulate one external-table
     * pair per retired compacted segment, each pointing at a deleted
-    * location (r17 review). */
-  def retireSegments(indexDir: String, segNames: Seq[String]): Unit =
-    retireSegments(
-      SparkSession.getActiveSession
-        .orElse(SparkSession.getDefaultSession),
-      indexDir, segNames)
-
-  /** Session-explicit twin — [[compactSegments]] passes its own
-    * session through so the catalog cleanup cannot silently no-op on
-    * a thread with no active session (r17 review #2). */
-  def retireSegments(session: Option[SparkSession], indexDir: String,
-      segNames: Seq[String]): Unit =
+    * location (r17 review). `session` (default: the active session,
+    * else the default one) owns that catalog; pass it explicitly from a
+    * thread with no active session, or the cleanup silently no-ops
+    * (r17 review #2). */
+  def retireSegments(indexDir: String, segNames: Seq[String],
+      session: Option[SparkSession] = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession)): Unit =
     retireSegmentsImpl(session, indexDir, segNames,
       refreshManifest = true)
 
@@ -2143,24 +2078,21 @@ object Dedup {
       indexDir: String, segNames: Seq[String],
       refreshManifest: Boolean): Unit = {
     if (segNames.isEmpty) return
-    // manifest BEFORE deletion, the same ordering rule as
-    // compactSegments (r18 review): the active set already excludes
-    // folded victims, so a fresh rewrite here stops a STALE manifest
-    // (a crashed fold's, or one whose in-compactor refresh failed)
-    // from naming dirs this call is about to delete — and when even
-    // this refresh fails, deletion is SKIPPED: victims-on-disk under a
-    // stale manifest is the safe direction, deleted-under-a-manifest-
-    // that-names-them is a reader crash. The in-compactor path passes
-    // refreshManifest=false (it refreshed an instant ago).
+    // manifest BEFORE deletion (r18 review): folded victims are already
+    // out of the active set, so a fresh rewrite stops a STALE manifest
+    // from naming dirs about to be deleted (a reader crash); when the
+    // refresh fails, deletion is SKIPPED — victims-on-disk under a
+    // stale manifest is the safe direction. Callers that refreshed an
+    // instant ago pass refreshManifest=false.
     if (refreshManifest && !updateManifest(indexDir)) return
     segNames.foreach { n =>
       require(n.startsWith("seg_"), s"not a segment name: $n")
       // normalize to the same spelling the reader declared tables
-      // under ([[segSpelling]]) — a caller-spelled 'file:/...' or a
+      // under ([[graft.Work.spell]]) — a caller-spelled 'file:/...' or a
       // scheme-less path on a non-local defaultFS would otherwise
       // derive a DIFFERENT tag and the DROP would match nothing
       // (r17 review #1)
-      val path = segSpelling(Work.fs(s"$indexDir/$n")._2)
+      val path = Work.spell(Work.fs(s"$indexDir/$n")._2)
       session.foreach { s =>
         val tag = Work.publishTag(path).replaceAll("[^A-Za-z0-9_]", "_")
         try s.sql(s"SHOW TABLES LIKE 'graft_hidx_*_$tag*'").collect()
@@ -2170,13 +2102,9 @@ object Dedup {
       }
       Work.clean(path)
     }
-    // no POST-delete update: retirement only ever deletes segments the
-    // active set already excludes (fold-filtered), so the manifest
-    // content is unchanged by the deletions themselves (the former
-    // trailing update doubled the per-mutation metadata bill and left
-    // a window where a well-formed manifest named deleted dirs).
-    // Retiring an ACTIVE segment out-of-band is not a supported
-    // operation.
+    // no POST-delete update: deleting fold-filtered segments leaves
+    // the manifest content unchanged (retiring an ACTIVE segment is
+    // not a supported operation)
   }
 
   /** Retire every GRACE-ELIGIBLE folded victim of a segmented index:
@@ -2213,7 +2141,7 @@ object Dedup {
         try now - fsys.getFileStatus(marker).getModificationTime
         catch { case _: java.io.FileNotFoundException => -1L }
       if (age >= 0L && age >= graceMs)
-        readRecordOpt(p, "folds").toSeq
+        Work.readSmallRecord(p, "folds").toSeq
           .flatMap(_.split("\n")).map(_.trim).filter(_.nonEmpty)
           .filter(_ != segName(p)).filter(present.contains)
       else Seq.empty
@@ -2246,31 +2174,23 @@ object Dedup {
     *    disables majors.
     *  - `graceMs`: retirement grace window, passed through.
     *  - `majorConcat`: how majors collapse bucket-aligned victims —
-    *    `"off"` = the Spark rewrite (decode + shuffle + re-encode;
-    *    keeps whole-file sort order for SMJ-regime readers), `"on"` =
-    *    raw row-group concat (byte copy, no decode — r18 verdict #4;
-    *    publishes the `unsorted` layout flag), `"auto"` (default;
-    *    r19 verdict #3) = decide PER MAJOR from the victims' total
-    *    sh row count, read driver-side from parquet FOOTERS (no
-    *    Spark job): below `concatRowsMin` the 32-core rewrite wins
-    *    (per-file fixed cost dominates the concat), above it the
-    *    byte copy wins and keeps winning as history grows (measured
-    *    crossover ~100k rows on the dev box — StressMain
-    *    major_concat: −10% at 41k, +10% at 125k, +54% at 485k).
+    *    `"off"` = the Spark rewrite (keeps whole-file sort order),
+    *    `"on"` = raw row-group concat (byte copy; publishes the
+    *    `unsorted` flag), `"auto"` (default; r19 verdict #3) = decide
+    *    PER MAJOR from the victims' total sh row count, read from
+    *    parquet FOOTERS (no Spark job): the rewrite below
+    *    `concatRowsMin`, the byte copy above it (measured crossover
+    *    ~100k rows — StressMain major_concat: −10% at 41k, +10% at
+    *    125k, +54% at 485k).
     *  - `concatRowsMin`: the auto crossover, in sh rows. Deployments
     *    re-measure on their storage and carry the value through the
     *    registry-versioned policy token.
     *
     * Compaction ids derive from [[compactIdFor]] over the victim set,
     * so two siblings applying the same policy to the same index
-    * converge on one target instead of double-committing (single
-    * writer per index remains the deployment default). NOTE the auto
-    * decision is taken from each sibling's OWN footer read — two
-    * siblings racing the same major at a row count razor-close to the
-    * threshold could pick different modes, but they share the
-    * [[compactIdFor]] id, so the same-id ladder still collapses them
-    * onto one committed segment (either mode's result is correct;
-    * `unsorted` is a per-segment flag). */
+    * converge on one target instead of double-committing — even when
+    * two siblings' own footer reads pick different `auto` modes
+    * (either result is correct; `unsorted` is per segment). */
   final case class CompactionPolicy(minorTail: Int = 7,
       majorFlavors: Int = 4, graceMs: Long = 0L,
       majorConcat: String = "auto",
@@ -2292,13 +2212,7 @@ object Dedup {
         bucketedSegs.size >= policy.majorFlavors) {
       val victims = snaps.map { case (p, _) => segName(p) }
       // adoptAligned=false: a MAJOR exists to RESET file count and
-      // flavor fan-out — adopting the small under-dial weeklies would
-      // save marginal IO and keep their file multiplicity. The
-      // collapse itself is the ∝-history rewrite, or — majorConcat —
-      // the raw row-group concat (∝-history BYTE COPY, no decode;
-      // r18 verdict #4). "auto" (r19 verdict #3) reads the victims'
-      // total sh row count off their parquet footers and picks the
-      // measured winner per major.
+      // flavor fan-out; majorConcat picks its collapse (see the policy)
       val concat = policy.majorConcat match {
         case "on" => true
         case "off" => false
@@ -2327,17 +2241,26 @@ object Dedup {
     } else None
   }
 
-  private val histIdxSegDone = new java.util.concurrent.ConcurrentHashMap[
+  /** Once-per-(session, index path) publish memo of every witness
+    * ensure block below — the eviction/keying semantics live in ONE
+    * place, and the paths are distinct per witness. */
+  private val histIdxDone = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), String]
+
+  private def ensureIdx(s: SparkSession, path: String)(
+      publishFn: => Unit): String = {
+    graft.SessionCaches.evictStopped(histIdxDone)(_._1)
+    histIdxDone.computeIfAbsent((s, path), { _ => publishFn; path })
+  }
 
   /** Witness: the documents table split into two segments (the two
     * halves of a crawl ingested on different days), increment = the
-    * planted re-crawls — same oracle as the monolithic twins. */
+    * planted re-crawls — same oracle as the one-segment twins. */
   val incrementalSeg = QueryDef(
     "dedup_incremental_seg",
     (s, dir) => {
       val path = s"${Work.dir}/inc_hidxseg_v2_${Work.publishTag(dir)}"
-      ensureIdx(histIdxSegDone, s, path) {
+      ensureIdx(s, path) {
         // deterministic segment ids: a second session re-running the
         // ensure block hits the _SUCCESS short-circuit instead of
         // appending duplicate segments to the shared artifact
@@ -2352,9 +2275,6 @@ object Dedup {
           .filter(col("doc_id") >= PlantedOffset))
     },
     Some(incrementalOracleSql))
-
-  private val histIdxSegCDone = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]
 
   /** Witness of the composed steady-state layout (r16 verdict #2-3):
     * history ingested as three daily segments, the two oldest
@@ -2373,7 +2293,7 @@ object Dedup {
     "dedup_incremental_seg_compacted",
     (s, dir) => {
       val path = s"${Work.dir}/inc_hidxsegc_v2_${Work.publishTag(dir)}"
-      ensureIdx(histIdxSegCDone, s, path) {
+      ensureIdx(s, path) {
         val docs = Tables(s, dir, "documents").select("doc_id", "text")
         publishHistorySegment(s, path, "day0",
           docs.filter(col("doc_id") % 3 === 0))
@@ -2390,29 +2310,60 @@ object Dedup {
     },
     Some(incrementalOracleSql))
 
-  private def histIdxPath(dir: String,
-      fingerprint: Option[String]): String =
-    s"${Work.dir}/inc_hist_v2_${Work.publishTag(dir, fingerprint)}"
-
-  private val histIdxDone = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]
-
-  /** Publish the witness history index for an sf dir once (history =
-    * the `documents` table itself — exactly the `dedup_incremental`
-    * witness's history slice), keyed on [[graft.Work.publishTag]] so
-    * two corpus dirs sharing a basename never reuse one index. */
+  /** Publish the witness history index for an sf dir once: a
+    * segmented index holding ONE plain segment (`seg_hist`) whose
+    * history is the `documents` table itself — exactly the
+    * `dedup_incremental` witness's history slice. Returns the index
+    * ROOT, the argument [[incrementalAgainstSegmentedIndex]] probes.
+    * Keyed on the artifact PATH (dir + optional fingerprint, r15
+    * verdict #6) through [[graft.Work.publishTag]]: two corpus dirs
+    * sharing a basename never reuse one index, and a re-crawled
+    * history published under a new fingerprint gets a fresh one. The
+    * `inc_hidx1_` prefix arrived with the one-segment layout, so a
+    * monolithic index left at an older prefix in a shared work dir is
+    * never read as a segmented root. */
   def ensureHistoryIndex(s: SparkSession, dir: String,
       fingerprint: Option[String] = None): String = {
-    // keyed on the artifact PATH (dir + optional fingerprint, r15
-    // verdict #6): a re-crawled history published under a new
-    // fingerprint gets a fresh index; default None keeps the
-    // immutable-testdata tag byte-identical
-    val path = histIdxPath(dir, fingerprint)
-    ensureIdx(histIdxDone, s, path) {
-      publishHistoryIndex(s, path,
-        Tables(s, dir, "documents").select("doc_id", "text"))
+    val path = s"${Work.dir}/inc_hidx1_v1_${Work.publishTag(dir, fingerprint)}"
+    ensureIdx(s, path) {
+      publishHistorySegment(s, path, "hist",
+        Tables(s, dir, "documents").select("doc_id", "text")): Unit
     }
   }
+
+  /** Bucketed twin of [[ensureHistoryIndex]]: the same one-segment
+    * publish under its own root, then re-laid-out by
+    * [[compactSegments]] into ONE bucketed segment (`seg_bucketed`,
+    * re-layout only, no re-shingle) so the stored-side joins run
+    * exchange-free. The folded `seg_hist` is NOT retired, for the
+    * reason `dedup_incremental_seg_compacted` gives: the artifact is
+    * shared at a fixed path and the fold filter already hides it. */
+  def ensureHistoryIndexBucketed(s: SparkSession, dir: String,
+      fingerprint: Option[String] = None): String = {
+    val path = s"${Work.dir}/inc_hidx1b_v1_${Work.publishTag(dir, fingerprint)}"
+    ensureIdx(s, path) {
+      publishHistorySegment(s, path, "hist",
+        Tables(s, dir, "documents").select("doc_id", "text"))
+      compactSegments(s, path, "bucketed", victims = Seq("hist"),
+        retire = false): Unit
+    }
+  }
+
+  val incrementalPubBucketed = QueryDef(
+    "dedup_incremental_pub_bucketed",
+    (s, dir) => incrementalAgainstSegmentedIndex(s,
+      ensureHistoryIndexBucketed(s, dir),
+      plantedCorpus(Tables(s, dir, "documents"))
+        .filter(col("doc_id") >= PlantedOffset)),
+    Some(incrementalOracleSql))
+
+  val incrementalPub = QueryDef(
+    "dedup_incremental_pub",
+    (s, dir) => incrementalAgainstSegmentedIndex(s,
+      ensureHistoryIndex(s, dir),
+      plantedCorpus(Tables(s, dir, "documents"))
+        .filter(col("doc_id") >= PlantedOffset)),
+    Some(incrementalOracleSql))
 
   /** Ensure-and-REGISTER (r16 verdict #7, the O6 tie-in): publish the
     * history index for `dir` (optionally fingerprinted — a re-crawl
@@ -2534,176 +2485,14 @@ object Dedup {
     maybeCompact(s, root, policy)
   }
 
-  /** Near-dup pairs of `increment` against a PUBLISHED history index —
-    * the production entry point: history is never re-shingled or
-    * re-hashed; the increment shingles/bands only ITSELF and joins the
-    * stored bucket table, so per-increment compute is ∝ increment
-    * (StressMain's `incremental_pub_hist` row pins increment-side
-    * jobs FLAT as history scales 8×). Bit-identical output to
-    * [[incrementalPairs]] on the same slices (ExtSpec pins set
-    * equality); the verify join against the stored shingle sets still
-    * shuffles ∝ history scan at 100 TB under THIS plain layout — use
-    * [[publishHistoryIndexBucketed]]/[[incrementalAgainstIndexBucketed]]
-    * (r16) to co-locate both stored-side joins; the compute saving
-    * (shingling + 64 hashes per history doc, per day) is the headline
-    * either way.
-    *
-    * PRECONDITION (r15 ADVICE): increment doc_ids must be DISJOINT
-    * from the stored history index's doc_ids (assign a re-crawl a
-    * fresh id; the in-query twin [[incrementalPairsFused]] gets this
-    * for free from its predicate split). Since r16's split verify the
-    * failure mode is semantic rather than structural: an overlapping
-    * id no longer duplicates verify rows (each candidate side resolves
-    * against exactly its own shingle frame), but a pair (a, b) with
-    * a == b would compare a document against its own re-crawl under
-    * one identity and downstream keep/cluster logic would conflate the
-    * two versions. External callers supply the increment independently
-    * of the published index, so a cheap debug check is available: set
-    * `spark.graft.dedup.checkDisjointIds=true` to pay one ids-only
-    * semi-join per call that fails fast on overlap.
-    */
-  def incrementalAgainstIndex(s: SparkSession, indexPath: String,
-      increment: DataFrame): DataFrame =
-    incrementalAgainstFrames(s,
-      s.read.parquet(s"$indexPath/sh"),
-      s.read.parquet(s"$indexPath/bb"),
-      increment, indexPath)
-
-  /** Shared increment-vs-stored-index core: both the plain-parquet and
-    * the bucketed index entry points bind it, differing only in how
-    * the two stored frames are scanned. */
-  private def incrementalAgainstFrames(s: SparkSession, shH: DataFrame,
-      bH: DataFrame, increment: DataFrame, indexDesc: String): DataFrame =
-    incrementalAgainstFlavors(s, Seq((shH, bH)), increment, indexDesc)
-
-  /** Increment-vs-stored-index core over one OR SEVERAL stored-side
-    * flavors — the several-flavor case is the composed steady-state
-    * layout (r16 verdict #3): bucketed compacted history plus a plain
-    * tail of recent segments. Every history doc lives in exactly ONE
-    * flavor (segments partition the crawl), so per-flavor candidate +
-    * verify joins unioned are row-identical to the single-frame
-    * spelling — and each flavor keeps ITS OWN join plan: the bucketed
-    * side joins exchange-free on its cluster keys while the plain tail
-    * shuffles only tail-sized data. A unioned stored side would
-    * instead shuffle EVERYTHING (a union scan carries no bucketing),
-    * re-paying the history-sized exchange the bucketed layout exists
-    * to delete. */
-  private def incrementalAgainstFlavors(s: SparkSession,
-      flavors: Seq[(DataFrame, DataFrame)], increment: DataFrame,
-      indexDesc: String): DataFrame = {
-    val shI = shingleSets(increment.select(col("doc_id"), col("text")))
-      .persist()
-    shI.count(): Unit
-    if (s.conf.getOption("spark.graft.dedup.checkDisjointIds")
-        .contains("true")) {
-      val shH = flavors.map(_._1.select("doc_id")).reduce(_ unionByName _)
-      val overlap = shH
-        .join(shI.select("doc_id"), "doc_id").limit(5)
-        .collect().map(_.getLong(0))
-      if (overlap.nonEmpty) {
-        shI.unpersist(): Unit
-        throw new IllegalArgumentException(
-          s"incremental dedup: increment doc_ids overlap the " +
-            s"history index at $indexDesc (e.g. ${overlap.mkString(", ")}) " +
-            "— re-crawled docs must carry fresh ids")
-      }
-      // segmented face of the same contract: a batch folded into TWO
-      // segments (a retry under a differently-spelled id defeats the
-      // same-id short-circuit) duplicates its rows in the history
-      // union and the verify join fans out over them (r16 review)
-      val dup = shH.groupBy("doc_id").agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1).limit(5).collect().map(_.getLong(0))
-      if (dup.nonEmpty) {
-        shI.unpersist(): Unit
-        throw new IllegalArgumentException(
-          s"incremental dedup: the history index at $indexDesc carries " +
-            s"duplicate doc_ids (e.g. ${dup.mkString(", ")}) — was one " +
-            "batch folded into two segments under different ids?")
-      }
-    }
-    // with SEVERAL flavors the increment's banded buckets are persisted
-    // too: each flavor probes this (small) frame, and re-running the
-    // 64-hash MinHash pass per flavor would charge the increment k
-    // times for one day's crawl. Single-flavor callers (the whole
-    // monolithic family — the bench hot path) keep the lazy one-pass
-    // pipeline: a persist+count there is a pure extra job (r17 review)
-    val multi = flavors.size > 1
-    val bI =
-      if (multi) {
-        val b = bandBuckets(minhashSignatures(shI)).persist()
-        b.count(): Unit
-        b
-      } else bandBuckets(minhashSignatures(shI))
-    // split verify (r16-measured): `a` ids are history
-    // ids and `b` ids increment ids, so each side joins only its own
-    // shingle frame — the stored history table is scanned once instead
-    // of twice (the union spelling resolved BOTH ids against
-    // history+increment), and the increment side stays
-    // AQE-broadcastable at daily-crawl scale
-    val out = Work.materialize("incremental_pub",
-      flavors.map { case (shH, bH) =>
-        verifyJaccardSplit(crossSideCandidates(bH, bI), shH, shI)
-      }.reduce(_ unionByName _))
-    if (multi) bI.unpersist(): Unit
-    shI.unpersist()
-    out
-  }
-
   // --- bucketed history index (the 100 TB co-location layout) --------
 
-  /** Bucket count of the published bucketed index. Local default sized
-    * to the test session's cores; at 100 TB this is thousands — the
-    * layout knob, not a semantic one (readers pass the same value). */
+  /** Default bucket count of a bucketed segment ([[compactSegments]]'
+    * `buckets`). Local default sized to the test session's cores; at
+    * 100 TB this is thousands — the layout knob, not a semantic one
+    * (readers take the count from the segment's own `buckets`
+    * record). */
   val HistIdxBuckets = 32
-
-  /** Bucketed twin of [[publishHistoryIndex]] — the co-location move
-    * the plain index's scaladoc narrates: the stored shingle table is
-    * written CLUSTERED BY doc_id and the band-bucket table CLUSTERED BY
-    * (band, bucket), so every later increment's candidate join and
-    * verify join read the HISTORY side pre-partitioned on their join
-    * keys — no history-sized exchange per increment, ever; only the
-    * (small) increment/candidate sides shuffle into the bucket layout
-    * (PlanSpec pins exactly 2 exchanges fewer than the plain-parquet
-    * plan). Bucketed layout is an ingest-time storage decision, paid
-    * once where the plain publish is paid once.
-    *
-    * Mechanics: Spark's bucketed layout is only writable through the
-    * catalog (`bucketBy.saveAsTable`), so the stage writes EXTERNAL
-    * tables into the publish staging dir under throwaway names, drops
-    * the catalog entries (files stay — DROP on an external table never
-    * deletes data), and lets [[graft.Work.publish]] rename the staged
-    * dir into place under the same `_SUCCESS` discipline as the plain
-    * index. Readers re-declare the table over the published files
-    * ([[bucketedHistoryIndex]]); a production deployment would hold
-    * that DDL in a shared metastore instead of per-session.
-    */
-  def publishHistoryIndexBucketed(s: SparkSession, path: String,
-      history: DataFrame, buckets: Int = HistIdxBuckets): Unit = {
-    Work.publish(path) { tmp =>
-      val sh = shingleSets(history.select(col("doc_id"), col("text")))
-        .persist()
-      sh.count(): Unit
-      stageBucketedIndex(s, tmp, buckets, sh,
-        bandBuckets(minhashSignatures(sh)))
-      sh.unpersist(): Unit
-    }: Unit
-  }
-
-  /** Re-LAYOUT an already-published plain index as a bucketed one: the
-    * stored `sh/` and `bb/` parquet are read back and rewritten
-    * CLUSTERED BY their join keys — no re-shingling, no re-hashing
-    * (the ingest-time headline cost is paid once, in whichever publish
-    * ran first). This is the production "migrate the layout" move, and
-    * what the witness uses so a gate run holding BOTH index flavors
-    * computes the shingle/MinHash passes exactly once. */
-  def publishHistoryIndexBucketedFrom(s: SparkSession, path: String,
-      plainIndexPath: String, buckets: Int = HistIdxBuckets): Unit = {
-    Work.publish(path) { tmp =>
-      stageBucketedIndex(s, tmp, buckets,
-        s.read.parquet(s"$plainIndexPath/sh"),
-        s.read.parquet(s"$plainIndexPath/bb"))
-    }: Unit
-  }
 
   private val stageSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -2723,24 +2512,19 @@ object Dedup {
     * set by the concat collapse, whose raw row-group merge preserves
     * within-row-group order but not whole-file order. */
   private def segmentSorted(path: String): Boolean =
-    !readRecordOpt(path, "buckets").exists(_.trim.endsWith(" unsorted"))
+    !Work.readSmallRecord(path, "buckets").exists(_.trim.endsWith(" unsorted"))
 
   /** Merge `victims`' bucketed `sub` tables into ONE file per bucket by
     * RAW ROW-GROUP COPY (r18 verdict #4): parquet-mr's
     * `ParquetFileWriter.appendFile` streams each source file's row
     * groups into the destination verbatim and writes one merged footer
-    * — no decode, no shuffle, no re-encode; the collapse's cost drops
-    * from a CPU-bound rewrite to an IO-bound byte copy (and on stores
-    * with server-side copy, toward metadata speed). File names keep the
-    * `_<bucket>` suffix so the merged files ARE the bucket layout.
-    *
-    * The merged file is NOT whole-file sorted (row groups from k
-    * sorted files interleave), so the caller must publish the segment
-    * with the `unsorted` layout flag — [[bucketedHistoryIndex]] then
-    * declares the table without SORTED BY and Spark plans an explicit
-    * sort where a plan needs one, instead of trusting an order the
-    * files no longer have (the silent-wrong-join hazard at exactly
-    * one file per bucket).
+    * — no decode, no shuffle, no re-encode: the collapse becomes an
+    * IO-bound byte copy. File names keep the `_<bucket>` suffix so the
+    * merged files ARE the bucket layout. The merged file is NOT
+    * whole-file sorted, so the caller publishes the segment with the
+    * `unsorted` layout flag and [[bucketedHistoryIndex]] declares the
+    * table without SORTED BY (trusting a lost order is the
+    * silent-wrong-join hazard at one file per bucket).
     *
     * Schema safety: every source footer's schema must equal the
     * first's — parquet row-group copy is only defined across identical
@@ -2830,97 +2614,76 @@ object Dedup {
   private[graft] final class ConcatUnsupported(msg: String)
     extends RuntimeException(msg)
 
-  /** Stage the two bucketed tables + the bucket-count record into a
-    * publish staging dir. Staging table names carry a per-call unique
-    * token: Work.publish guarantees same-JVM concurrent publishes
-    * unique staging DIRS, and the throwaway catalog entries must not
-    * undercut that by colliding on a shared name (r16 review). */
-  private def stageBucketedIndex(s: SparkSession, tmp: String,
-      buckets: Int, sh: DataFrame, bb: DataFrame): Unit =
-    stageBucketedIndexParts(s, tmp, buckets,
-      Seq((sh, false)), Seq((bb, false)))
-
-  /** Stage the two bucketed tables from PARTS — each part is
-    * (frame, bucketAligned). UNALIGNED parts (plain scans, arbitrary
-    * partitioning) are repartitioned on the bucket keys BEFORE the
-    * bucketed write: a bucketBy write otherwise emits one file per
-    * (task, bucket) — tasks × buckets files, the small-files
-    * explosion at crawl scale; Spark's repartition hash and its
-    * bucket-id hash are the same Murmur3 pmod, so each shuffled
-    * partition holds exactly one bucket and the part lands ONE file
-    * per bucket (ExtSpec counts them). ALIGNED parts (scans of an
-    * already-bucketed segment with the SAME spec) skip the
-    * repartition entirely: a bucketed scan already holds exactly one
-    * bucket per task, so the write emits one file per bucket with NO
-    * shuffle — which is what makes a major compaction's shuffle cost
-    * ∝ the plain tail instead of ∝ the whole history (r17; ExtSpec
-    * pins the shuffle-bytes cut and bit-identical output). Parts
-    * append to one staging table (first part overwrites), so the
-    * published table carries ≤ parts files per bucket.
+  /** THE writer of the bucketed segment layout — the co-location move:
+    * the stored shingle table is written CLUSTERED BY doc_id and the
+    * band-bucket table CLUSTERED BY (band, bucket), so every later
+    * increment's candidate join and verify join read the HISTORY side
+    * pre-partitioned on their join keys — no history-sized exchange
+    * per increment; only the (small) increment/candidate sides shuffle
+    * into the bucket layout (PlanSpec pins exactly 2 exchanges fewer
+    * than the plain layout of the same data). Mechanics: Spark's
+    * bucketed layout is only writable through the catalog
+    * (`bucketBy.saveAsTable`), so each stage writes an EXTERNAL table
+    * into the publish staging dir under a throwaway per-call unique
+    * name (two same-JVM publishes must not collide on a catalog name,
+    * r16 review), drops the catalog entry (files stay — DROP on an
+    * external table never deletes data), and [[graft.Work.publish]]
+    * renames the staged dir into place. Readers re-declare the tables
+    * over the published files ([[bucketedHistoryIndex]]).
     *
-    * `linkFrom` (r18, the APPEND spelling of the weekly fold): paths
-    * of already-bucketed segments with the SAME spec whose data files
-    * are adopted verbatim ([[graft.Work.adoptDataFiles]] — hard links
-    * locally, raw/server-side copy elsewhere) instead of being read
-    * and rewritten through Spark. The standing segment's history costs
-    * the fold NOTHING but per-file metadata ops: no scan, no decode,
-    * no shuffle, no re-encode — the r17 aligned fold removed the
-    * history SHUFFLE, this removes the history IO, and the fold's wall
-    * is genuinely ∝ tail bytes. File names keep Spark's bucket-id
-    * suffix, so the adopted files ARE the bucket layout; per-bucket
-    * file multiplicity accumulates exactly as the aligned rewrite's
-    * did (+1 file/bucket per folded tail part), and the same
-    * [[AlignedFoldMaxFilesPerBucket]] dial collapses it back through
-    * the full rewrite. */
-  private def stageBucketedIndexParts(s: SparkSession, tmp: String,
-      buckets: Int, sh: Seq[(DataFrame, Boolean)],
-      bb: Seq[(DataFrame, Boolean)],
-      linkFrom: Seq[String] = Seq.empty,
-      concatFrom: Seq[String] = Seq.empty): Unit = {
+    * Three sources per table, any of which may be empty:
+    *  - `rewrite`: segments read back and repartitioned on the bucket
+    *    keys BEFORE the bucketed write — a bucketBy write otherwise
+    *    emits one file per (task, bucket), the small-files explosion at
+    *    crawl scale; Spark's repartition hash and its bucket-id hash are
+    *    the same Murmur3 pmod, so each shuffled partition holds exactly
+    *    one bucket and the write lands ONE file per bucket (ExtSpec
+    *    counts them).
+    *  - `linkFrom` (r18, the APPEND spelling of the weekly fold):
+    *    already-bucketed segments with the SAME spec whose data files
+    *    are adopted verbatim ([[graft.Work.adoptDataFiles]] — hard links
+    *    locally, raw/server-side copy elsewhere): no scan, no decode, no
+    *    shuffle, no re-encode, so the fold's wall is ∝ tail bytes. File
+    *    names keep Spark's bucket-id suffix, so the adopted files ARE
+    *    the bucket layout; per-bucket file multiplicity grows by one
+    *    per fold until the [[AlignedFoldMaxFilesPerBucket]] dial
+    *    collapses it.
+    *  - `concatFrom`: same-spec segments merged by raw row-group copy
+    *    ([[concatBucketedSub]]). */
+  private def stageBucketedSegment(s: SparkSession, tmp: String,
+      buckets: Int, rewrite: Seq[String], linkFrom: Seq[String],
+      concatFrom: Seq[String]): Unit = {
     val token = s"${Work.jvmTag}_${stageSeq.incrementAndGet()}"
     // dash-joined token for file names: the bucket id must stay the
     // only `_<digits>` group Spark's bucket routing can parse
     val fileToken = token.replace("_", "-")
-    def stage(parts: Seq[(DataFrame, Boolean)], sub: String,
-        keys: Seq[String]): Unit = {
-      require(parts.nonEmpty || linkFrom.nonEmpty || concatFrom.nonEmpty,
+    def stage(sub: String, keys: Seq[String]): Unit = {
+      require(rewrite.nonEmpty || linkFrom.nonEmpty || concatFrom.nonEmpty,
         s"no parts to stage for $sub")
       val t = s"graft_hidx_stage_${token}_$sub"
       s.sql(s"DROP TABLE IF EXISTS $t")
-      parts.zipWithIndex.foreach { case ((df, aligned), i) =>
-        val src =
-          if (aligned) df
-          else df.repartition(buckets, keys.map(col): _*)
-        val w = src.write
-          .mode(if (i == 0) "overwrite" else "append")
-          .format("parquet")
+      if (rewrite.nonEmpty)
+        s.read.parquet(rewrite.map(p => s"$p/$sub"): _*)
+          .repartition(buckets, keys.map(col): _*)
+          .write.mode("overwrite").format("parquet")
           .bucketBy(buckets, keys.head, keys.tail: _*)
           .sortBy(keys.head, keys.tail: _*)
-        (if (i == 0) w.option("path", s"$tmp/$sub") else w)
+          .option("path", s"$tmp/$sub")
           .saveAsTable(t)
-      }
       s.sql(s"DROP TABLE IF EXISTS $t")
-      // adopt/concat AFTER the staged write: mode=overwrite on the
-      // first part would delete pre-placed files. UUID file names
-      // cannot collide.
+      // adopt/concat AFTER the staged write: mode=overwrite would
+      // delete pre-placed files. UUID file names cannot collide.
       linkFrom.foreach(p => Work.adoptDataFiles(s"$p/$sub", s"$tmp/$sub"))
       concatBucketedSub(concatFrom, sub, tmp, fileToken)
     }
-    stage(sh, "sh", Seq("doc_id"))
-    stage(bb, "bb", Seq("band", "bucket"))
-    // record the layout IN the artifact: the bucket count is a property
-    // of the published files, and a reader declaring a different count
-    // would silently scan half the buckets or mis-co-locate the join
-    // (r16 review) — readers derive it from here instead of trusting a
-    // parameter to match. The unique publish id keys each reader's
-    // per-session table NAME to this exact publish: a clean+republish
-    // at the same path (possibly with a different layout) gets fresh
-    // declarations instead of a stale catalog entry whose bucket spec
-    // and cached file listing describe the deleted artifact.
-    // `unsorted` (r18 verdict #4): set when the artifact carries
-    // concat-merged files — or adopts files from a victim that did —
-    // so readers never declare SORTED BY over data that lost
-    // whole-file order (see [[concatBucketedSub]]).
+    stage("sh", Seq("doc_id"))
+    stage("bb", Seq("band", "bucket"))
+    // the layout record travels IN the artifact (r16 review): readers
+    // take the bucket count from here, never from a parameter; the
+    // unique publish id keys each reader's table NAME to this exact
+    // publish (a clean+republish gets fresh declarations); `unsorted`
+    // (r18 verdict #4) marks concat-merged or adopted-from-concat
+    // files, which readers never declare SORTED BY.
     val sorted = concatFrom.isEmpty && linkFrom.forall(segmentSorted)
     writeRecord(tmp, "buckets",
       s"$buckets ${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}" +
@@ -2940,18 +2703,13 @@ object Dedup {
     * scan a subset of the bucket files). */
   def bucketedHistoryIndex(s: SparkSession,
       path: String): (DataFrame, DataFrame) = {
-    val (fsys, idxPath) = Work.fs(path)
-    def sub(n: String) = new org.apache.hadoop.fs.Path(idxPath, n)
     require(Work.isComplete(path),
       s"bucketed history index at $path is absent or incomplete")
-    require(fsys.exists(sub("buckets")),
-      s"bucketed history index at $path has no layout record — " +
-        "a plain-parquet index or a pre-record (v1) artifact cannot be " +
-        "read as bucketed; republish with publishHistoryIndexBucketed")
-    val recIn = fsys.open(sub("buckets"))
-    val recStr =
-      try scala.io.Source.fromInputStream(recIn, "UTF-8").mkString
-      finally recIn.close()
+    val recStr = Work.readSmallRecord(path, "buckets").getOrElse(
+      throw new IllegalArgumentException(
+        s"bucketed history index at $path has no layout record — " +
+          "a plain-parquet index or a pre-record (v1) artifact cannot " +
+          "be read as bucketed; re-lay it out with compactSegments"))
     // shape-validate BEFORE parsing: a truncated or corrupt record must
     // fail with an artifact-format error naming the path, not an opaque
     // NumberFormat/ArrayIndexOutOfBounds (r16 ADVICE). The optional
@@ -2963,44 +2721,32 @@ object Dedup {
       s"bucketed history index at $path has a corrupt layout record " +
         s"('${recStr.trim.take(64)}' — expected " +
         "'<buckets> <publishId>[ unsorted]'); " +
-        "republish with publishHistoryIndexBucketed")
+        "re-lay it out with compactSegments")
     val buckets = rec(0).toInt
     val pubId = rec(1)
     val sorted = rec.length == 2
     // table names keyed on (path tag, publish id): a clean+republish at
-    // the same path declares FRESH tables, so a session can never serve
-    // a previous artifact's bucket spec or cached file listing (r16
-    // review — the plain path is immune because read.parquet re-lists
-    // every call); refreshTable still guards the name's own relation
-    // cache across a re-entrant declare. The tag derives from the
-    // NORMALIZED spelling ([[segSpelling]]) so a file:-qualified
-    // caller and the plain-path reader/retirement derive ONE tag
-    // (r17 review #1)
-    val tag = Work.publishTag(segSpelling(idxPath))
+    // the same path declares FRESH tables, never a previous artifact's
+    // bucket spec or cached file listing (r16 review); the tag derives
+    // from the [[graft.Work.spell]] spelling so every caller spelling
+    // and retireSegments derive ONE tag (r17 review #1)
+    val tag = Work.publishTag(Work.spell(Work.fs(path)._2))
       .replaceAll("[^A-Za-z0-9_]", "_")
     def declare(sub: String, schema: String, keys: String): String = {
       val t = s"graft_hidx_${sub}_${tag}_$pubId"
-      // retire catalog entries of SUPERSEDED publishes of this same
-      // path tag (r16 verdict #6 / ADVICE): a clean+republish cycle
-      // otherwise leaks one external-table pair per publish id into a
-      // long-lived shared metastore, the stale ones pointing at
-      // deleted locations. DROP on an external table never touches
-      // files, and any frame still lazily bound to the old name was
-      // already invalid — its artifact was cleaned. Best-effort: a
-      // racing DROP of the same stale entry is a no-op (IF EXISTS).
+      // drop catalog entries of SUPERSEDED publishes of this path tag
+      // (r16 verdict #6): a clean+republish cycle would otherwise leak
+      // one external-table pair per publish id into a shared metastore.
+      // DROP on an external table never touches files; SHOW TABLES
+      // LIKE pushes the prefix filter to the catalog. Best-effort.
       val prefix = s"graft_hidx_${sub}_${tag}_"
-      // SHOW TABLES LIKE pushes the prefix filter to the catalog — a
-      // shared metastore is never list-scanned wholesale
       try s.sql(s"SHOW TABLES LIKE '$prefix*'").collect()
         .map(_.getString(1)).filter(_ != t)
         .foreach(old => s.sql(s"DROP TABLE IF EXISTS $old"))
       catch { case scala.util.control.NonFatal(_) => () }
-      // IF NOT EXISTS, not a tableExists probe: two concurrent callers
-      // of the same index must not race check-then-create. SORTED BY
-      // only when the artifact's record says the files still carry
-      // whole-file order — a concat-collapsed segment must not tempt
-      // Spark into skipping a sort it needs (the one-file-per-bucket
-      // case trusts the declaration; r18 verdict #4)
+      // IF NOT EXISTS: concurrent callers must not race check-then-
+      // create. SORTED BY only when the record says the files keep
+      // whole-file order (r18 verdict #4)
       val sortedBy = if (sorted) s"SORTED BY ($keys)" else ""
       s.sql(s"""CREATE TABLE IF NOT EXISTS $t ($schema) USING PARQUET
         CLUSTERED BY ($keys) $sortedBy INTO $buckets BUCKETS
@@ -3013,60 +2759,6 @@ object Dedup {
       s.table(declare("bb", "doc_id BIGINT, band INT, bucket BIGINT",
         "band, bucket")))
   }
-
-  /** [[incrementalAgainstIndex]] over a BUCKETED index: identical
-    * output (same shared core, ExtSpec pins row equality with the
-    * plain path), but the stored tables join exchange-free. */
-  def incrementalAgainstIndexBucketed(s: SparkSession, indexPath: String,
-      increment: DataFrame): DataFrame = {
-    val (shH, bH) = bucketedHistoryIndex(s, indexPath)
-    incrementalAgainstFrames(s, shH, bH, increment, indexPath)
-  }
-
-  private val histIdxBDone = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]
-
-  /** Shared once-per-(session, path) publish memo of the two ensure
-    * entry points — the eviction/keying semantics live in ONE place. */
-  private def ensureIdx(
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String],
-      s: SparkSession, path: String)(publishFn: => Unit): String = {
-    graft.SessionCaches.evictStopped(cache)(_._1)
-    cache.computeIfAbsent((s, path), { _ => publishFn; path })
-  }
-
-  /** Witness twin of [[ensureHistoryIndex]] for the bucketed layout:
-    * ensures the PLAIN index first, then re-layouts its stored tables
-    * ([[publishHistoryIndexBucketedFrom]]) — a gate run exercising
-    * both flavors shingles and MinHashes the corpus exactly once. */
-  def ensureHistoryIndexBucketed(s: SparkSession, dir: String,
-      fingerprint: Option[String] = None): String = {
-    // v2: v1 predates the in-artifact layout record; v3 (r20): shingle
-    // ids are tokenHash longs, not strings — each bump guarantees a
-    // stale prior-format dir in a shared work dir is never read (the
-    // plain inc_hist and segmented inc_hidxseg/inc_hidxsegc paths are
-    // bumped for the same r20 reason)
-    val path = s"${Work.dir}/inc_hidxb_v3_${Work.publishTag(dir, fingerprint)}"
-    ensureIdx(histIdxBDone, s, path) {
-      publishHistoryIndexBucketedFrom(s, path,
-        ensureHistoryIndex(s, dir, fingerprint))
-    }
-  }
-
-  val incrementalPubBucketed = QueryDef(
-    "dedup_incremental_pub_bucketed",
-    (s, dir) => incrementalAgainstIndexBucketed(s,
-      ensureHistoryIndexBucketed(s, dir),
-      plantedCorpus(Tables(s, dir, "documents"))
-        .filter(col("doc_id") >= PlantedOffset)),
-    Some(incrementalOracleSql))
-
-  val incrementalPub = QueryDef(
-    "dedup_incremental_pub",
-    (s, dir) => incrementalAgainstIndex(s, ensureHistoryIndex(s, dir),
-      plantedCorpus(Tables(s, dir, "documents"))
-        .filter(col("doc_id") >= PlantedOffset)),
-    Some(incrementalOracleSql))
 
   /** Decontamination — the eval-leakage check every LLM pipeline runs:
     * flag evaluation documents sharing at least one word n-gram with

@@ -1700,19 +1700,22 @@ class ExtSpec extends SparkSpec {
     // two-frame union-with-tag spelling produce identical rows
     assert(fused == rows(Dedup.incrementalPairs(
       corpus.filter(col("doc_id") < off), inc)))
-    // the production path: publish history once, join the increment
-    // against the STORED tables — bit-equal to the in-query spelling
+    // the production path: publish history once as ONE segment, join
+    // the increment against the STORED tables — bit-equal to the
+    // in-query spelling
     val path = Work.scratch("histidx_spec")
     Work.clean(path)
-    Dedup.publishHistoryIndex(spark, path, docs.select("doc_id", "text"))
-    val pub = rows(Dedup.incrementalAgainstIndex(spark, path, inc))
+    Dedup.publishHistorySegment(spark, path, "hist",
+      docs.select("doc_id", "text"))
+    val pub = rows(Dedup.incrementalAgainstSegmentedIndex(spark, path, inc))
     assert(pub == fused, s"missing=${(fused -- pub).take(3)} " +
       s"extra=${(pub -- fused).take(3)}")
     // publish is _SUCCESS-gated: a second publish with DIFFERENT input
     // must be a no-op on a completed index
-    Dedup.publishHistoryIndex(spark, path,
+    Dedup.publishHistorySegment(spark, path, "hist",
       docs.limit(1).select("doc_id", "text"))
-    assert(rows(Dedup.incrementalAgainstIndex(spark, path, inc)) == fused)
+    assert(rows(Dedup.incrementalAgainstSegmentedIndex(spark, path, inc))
+      == fused)
     // disjoint-id precondition (r15 ADVICE): with the debug check on,
     // an increment that reuses a history doc_id fails fast instead of
     // silently duplicating verify-side rows; a disjoint increment
@@ -1720,26 +1723,32 @@ class ExtSpec extends SparkSpec {
     spark.conf.set("spark.graft.dedup.checkDisjointIds", "true")
     try {
       val e = intercept[IllegalArgumentException](
-        Dedup.incrementalAgainstIndex(spark, path,
+        Dedup.incrementalAgainstSegmentedIndex(spark, path,
           corpus.filter(col("doc_id") < off).limit(3)))
       assert(e.getMessage.contains("overlap the"))
-      assert(rows(Dedup.incrementalAgainstIndex(spark, path, inc)) == fused)
+      assert(rows(Dedup.incrementalAgainstSegmentedIndex(spark, path, inc))
+        == fused)
     } finally spark.conf.unset("spark.graft.dedup.checkDisjointIds")
     Work.clean(path)
-    // bucketed layout (r16): same shared core over CLUSTERED BY
-    // (doc_id) / (band, bucket) stored tables — rows must be
-    // bit-identical to the plain-parquet path
+    // bucketed layout (r16): the same one-segment publish re-laid-out
+    // by compactSegments into CLUSTERED BY (doc_id) / (band, bucket)
+    // stored tables — rows must be bit-identical to the plain path
     val bpath = Work.scratch("histidxb_spec")
     Work.clean(bpath)
-    Dedup.publishHistoryIndexBucketed(spark, bpath,
+    Dedup.publishHistorySegment(spark, bpath, "hist",
       docs.select("doc_id", "text"))
-    assert(rows(Dedup.incrementalAgainstIndexBucketed(spark, bpath, inc))
+    val bseg = Dedup.compactSegments(spark, bpath, "bucketed",
+      retire = false)
+    assert(Dedup.activeSegments(bpath)
+      .map(p => p.substring(p.lastIndexOf('/') + 1)) == Seq("seg_bucketed"),
+      "the fold filter must hide the re-laid-out plain segment")
+    assert(rows(Dedup.incrementalAgainstSegmentedIndex(spark, bpath, inc))
       == fused)
     // file economy: the pre-write repartition must land ONE file per
     // bucket, not one per (task, bucket) — the small-files explosion a
     // naive bucketBy write produces at crawl scale
     Seq("sh", "bb").foreach { sub =>
-      val parts = new java.io.File(s"$bpath/$sub").listFiles()
+      val parts = new java.io.File(s"$bseg/$sub").listFiles()
         .count(_.getName.endsWith(".parquet"))
       assert(parts <= Dedup.HistIdxBuckets,
         s"$sub wrote $parts part files for ${Dedup.HistIdxBuckets} buckets")
@@ -1785,9 +1794,12 @@ class ExtSpec extends SparkSpec {
     // (refreshTable, not a stale cached listing of deleted parts) and
     // derive the count from the artifact's own record (r16 review)
     Work.clean(bpath)
-    Dedup.publishHistoryIndexBucketed(spark, bpath,
-      docs.limit(20).select("doc_id", "text"), buckets = 8)
-    val small = rows(Dedup.incrementalAgainstIndexBucketed(spark, bpath, inc))
+    Dedup.publishHistorySegment(spark, bpath, "hist",
+      docs.limit(20).select("doc_id", "text"))
+    Dedup.compactSegments(spark, bpath, "bucketed", retire = false,
+      buckets = 8)
+    val small = rows(Dedup.incrementalAgainstSegmentedIndex(spark, bpath,
+      inc))
     assert(small.subsetOf(fused) && small.size < fused.size,
       s"20-doc history must yield a strict pair subset " +
         s"(${small.size} vs ${fused.size})")
@@ -1800,22 +1812,29 @@ class ExtSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val docs = Tables(spark, sf, "documents").select("doc_id", "text")
     val bpath = Work.scratch("histidxb_cat_spec")
-    val tag = Work.publishTag(bpath).replaceAll("[^A-Za-z0-9_]", "_")
+    // the one-segment bucketed index: publish, re-lay out as ONE
+    // bucketed segment; the reader declares tables per SEGMENT path
+    def publish(n: Int): String = {
+      Dedup.publishHistorySegment(spark, bpath, "hist", docs.limit(n))
+      Dedup.compactSegments(spark, bpath, "bucketed", retire = false)
+    }
+    val seg = s"$bpath/seg_bucketed"
+    val tag = Work.publishTag(seg).replaceAll("[^A-Za-z0-9_]", "_")
     def declared = spark.sql(s"SHOW TABLES LIKE 'graft_hidx_*_$tag*'")
       .collect().map(_.getString(1)).sorted.toSeq
     Work.clean(bpath)
-    Dedup.publishHistoryIndexBucketed(spark, bpath, docs.limit(50))
-    Dedup.bucketedHistoryIndex(spark, bpath): Unit
+    assert(publish(50) == seg)
+    Dedup.bucketedHistoryIndex(spark, seg): Unit
     val first = declared
     assert(first.size == 2, s"expected one (sh, bb) pair, got $first")
     // same publish re-read: idempotent, no growth
-    Dedup.bucketedHistoryIndex(spark, bpath): Unit
+    Dedup.bucketedHistoryIndex(spark, seg): Unit
     assert(declared == first)
     // clean + republish (new publish id): the reader must declare a
     // FRESH pair and DROP the superseded one — not accumulate
     Work.clean(bpath)
-    Dedup.publishHistoryIndexBucketed(spark, bpath, docs.limit(80))
-    Dedup.bucketedHistoryIndex(spark, bpath): Unit
+    publish(80)
+    Dedup.bucketedHistoryIndex(spark, seg): Unit
     val second = declared
     assert(second.size == 2,
       s"superseded catalog entries must be dropped, got $second")
@@ -1823,6 +1842,102 @@ class ExtSpec extends SparkSpec {
       "republish must declare under the NEW publish id")
     Work.clean(bpath)
     second.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("one-segment history index: ensureHistoryIndex publishes a " +
+      "segmented root under a new prefix, never the monolithic " +
+      "inc_hist_v2_ spelling") {
+    def name(p: String) = p.substring(p.lastIndexOf('/') + 1)
+    val fp = Some(s"onesegment_${Work.jvmTag}")
+    val old = s"${Work.dir}/inc_hist_v2_${Work.publishTag(sf, fp)}"
+    val root = Dedup.ensureHistoryIndex(spark, sf, fp)
+    assert(root != old && !name(root).startsWith("inc_hist_v2_"),
+      s"one-segment index must not reuse the monolithic path: $root")
+    assert(Dedup.activeSegments(root).map(name) == Seq("seg_hist"))
+    val broot = Dedup.ensureHistoryIndexBucketed(spark, sf, fp)
+    assert(broot != root && !name(broot).startsWith("inc_hidxb_v3_"),
+      s"bucketed one-segment index must not reuse the old path: $broot")
+    assert(Dedup.activeSegments(broot).map(name) == Seq("seg_bucketed"))
+    // why the prefix had to move: a monolithic artifact (sh/, bb/,
+    // _SUCCESS at the root, no seg_ children) left at the old spelling
+    // in a shared work dir reads as a segmented root with NO segment
+    Work.clean(old)
+    Work.publish(old) { tmp =>
+      Seq("sh", "bb").foreach(d => new java.io.File(s"$tmp/$d").mkdirs())
+    }: Unit
+    intercept[IllegalArgumentException](
+      Dedup.segmentedIndexFlavors(spark, old))
+    Seq(old, root, broot).foreach(Work.clean)
+  }
+
+  test("compaction with a non-default bucket count: the aligned-fold " +
+      "dial and maybeCompact count files per bucket from the segment's " +
+      "own buckets record, and rows equal the default-count segment") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables(spark, sf, "documents").select("doc_id", "text")
+    def day(k: Int) = docs.filter(col("doc_id") % 4 === k)
+    def name(p: String) = p.substring(p.lastIndexOf('/') + 1)
+    val a = Work.scratch("histidx_b8_spec")
+    Work.clean(a)
+    // worst per-bucket file multiplicity of a segment's sh table
+    def multiplicity(seg: String): Int = {
+      val (fsys, shDir) = Work.fs(s"$a/$seg/sh")
+      fsys.listStatus(shDir).map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")).groupBy(Dedup.bucketIdOf)
+        .values.map(_.length).max
+    }
+    // an 8-bucket standing segment grown by two aligned (adopting)
+    // folds to the dial: 1, 2, then 3 files per bucket
+    Dedup.publishHistorySegment(spark, a, "d0", day(0))
+    Dedup.compactSegments(spark, a, "c0", victims = Seq("d0"),
+      buckets = 8): Unit
+    (1 to 2).foreach { k =>
+      Dedup.publishHistorySegment(spark, a, s"d$k", day(k))
+      Dedup.compactSegments(spark, a, s"c$k",
+        victims = Seq(s"c${k - 1}", s"d$k"), buckets = 8): Unit
+      assert(multiplicity(s"seg_c$k") == k + 1,
+        s"aligned fold $k must adopt the standing segment")
+    }
+    assert(Dedup.AlignedFoldMaxFilesPerBucket == 3)
+    // maybeCompact's minor leaves a dial-tripped standing segment for
+    // the major — counted against ITS 8 buckets (24 files = 3 per
+    // bucket), not the 32-bucket default (which would read 1 per bucket)
+    Dedup.publishHistorySegment(spark, a, "d3", day(3))
+    val minor = Dedup.maybeCompact(spark, a,
+      Dedup.CompactionPolicy(minorTail = 1, majorFlavors = 0))
+    assert(minor.isDefined, "one plain segment trips minorTail = 1")
+    assert(Dedup.activeSegments(a).map(name).toSet ==
+      Set("seg_c2", name(minor.get)),
+      "the dial-tripped 8-bucket standing segment must not ride along")
+    // the aligned-fold dial on the same count: the standing segment is
+    // at 3 files per bucket, so the next 8-bucket fold collapses it
+    // back to one file per bucket instead of adopting a fourth
+    Dedup.compactSegments(spark, a, "c4",
+      victims = Seq("c2", name(minor.get)), buckets = 8): Unit
+    assert(multiplicity("seg_c4") == 1,
+      "the dial must collapse an 8-bucket segment at 3 files/bucket")
+    // rows: the same history compacted at the default count
+    val b = Work.scratch("histidx_b32_spec")
+    Work.clean(b)
+    (0 to 3).foreach(k =>
+      Dedup.publishHistorySegment(spark, b, s"d$k", day(k)))
+    Dedup.compactSegments(spark, b, "all"): Unit
+    def shRows(idx: String) = {
+      val flavors = Dedup.segmentedIndexFlavors(spark, idx)
+      assert(flavors.size == 1)
+      flavors.head._1.collect()
+        .map(r => (r.getLong(0), r.getSeq[Long](1), r.getInt(2))).toSet
+    }
+    assert(shRows(a) == shRows(b))
+    val inc = Dedup.plantedCorpus(Tables(spark, sf, "documents"))
+      .filter(col("doc_id") >= Dedup.PlantedOffset)
+    def pairs(idx: String) =
+      Dedup.incrementalAgainstSegmentedIndex(spark, idx, inc).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = pairs(b)
+    assert(want.nonEmpty && pairs(a) == want)
+    Work.clean(a)
+    Work.clean(b)
   }
 
   test("segment compaction: bit-identical pairs pre/post fold, racing-" +

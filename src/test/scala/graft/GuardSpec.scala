@@ -752,7 +752,11 @@ class GuardSpec extends SparkSpec {
       .contains(v1.uri))
     assert(reg.resolveArtifact("neardup_history", Some("crawl1"))
       .map(_.uri).contains(v1.uri))
-    assert(Work.isComplete(v1.uri), "registered uri must be a complete publish")
+    // the registered uri is a segmented index ROOT: its one active
+    // segment is the complete publish
+    val v1Segs = graft.ext.Dedup.activeSegments(v1.uri)
+    assert(v1Segs.nonEmpty && v1Segs.forall(Work.isComplete),
+      "registered root's active segment must be a complete publish")
     // crawl 2 (the corpus re-crawled in place): the CURRENT pointer
     // moves to the new artifact path; the stale fingerprint still
     // resolves the old, immutable publish

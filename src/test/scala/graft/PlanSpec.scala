@@ -193,14 +193,15 @@ class PlanSpec extends SparkSpec {
 
   test("bucketed history index: the two stored-side joins run " +
       "exchange-free (r16)") {
-    // the co-location contract of publishHistoryIndexBucketed: with
+    // the co-location contract of the bucketed segment layout: with
     // broadcast disabled (so the assertion targets bucketing, not AQE
     // smallness), the bucketed layout must remove EXACTLY the two
     // history-sized exchanges — the band-bucket table's shuffle into
     // the candidate join and the shingle table's shuffle into the
-    // verify a-join — relative to the plain-parquet index on the same
-    // data. Self-calibrating: both spellings are planned in this test,
-    // so an unrelated plan change moves both counts together.
+    // verify a-join — relative to the SAME one-segment index read
+    // plain, before compactSegments re-lays it out. Self-calibrating:
+    // both spellings are planned in this test, so an unrelated plan
+    // change moves both counts together.
     import graft.ext.Dedup
     import org.apache.spark.sql.functions.col
     val restore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -209,32 +210,31 @@ class PlanSpec extends SparkSpec {
       val docs = Tables(spark, sf, "documents")
       val inc = Dedup.plantedCorpus(docs)
         .filter(col("doc_id") >= Dedup.PlantedOffset)
-      val p = graft.Work.scratch("hidx_plan_plain")
+      val p = graft.Work.scratch("hidx_plan_onesegment")
       graft.Work.clean(p)
-      Dedup.publishHistoryIndex(spark, p, docs.select("doc_id", "text"))
-      val pb = graft.Work.scratch("hidx_plan_bucketed")
-      graft.Work.clean(pb)
-      Dedup.publishHistoryIndexBucketed(spark, pb,
+      Dedup.publishHistorySegment(spark, p, "hist",
         docs.select("doc_id", "text"))
-      def verifyPlan(shH: DataFrame, bH: DataFrame): String = {
+      def verifyPlan(): String = {
+        val flavors = Dedup.segmentedIndexFlavors(spark, p)
+        assert(flavors.size == 1, "a one-segment index has one flavor")
+        val (shH, bH) = flavors.head
         val shI = Dedup.shingleSets(inc.select("doc_id", "text"))
         val cands = Dedup.crossSideCandidates(bH,
           Dedup.bandBuckets(Dedup.minhashSignatures(shI)))
         planString(Dedup.verifyJaccardSplit(cands, shH, shI))
           .split("== Initial Plan ==").head
       }
-      val plain = verifyPlan(spark.read.parquet(s"$p/sh"),
-        spark.read.parquet(s"$p/bb"))
-      val (shB, bB) = Dedup.bucketedHistoryIndex(spark, pb)
-      val bucketed = verifyPlan(shB, bB)
+      val plain = verifyPlan()
+      Dedup.compactSegments(spark, p, "bucketed", retire = false)
+      val bucketed = verifyPlan()
       def exchanges(s: String): Int =
         "Exchange hashpartitioning".r.findAllIn(s).length
+      assert(!plain.contains("Bucketed: true"), plain.take(3000))
       assert(bucketed.contains("Bucketed: true"), bucketed.take(3000))
       assert(exchanges(bucketed) == exchanges(plain) - 2,
         s"plain=${exchanges(plain)} bucketed=${exchanges(bucketed)}\n" +
           bucketed.take(3000))
       graft.Work.clean(p)
-      graft.Work.clean(pb)
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", restore)
   }
