@@ -404,6 +404,13 @@ object Dedup {
       shingleSets(plantedCorpus(Tables(s, dir, "documents")))),
     Some(jaccardOracleSql))
 
+  /** Edge-count cap of the connected-components driver shortcut —
+    * `spark.graft.cc.driverEdges` (default 1M, 0 disables), the one conf
+    * for every caller's driver union-find. */
+  private[graft] def ccDriverEdges(s: SparkSession): Long =
+    s.conf.getOption("spark.graft.cc.driverEdges").map(_.toLong)
+      .getOrElse(1000000L)
+
   /** Connected components by min-label propagation WITH pointer
     * jumping: each round every node takes the min label among itself,
     * its neighbors' labels, and its label's label (path halving) —
@@ -419,12 +426,10 @@ object Dedup {
     * `strict = false`.
     */
   /** @param driverEdgeCap bounded-edge driver-shortcut cap: −1 (the
-    *   default) reads `spark.graft.cc.driverEdges` (default 1M, 0
-    *   disables); an explicit value overrides the conf — callers that
-    *   manage their OWN cap (the curate stream's
-    *   `spark.graft.curate.driverCcEdges`) pass 0 on their
-    *   past-the-cap branch so two confs never gate one collect
-    *   (r20 review #2). */
+    *   default) reads [[ccDriverEdges]]; an explicit value overrides
+    *   it — a caller that already applied the cap itself (the curate
+    *   stream) passes 0 on its past-the-cap branch so the pair set is
+    *   never probed twice. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 20, strict: Boolean = true,
       driverEdgeCap: Long = -1L): DataFrame = {
@@ -450,10 +455,7 @@ object Dedup {
     // spark.graft.cc.driverEdges: 0 disables (StressMain's CC growth
     // rows do, so they keep measuring the distributed path).
     val driverCap =
-      if (driverEdgeCap >= 0) driverEdgeCap
-      else spark.conf
-        .getOption("spark.graft.cc.driverEdges").map(_.toLong)
-        .getOrElse(1000000L)
+      if (driverEdgeCap >= 0) driverEdgeCap else ccDriverEdges(spark)
     if (driverCap > 0 && driverCap < Int.MaxValue) {
       val probe = edges
         .select(col("a").cast("long"), col("b").cast("long"))
@@ -2236,8 +2238,13 @@ object Dedup {
       val standing = bucketedSegs.map(_._1)
         .filter(p => filesPerBucket(p) < AlignedFoldMaxFilesPerBucket)
       val victims = (plainSegs.map(_._1) ++ standing).map(segName)
+      // fold at the standing bucketed segment's own count (a riding
+      // one first), so the fold stays aligned with it and later folds
+      // adopt instead of rewriting; the default only when none stands
+      val buckets = (standing ++ bucketedSegs.map(_._1)).iterator
+        .flatMap(bucketCountOf).nextOption().getOrElse(HistIdxBuckets)
       Some(compactSegments(s, indexDir, compactIdFor(victims),
-        victims, graceMs = policy.graceMs))
+        victims, graceMs = policy.graceMs, buckets = buckets))
     } else None
   }
 

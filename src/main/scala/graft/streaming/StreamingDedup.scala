@@ -847,9 +847,7 @@ object StreamingDedup {
     // driver (one collect off the cache, exact same reject set), past
     // the cap the distributed CC runs as before. The cap bounds the
     // collect, never the data.
-    val driverCcCap = s.conf
-      .getOption("spark.graft.curate.driverCcEdges").map(_.toLong)
-      .getOrElse(1000000L)
+    val driverCcCap = Dedup.ccDriverEdges(s)
     val kept =
       if (nPairs == 0) fresh // every doc isolated ⇒ all canonical
       else if (nPairs <= driverCcCap) {
@@ -864,10 +862,9 @@ object StreamingDedup {
         }
       } else {
         // driverEdgeCap = 0: THIS branch is the past-the-cap fallback —
-        // the stream's own spark.graft.curate.driverCcEdges already
-        // decided against a driver collect, so the callee's independent
-        // conf-defaulted shortcut must not re-collect the (known-large)
-        // pair set (r20 review #2: two confs gating one mechanism)
+        // the same spark.graft.cc.driverEdges cap already decided
+        // against a driver collect, so the callee must not probe the
+        // (known-large) pair set again
         val labels = phase("in-batch CC")(Dedup.connectedComponents(
           fresh.select("doc_id"), pairs, driverEdgeCap = 0L))
         fresh.join(

@@ -73,9 +73,14 @@ class CatalogSpec extends SparkSpec {
     spark.sql("INSERT INTO graftcat.ev_sink VALUES ('{\"event_id\":-1}')")
     assert(spark.sql("SELECT count(*) FROM graftcat.ev_sink")
       .collect().head.getLong(0) == 101)
-    // no temp files linger after commit
+    // no temp files linger after commit, and every published segment
+    // carries a stamped name
     val dir = new java.io.File(s"$wd/streams/scope/ev_sink")
     assert(dir.listFiles().forall(!_.getName.startsWith(".tmp-")))
+    val segs = dir.listFiles().map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.endsWith(".crc"))
+    assert(segs.nonEmpty &&
+      segs.forall(graft.connector.LogSourceV2.isStamped), segs.toSeq)
     // the engine's own bounded reader sees the inserted rows
     val store = LogStore(s"$wd/streams")
     assert(store.readBounded(spark, "scope", "ev_sink",

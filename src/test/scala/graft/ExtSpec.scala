@@ -1909,12 +1909,27 @@ class ExtSpec extends SparkSpec {
     assert(Dedup.activeSegments(a).map(name).toSet ==
       Set("seg_c2", name(minor.get)),
       "the dial-tripped 8-bucket standing segment must not ride along")
+    // …and the minor folds at the standing segment's 8 buckets, not the
+    // 32-bucket default, so it stays aligned with it
+    assert(Work.readSmallRecord(minor.get, "buckets")
+      .map(_.trim.split(" ")(0)).contains("8"),
+      "the minor's fold must carry the standing segment's 8 buckets")
+    locally {
+      val (fsys, shDir) = Work.fs(s"${minor.get}/sh")
+      val files = fsys.listStatus(shDir).map(_.getPath.getName)
+        .filter(_.endsWith(".parquet"))
+      assert(files.nonEmpty &&
+        files.forall(f => Dedup.bucketIdOf(f).exists(_ < 8)),
+        s"every fold file routes to one of 8 buckets: ${files.toSeq}")
+    }
     // the aligned-fold dial on the same count: the standing segment is
     // at 3 files per bucket, so the next 8-bucket fold collapses it
-    // back to one file per bucket instead of adopting a fourth
+    // back to one file per bucket instead of adopting a fourth; the
+    // aligned minor (one file per bucket) is adopted beside it — 2 in
+    // all, where adopting the standing segment too would give 4
     Dedup.compactSegments(spark, a, "c4",
       victims = Seq("c2", name(minor.get)), buckets = 8): Unit
-    assert(multiplicity("seg_c4") == 1,
+    assert(multiplicity("seg_c4") == 2,
       "the dial must collapse an 8-bucket segment at 3 files/bucket")
     // rows: the same history compacted at the default count
     val b = Work.scratch("histidx_b32_spec")

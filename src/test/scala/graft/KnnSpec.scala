@@ -30,6 +30,9 @@ class KnnSpec extends SparkSpec {
         plans.add(qe.executedPlan.toString): Unit
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // drain first: an earlier action's end event still on the bus would
+    // otherwise reach the listener and count as the body's
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
     spark.listenerManager.register(l)
     try body
     finally {

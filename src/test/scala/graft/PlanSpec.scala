@@ -981,6 +981,14 @@ class PlanSpec extends SparkSpec {
         rep.contains("===PLAN END q1_agg==="), rep)
       // the AQE-final plan of the timed write, not the unexecuted one
       assert(rep.contains("isFinalPlan=true"), rep)
+      // a key whose function ends in Work.materialize prints its eager
+      // builds' plans too, not only the timed parquet re-scan
+      val pub = Profile.run(spark, sf, counter, "dedup_incremental_pub")
+      assert(pub.plans.size >= 2 && pub.plans.exists(_.contains("Exchange")),
+        pub.report)
+      assert(pub.report.contains("===BUILD PLAN dedup_incremental_pub 1/") &&
+        pub.report.contains("===PLAN END dedup_incremental_pub==="),
+        pub.report)
     } finally {
       graft.ops.JobCounter.uninstall(spark, counter)
       // Profile applies the harness conf policy (rewrites on); restore

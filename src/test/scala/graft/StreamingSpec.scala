@@ -93,6 +93,24 @@ class StreamingSpec extends SparkSpec {
       .count() == 20)
   }
 
+  test("append publishes only stamped segment names through the V2 " +
+      "write, and an empty frame commits no segment") {
+    val store = LogStore(freshDir("stamped"))
+    val ev = Tables(spark, sf, "events").limit(30)
+    val dir = store.path("scope", "st")
+    // every name in the stream dir (checksum sidecars aside): no
+    // scratch dir, no staging file
+    def names = new java.io.File(dir).listFiles().map(_.getName)
+      .filterNot(_.endsWith(".crc")).toSeq
+    store.append(ev.repartition(3), "scope", "st")
+    assert(names.size == 3 &&
+      names.forall(graft.connector.LogSourceV2.isStamped), names)
+    store.append(ev.limit(0), "scope", "st")
+    assert(names.size == 3, s"an empty frame must commit nothing: $names")
+    assert(store.readBounded(spark, "scope", "st", StreamOps.eventSchema)
+      .count() == 30)
+  }
+
   test("foreachBatch fans one micro-batch out to two sinks (streaming statement set)") {
     val base = freshDir("foreachbatch")
     val store = LogStore(base)
@@ -202,6 +220,12 @@ class StreamingSpec extends SparkSpec {
     store.compact(spark, "scope", "c1", target = 2)
     val after = graft.connector.LogSourceV2.listSegments(dir)
     assert(after.size == 2, s"expected 2 segments, got ${after.size}")
+    // rename-mode compaction publishes stamped names too (watermark-
+    // eligible in a streaming offset), and leaves no scratch behind
+    val raw = new java.io.File(dir).listFiles().map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.endsWith(".crc")).toSeq
+    assert(raw.size == 2 &&
+      raw.forall(graft.connector.LogSourceV2.isStamped), raw)
     val rowsAfter = store.readBounded(spark, "scope", "c1", StreamOps.eventSchema)
       .groupBy("event_id").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -2369,13 +2393,13 @@ class StreamingSpec extends SparkSpec {
     // produce the identical kept set
     val idxD = freshDir("curatestream_idx_dist")
     val keptD = freshDir("curatestream_kept_dist")
-    spark.conf.set("spark.graft.curate.driverCcEdges", "0")
+    spark.conf.set("spark.graft.cc.driverEdges", "0")
     try {
       slices.zipWithIndex.foreach { case (sl, i) =>
         graft.streaming.StreamingDedup.curateFoldBatch(idxD, keptD)(
           sl.select("doc_id", "text"), i.toLong)
       }
-    } finally spark.conf.unset("spark.graft.curate.driverCcEdges")
+    } finally spark.conf.unset("spark.graft.cc.driverEdges")
     val gotD = spark.read.parquet(s"$keptD/batch_c*")
       .collect().map(_.getLong(0)).toSet
     assert(gotD == got,
