@@ -235,9 +235,11 @@ object Bench {
         fn: (org.apache.spark.sql.SparkSession, String) =>
           org.apache.spark.sql.DataFrame,
         pass: Int): Unit = {
-      // per-key conf policy: tuning confs reset per key, whole-plan
-      // rewrites ambient-ON (SOAK_r14-adjudicated; a rule's EnabledConf
-      // is reset to true here, so per-key opt-outs cannot leak)
+      // per-key conf policy: the whole-plan rewrites are always on once
+      // registered (kill switch spark.sql.optimizer.excludedRules=
+      // graft.plans.TopKRewrite,graft.plans.RangeJoinRewrite); the
+      // policy unsets the exclusion and the bin width, so per-key
+      // opt-outs cannot leak
       GraftSession.applyQueryConfPolicy(spark)
       val (c0, g0) = (counter.snapshot(), gcMs())
       val at = (System.nanoTime() - benchT0) / 1e9

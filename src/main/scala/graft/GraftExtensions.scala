@@ -32,8 +32,10 @@ import org.apache.spark.sql.types.IntegerType
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
-    // whole-plan optimizer rules (each a no-op until its hint conf is
-    // set): auto range-join grid rewrite, auto top-k window rewrite
+    // whole-plan optimizer rules, always on once injected: auto
+    // range-join grid rewrite, auto top-k window rewrite (kill switch
+    // spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite,
+    // graft.plans.RangeJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
   }

@@ -65,87 +65,29 @@ object GraftSession {
     val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(s)
-    // whole-plan optimizer extensions — registered always, and since
-    // r15 ENABLED ambiently by default: SOAK_r14's paired A/B
-    // adjudicated the rules-on posture safe (geomean ratio 0.96, no key
-    // loses beyond noise, 197/197 oracle-green ambient, 12/12 intended
-    // plan matches, zero unintended). A session that wants a rule off
-    // sets its EnabledConf to false — the per-conf kill switch.
+    // whole-plan optimizer extensions: always on once registered
+    // (SOAK_r14's paired A/B adjudicated the rules-on posture safe —
+    // geomean ratio 0.96, no key loses beyond noise, 197/197
+    // oracle-green, 12/12 intended plan matches, zero unintended). The
+    // kill switch is Spark's own spark.sql.optimizer.excludedRules=
+    // graft.plans.TopKRewrite,graft.plans.RangeJoinRewrite.
     graft.plans.RangeJoinRewrite.ensureRegistered(s)
     graft.plans.TopKRewrite.ensureRegistered(s)
-    // default, not force: getOrCreate can return a REUSED session on
-    // which the user already set EnabledConf=false, and an
-    // unconditional set would silently revert that opt-out on the next
-    // get() (r15 review). Only an UNSET conf receives the default.
-    Seq(plans.RangeJoinRewrite.EnabledConf,
-        plans.TopKRewrite.EnabledConf).foreach { k =>
-      if (s.conf.getOption(k).isEmpty) s.conf.set(k, "true")
-    }
     s
   }
 
-  /** The opt-in optimizer-rewrite confs. Harness mains that run MANY
-    * queries over one session (Bench/Verify) unset these before each
-    * query, so a key that opts in (range_join_auto, topk_cosine_auto)
-    * cannot silently change the PLANS of every later key with a
-    * matching shape — medians must measure one plan per key, and a
-    * dev subset run must measure the same plan as the full suite
-    * (the code-review finding on round-11's conf leak: results stayed
-    * correct — both rewrites are semantics-preserving — but the bench
-    * comparison became apples-to-oranges). A normal user session
-    * keeps them as ordinary session confs.
-    */
-  val queryScopedConfs: Seq[String] = Seq(
-    graft.plans.RangeJoinRewrite.BinConf,
-    graft.plans.RangeJoinRewrite.EnabledConf,
-    graft.plans.RangeJoinRewrite.MaxCellsConf,
-    graft.plans.TopKRewrite.EnabledConf,
-    graft.plans.TopKRewrite.MaxKConf)
-
-  def resetQueryConfs(s: SparkSession): Unit =
-    queryScopedConfs.foreach(s.conf.unset)
-
-  /** Per-key conf policy for the harness mains (Bench/Verify): reset
-    * the TUNING confs (bin width, max-k, max-cells) per key so a key
-    * that tunes a rewrite cannot change the plans later keys measure,
-    * then restore the AMBIENT posture — since r15 that posture is
-    * rules-ON (adjudicated at [[get]]; the real `spark.sql.extensions`
-    * deployment shape, where every matching plan in the suite must
-    * take either a correct rewrite or a safe skip path — SOAK_r14
-    * measured exactly that, 197/197 green).
+  /** Per-key conf policy for the harness mains (Bench/Verify/Profile and
+    * the benchmark): every key runs with both whole-plan rewrites ON
+    * and the automatic range-join bin, so a key that forces a bin width
+    * or excludes a rule cannot change the plans later keys measure —
+    * medians must measure one plan per key, and a subset run must
+    * measure the same plan as the full suite (the round-11 conf-leak
+    * finding). A normal user session keeps both as ordinary confs.
     */
   def applyQueryConfPolicy(s: SparkSession): Unit = {
-    resetQueryConfs(s)
-    s.conf.set(plans.RangeJoinRewrite.EnabledConf, "true")
-    s.conf.set(plans.TopKRewrite.EnabledConf, "true")
-  }
-
-  /** Set `confs`, build the DataFrame, FORCE its optimization while
-    * they are set, then restore every conf to its prior value (unset
-    * if absent) — on exception too. The optimizer runs at ACTION time,
-    * not at DataFrame-build time, so a library function that merely
-    * set a rewrite conf around plan construction would either not fire
-    * the rewrite at all or have to leave the conf set, permanently
-    * changing the plans of every later matching query in the caller's
-    * session (round-11 verdict #2/punch #4). Instead: optimize eagerly
-    * under the conf and return the OPTIMIZED plan re-wrapped as a
-    * DataFrame — the rewrite is baked into the returned plan (each
-    * later action re-plans it through a fresh QueryExecution, and both
-    * graft rewrites are idempotent no-ops on their own output), while
-    * the session's ambient confs are exactly what they were.
-    */
-  def withScopedConfs(s: SparkSession, confs: (String, String)*)(
-      body: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val df = body
-      org.apache.spark.sql.graftbridge.DataFrameBridge
-        .ofRows(s, df.queryExecution.optimizedPlan)
-    } finally saved.foreach { case (k, prior) =>
-      prior.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-    }
+    s.conf.unset(plans.RangeJoinRewrite.BinConf)
+    s.conf.unset(
+      org.apache.spark.sql.internal.SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
   }
 
   /** Drop everything any query cached and didn't free — SQL cache and

@@ -813,6 +813,11 @@ object StressMain {
           (12 + (math.log(n.toDouble) / math.log(2)).round).toString)
         repEmb(emb, n)
       })
+    // the naive rows run the identical query with the rule excluded
+    // through Spark's own kill switch
+    def excludeTopK(): Unit = spark.conf.set(
+      org.apache.spark.sql.internal.SQLConf.OPTIMIZER_EXCLUDED_RULES.key,
+      graft.plans.TopKRewrite.ruleName)
     // round-11: the TopKRewrite evidence pair — the IDENTICAL
     // user-written window top-k, executed as written (naive: every
     // scored row crosses the exchange and sorts per group) vs under
@@ -824,21 +829,16 @@ object StressMain {
     locally {
       val name = "topk_window_rewrite"
       if (only.isEmpty || only.contains(name)) {
-        graft.plans.TopKRewrite.ensureRegistered(spark)
         def sides(c: DataFrame) = (
           c.limit(200).select(col("vec_id").as("qid"), col("e").as("qe")),
           c.select(col("vec_id").as("rid"), col("e").as("re")))
         def run(n: Int, enabled: Boolean, tag: String): Double = {
-          spark.conf.set(graft.plans.TopKRewrite.EnabledConf,
-            enabled.toString)
+          if (!enabled) excludeTopK()
           val (q, r) = sides(repEmb(emb, n))
           val sec = t(s"$name $tag")(
             ext.Similarity.bruteForceTopKWindow(q, r, 5).count())
           GraftSession.dropAllCaches(spark)
-          // restore the AMBIENT posture, not a bare unset: since the
-          // r15 rules-on default a bare unset left every LATER growth
-          // row in a hybrid posture (TopK off, RangeJoin on) that is
-          // neither scoped nor rules-on (r15 review)
+          // lift the exclusion: every LATER growth row runs rules-on
           GraftSession.applyQueryConfPolicy(spark)
           sec
         }
@@ -856,11 +856,9 @@ object StressMain {
     locally {
       val name = "topk_rank_rewrite"
       if (only.isEmpty || only.contains(name)) {
-        graft.plans.TopKRewrite.ensureRegistered(spark)
         import org.apache.spark.sql.expressions.Window
         def run(n: Int, enabled: Boolean, tag: String): Double = {
-          spark.conf.set(graft.plans.TopKRewrite.EnabledConf,
-            enabled.toString)
+          if (!enabled) excludeTopK()
           val c = repEmb(emb, n)
           val q = c.limit(200).select(col("vec_id").as("qid"),
             col("e").as("qe"))
@@ -876,10 +874,7 @@ object StressMain {
               .filter(col("rnk") <= 5)
               .count())
           GraftSession.dropAllCaches(spark)
-          // restore the AMBIENT posture, not a bare unset: since the
-          // r15 rules-on default a bare unset left every LATER growth
-          // row in a hybrid posture (TopK off, RangeJoin on) that is
-          // neither scoped nor rules-on (r15 review)
+          // lift the exclusion: every LATER growth row runs rules-on
           GraftSession.applyQueryConfPolicy(spark)
           sec
         }

@@ -75,64 +75,37 @@ object Tables {
   }
 
   /** Estimated total file-scan partition count across the plan's
-    * leaves, by Spark's own FilePartition math (maxSplitBytes, then
-    * greedy size-desc packing) over the relations' driver-cached file
-    * listings — no physical planning, no job. None when any leaf is
-    * not a file-based relation (caller falls back to `.rdd`). At
-    * cluster scale a real table lists ≥ cores splits here, so
-    * [[spread]] is the identity — pinned in GuardSpec against a
-    * multi-file rewrite of the testdata. */
+    * leaves, by Spark's own FilePartition math (`maxSplitBytes`,
+    * `splitFiles`, then size-descending `getFilePartitions` packing,
+    * exactly as `FileSourceScanExec` plans it) over the relations'
+    * driver-cached file listings — no physical planning, no job. None
+    * when any leaf is not a file-based relation (caller falls back to
+    * `.rdd`). At cluster scale a real table lists ≥ cores splits here,
+    * so [[spread]] is the identity — pinned in GuardSpec against a
+    * multi-file rewrite of the testdata and against the planned scan. */
   private[graft] def estimateScanPartitions(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.execution.PartitionedFileUtil
     import org.apache.spark.sql.execution.datasources.{
-      HadoopFsRelation, LogicalRelation}
+      FilePartition, HadoopFsRelation, LogicalRelation}
     val sess = df.sparkSession
-    val conf = sess.sessionState.conf
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    val perLeaf = leaves.map {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          // two shapes where the whole-listing estimate would LIE and
-          // the .rdd fallback must decide (r13 review): (a) a hive-
-          // partitioned relation — partition pruning can cut the real
-          // scan to a fraction of the listing, and an over-estimate
-          // here silently SKIPS a spread the pruned scan needed;
-          // (b) a non-splittable format (csv/json may be gzipped) —
-          // the file-chunk math below assumes splittability
-          if (fs.partitionSchema.nonEmpty) return None
-          val fmt = fs.fileFormat.getClass.getSimpleName.toLowerCase
-          if (!fmt.contains("parquet") && !fmt.contains("orc"))
-            return None
-          val open = conf.filesOpenCostInBytes
-          val maxPB = conf.filesMaxPartitionBytes
-          val minPN = conf.filesMinPartitionNum
-            .getOrElse(sess.sparkContext.defaultParallelism)
-          val lens = fs.location.listFiles(Nil, Nil)
-            .flatMap(_.files.map(_.getLen)).filter(_ > 0)
-          if (lens.isEmpty) 0L
-          else {
-            val totalBytes = lens.map(_ + open).sum
-            val bytesPerCore = totalBytes / math.max(1, minPN)
-            val maxSplit = math.min(maxPB, math.max(open, bytesPerCore))
-            // split each (splittable-parquet) file into maxSplit chunks,
-            // then pack size-descending exactly like FilePartition:
-            // close when currentSize + len > maxSplit; openCost rides
-            // the accumulator, not the comparison
-            val chunks = lens.flatMap { len =>
-              val full = (len / maxSplit).toInt
-              val rem = len % maxSplit
-              Seq.fill(full)(maxSplit) ++ (if (rem > 0) Seq(rem) else Nil)
-            }.sortBy(-_)
-            var n = 0L
-            var cur = 0L
-            chunks.foreach { len =>
-              if (cur + len > maxSplit && cur > 0) { n += 1; cur = 0 }
-              cur += len + open
-            }
-            if (cur > 0) n += 1
-            n
-          }
-        case _ => return None
-      }
+    val perLeaf = df.queryExecution.analyzed.collectLeaves().map {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        // two shapes where the whole-listing estimate would LIE and
+        // the .rdd fallback must decide (r13 review): (a) a hive-
+        // partitioned relation — partition pruning can cut the real
+        // scan to a fraction of the listing, and an over-estimate
+        // here silently SKIPS a spread the pruned scan needed;
+        // (b) a non-splittable format (csv/json may be gzipped)
+        if (fs.partitionSchema.nonEmpty) return None
+        val fmt = fs.fileFormat.getClass.getSimpleName.toLowerCase
+        if (!fmt.contains("parquet") && !fmt.contains("orc")) return None
+        val dirs = fs.location.listFiles(Nil, Nil)
+        val maxSplit = FilePartition.maxSplitBytes(sess, dirs)
+        val splits = dirs.flatMap(d => d.files.flatMap(f =>
+          PartitionedFileUtil.splitFiles(f, f.getPath,
+            fs.fileFormat.isSplitable(sess, fs.options, f.getPath),
+            maxSplit, d.values))).sortBy(-_.length)
+        FilePartition.getFilePartitions(sess, splits, maxSplit).size.toLong
       case _ => return None
     }
     Some(perLeaf.sum)

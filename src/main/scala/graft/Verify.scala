@@ -26,8 +26,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // per-key conf policy: tuning confs reset per key, rewrites
-      // ambient-ON since r15 (see GraftSession.applyQueryConfPolicy)
+      // per-key conf policy: rewrites always on once registered (kill
+      // switch spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite,
+      // graft.plans.RangeJoinRewrite; see applyQueryConfPolicy)
       GraftSession.applyQueryConfPolicy(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

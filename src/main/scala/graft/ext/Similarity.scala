@@ -96,22 +96,16 @@ object Similarity {
     * fires (no Window, no per-group sort in the physical plan; the
     * unrewritten control keeps the Window); this key proves it
     * end-to-end against the same DuckDB oracle as the hand-built
-    * aggregate form. The enable conf is set/run/RESTORED inside this
-    * function (GraftSession.withScopedConfs, round-11 punch #4): the
-    * plan is optimized eagerly under the conf and returned already
-    * rewritten, so a direct library call no longer leaves the conf on
-    * the caller's session changing every later matching plan
-    * (GuardSpec pins the conf restored, including on exception).
+    * aggregate form. The key sets no conf and registers no rule, so
+    * a direct library call leaves the caller's session exactly as it
+    * found it (GuardSpec pins that); the rewrite fires wherever the
+    * session registered it.
     */
   val topkCosineAuto = QueryDef(
     "topk_cosine_auto",
     (s, dir) => {
-      graft.plans.TopKRewrite.ensureRegistered(s)
-      graft.GraftSession.withScopedConfs(s,
-        graft.plans.TopKRewrite.EnabledConf -> "true") {
-        val (q, r) = split(s, dir)
-        bruteForceTopKWindow(q, r, K)
-      }
+      val (q, r) = split(s, dir)
+      bruteForceTopKWindow(q, r, K)
     },
     topkCosine.oracle)
 
@@ -127,14 +121,10 @@ object Similarity {
   val topkPagedAuto = QueryDef(
     "topk_paged_auto",
     (s, dir) => {
-      graft.plans.TopKRewrite.ensureRegistered(s)
-      graft.GraftSession.withScopedConfs(s,
-        graft.plans.TopKRewrite.EnabledConf -> "true") {
-        val (q, r) = split(s, dir)
-        rankedCosine(q, r)
-          .filter(col("rank").between(K + 1, 2 * K))
-          .select("qid", "rank", "rid")
-      }
+      val (q, r) = split(s, dir)
+      rankedCosine(q, r)
+        .filter(col("rank").between(K + 1, 2 * K))
+        .select("qid", "rank", "rid")
     },
     Some(s"""
       WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS e

@@ -72,32 +72,27 @@ object RangeJoin {
     * base and picks bin = span, 2 cells per interval). PlanSpec pins
     * that the rewrite actually fires (no nested-loop join in the
     * physical plan); this key proves it end-to-end against the same
-    * DuckDB IEJoin oracle. The enable conf is set/run/RESTORED inside
-    * this function (GraftSession.withScopedConfs, round-11 punch #4):
-    * the plan is optimized eagerly under the conf and returned already
-    * rewritten, so a direct library call no longer leaves the conf on
-    * the caller's session. Ambient inheritance stays safe by design
-    * regardless (the rule only touches inner joins with NO equi key
-    * and BOTH range bounds, every path bounded: static cap / skip /
+    * DuckDB IEJoin oracle. The key sets no conf and registers no rule:
+    * the rewrite fires wherever the session registered it
+    * ([[graft.GraftSession.get]], `GraftExtensions`), and the plain
+    * join answers correctly where it did not. Always-on is safe by
+    * design (the rule only touches inner joins with NO equi key and
+    * BOTH range bounds, every path bounded: static cap / skip /
     * overflow bucket) — the rules-on soak proves that suite-wide.
     */
   val rangeCountAuto = QueryDef(
     "range_join_auto",
     (s, dir) => {
-      graft.plans.RangeJoinRewrite.ensureRegistered(s)
-      graft.GraftSession.withScopedConfs(s,
-        graft.plans.RangeJoinRewrite.EnabledConf -> "true") {
-        val halfHourUs = 1800000000L
-        val ev = Tables(s, dir, "events")
-          .select(col("event_id"), expr("ts div 1000").as("tsu"))
-        val iv = ev.filter(col("event_id") % 50 === 0)
-          .select(col("event_id").as("iv_id"),
-            (col("tsu") - halfHourUs).as("lo"),
-            (col("tsu") + halfHourUs).as("hi"))
-        ev.join(iv, col("tsu") >= col("lo") && col("tsu") < col("hi"))
-          .groupBy("iv_id")
-          .agg(count(lit(1)).as("n_events"))
-      }
+      val halfHourUs = 1800000000L
+      val ev = Tables(s, dir, "events")
+        .select(col("event_id"), expr("ts div 1000").as("tsu"))
+      val iv = ev.filter(col("event_id") % 50 === 0)
+        .select(col("event_id").as("iv_id"),
+          (col("tsu") - halfHourUs).as("lo"),
+          (col("tsu") + halfHourUs).as("hi"))
+      ev.join(iv, col("tsu") >= col("lo") && col("tsu") < col("hi"))
+        .groupBy("iv_id")
+        .agg(count(lit(1)).as("n_events"))
     },
     Some("""
       WITH iv AS (

@@ -1088,10 +1088,9 @@ object Relational {
     * to the k-th, so the row_number heap could not be reused). Integer
     * quantities tie constantly, which is what makes this key prove the
     * tie contract: both engines keep all boundary ties, so output is
-    * deterministic without a total order. The enable conf is
-    * set/run/restored ([[graft.GraftSession.withScopedConfs]]); the
-    * plan shape (no Window, map-side partial rank_topk) is pinned in
-    * PlanSpec, rank-tie equality in both directions in PropertySpec.
+    * deterministic without a total order. The key sets no conf: the
+    * rewrite fires wherever the session registered it; the plan shape
+    * (no Window, map-side partial rank_topk) is pinned in PlanSpec, rank-tie equality in both directions in PropertySpec.
     * Scale: map-side partials keep (k + boundary ties) rows per
     * (order, partition) — the exchange carries O(groups·k·partitions)
     * rows instead of every line item.
@@ -1099,18 +1098,14 @@ object Relational {
   val topkRankAuto = QueryDef(
     "topk_rank_auto",
     (s, dir) => {
-      graft.plans.TopKRewrite.ensureRegistered(s)
-      graft.GraftSession.withScopedConfs(s,
-        graft.plans.TopKRewrite.EnabledConf -> "true") {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("l_orderkey")
-          .orderBy(col("l_quantity").desc)
-        Tables(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"),
-            round(col("l_quantity")).cast(LongType).as("qty"),
-            rank().over(w).as("rnk"))
-          .filter(col("rnk") <= 2)
-      }
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("l_orderkey")
+        .orderBy(col("l_quantity").desc)
+      Tables(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber"),
+          round(col("l_quantity")).cast(LongType).as("qty"),
+          rank().over(w).as("rnk"))
+        .filter(col("rnk") <= 2)
     },
     Some("""
       SELECT * FROM (
@@ -1129,18 +1124,14 @@ object Relational {
   val topkDenseRankAuto = QueryDef(
     "topk_dense_rank_auto",
     (s, dir) => {
-      graft.plans.TopKRewrite.ensureRegistered(s)
-      graft.GraftSession.withScopedConfs(s,
-        graft.plans.TopKRewrite.EnabledConf -> "true") {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("l_orderkey")
-          .orderBy(col("l_quantity").desc)
-        Tables(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"),
-            round(col("l_quantity")).cast(LongType).as("qty"),
-            dense_rank().over(w).as("drnk"))
-          .filter(col("drnk") <= 2)
-      }
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("l_orderkey")
+        .orderBy(col("l_quantity").desc)
+      Tables(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber"),
+          round(col("l_quantity")).cast(LongType).as("qty"),
+          dense_rank().over(w).as("drnk"))
+        .filter(col("drnk") <= 2)
     },
     Some("""
       SELECT * FROM (

@@ -21,17 +21,20 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * residual exact filter. Same rewrite class as the range-join
   * optimization commercial Spark platforms apply under a hint.
   *
-  * Activation (both are session confs; neither set → the rule is a
-  * strict no-op, so it stays opt-in like any join hint):
+  * Activation: always on once registered ([[graft.GraftSession.get]]
+  * or `spark.sql.extensions=graft.GraftExtensions`); the kill switch
+  * is Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.RangeJoinRewrite`
+  * (this rule's `ruleName`). The cell width:
   *   - `spark.graft.rangeJoin.binSize` > 0 — fixed cell width in the
   *     point column's own units (the r10 manual knob, still honored);
-  *   - `spark.graft.rangeJoin.enabled=true` — bin AUTO-DERIVED: from
-  *     the statically-provable interval span when the bounds share a
-  *     base expression (`b±c1` / `b±c2`, traced through Project
-  *     aliases), else from a bounded sample of interval lengths
-  *     ([[SampleRows]] rows, median — the same bounded-collect
-  *     pattern as the KNN pivot sample, `ml/Knn.scala`). A join with
-  *     no sampleable positive span is left alone.
+  *   - otherwise AUTO-DERIVED: from the statically-provable interval
+  *     span when the bounds share a base expression (`b±c1` /
+  *     `b±c2`, traced through Project aliases), else from a bounded
+  *     sample of interval lengths ([[SampleRows]] rows, median — the
+  *     same bounded-collect pattern as the KNN pivot sample,
+  *     `ml/Knn.scala`). A join with no sampleable positive span is
+  *     left alone.
   *
   * Correctness containment: the enumerated cells `[cell(lo), cell(hi)]`
   * are a SUPERSET of the cells the half-open interval touches for any
@@ -44,15 +47,14 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * original null-rejecting comparisons dropped.
   *
   * Cell-count bound (round-10 advice #1): per-interval cell
-  * enumeration is CAPPED at `spark.graft.rangeJoin.maxCells`
-  * (default [[DefaultMaxCells]]) — without it a sentinel-bounded
-  * interval (hi = Long.MaxValue, the common "no upper bound"
-  * encoding) makes Sequence throw its max-length error or OOM.
+  * enumeration is CAPPED at [[MaxCells]] — without it a
+  * sentinel-bounded interval (hi = Long.MaxValue, the common "no upper
+  * bound" encoding) makes Sequence throw its max-length error or OOM.
   *   - Statically-bounded span: span within the cap → the pure grid
   *     (no overhead); over the cap, or statically empty (hi < lo) →
   *     the join is left as written (skip, never fail).
   *   - Unknown span (bounds are data, not expressions): every row is
-  *     classified at runtime. Narrow intervals (≤ maxCells cells, and
+  *     classified at runtime. Narrow intervals (≤ MaxCells cells, and
   *     cells inside ±2^61 so the key encoding below cannot overflow
   *     under ANSI) enumerate even grid keys `2·cell`; wide/extreme
   *     intervals land in [[OverflowSalts]] odd OVERFLOW keys
@@ -72,21 +74,14 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * transformUp), and any join that already has an equi key between
   * the two sides is left alone — Spark's hash joins handle those fine
   * with the range as a post-scan filter. Because every path is
-  * bounded (cap, skip, or overflow bucket), leaving the confs set on
-  * a shared session can no longer turn a later slow-but-working
-  * nested-loop query into a failure (round-10 advice #1's second
-  * half).
-  *
-  * Registration: `spark.sql.extensions=graft.GraftExtensions` injects
-  * it at session build; [[ensureRegistered]] adds it to a live
-  * session's experimental optimizer rules (tests, REPLs).
+  * bounded (cap, skip, or overflow bucket), an always-on rule can
+  * never turn a slow-but-working nested-loop query into a failure
+  * (round-10 advice #1's second half).
   */
-object RangeJoinRewrite extends Rule[LogicalPlan] {
+object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   val BinConf = "spark.graft.rangeJoin.binSize"
-  val EnabledConf = "spark.graft.rangeJoin.enabled"
-  val MaxCellsConf = "spark.graft.rangeJoin.maxCells"
-  val DefaultMaxCells = 4096L
+  val MaxCells = 4096L
 
   /** Overflow buckets for runtime-wide intervals: enough to spread the
     * residual all-pairs work across a local[32]'s cores (a cluster
@@ -98,7 +93,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
   val SampleRows = 10000
 
   /** Grid cells outside ±2^61 route to the overflow bucket so the
-    * `2·cell` key encoding and the ±maxCells span arithmetic can never
+    * `2·cell` key encoding and the ±MaxCells span arithmetic can never
     * overflow a Long (ANSI mode would throw). */
   private val MaxAbsCell = 1L << 61
 
@@ -107,10 +102,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ RangeJoinRewrite
 
-  private def confLong(key: String, dflt: Long): Long =
-    try SQLConf.get.getConfString(key, dflt.toString).toLong
-    catch { case _: NumberFormatException => dflt }
-
   /** Re-entrance guard: the auto-bin sample is itself a Spark query
     * whose optimization runs this rule; without the guard a sample
     * containing a matching join would recurse. */
@@ -118,22 +109,16 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
     override def initialValue(): Boolean = false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (sampling.get()) return plan
-    val fixedBin = confLong(BinConf, 0L)
-    val auto =
-      SQLConf.get.getConfString(EnabledConf, "false").equalsIgnoreCase("true")
-    if (fixedBin <= 0 && !auto) plan
-    else plan.transformUp {
-      case j @ Join(_, _, Inner, Some(_), _) =>
-        rewrite(j, if (fixedBin > 0) Some(fixedBin) else None).getOrElse(j)
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (sampling.get()) plan
+    else {
+      val bin =
+        try Some(SQLConf.get.getConfString(BinConf, "0").toLong).filter(_ > 0)
+        catch { case _: NumberFormatException => None }
+      plan.transformUp {
+        case j @ Join(_, _, Inner, Some(_), _) => rewrite(j, bin).getOrElse(j)
+      }
     }
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
-  }
 
   /** Both canonical orientations (point expr, bound expr, isLower) of a
     * comparison conjunct whose two sides reference the two different
@@ -308,7 +293,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
   private def rewrite(j: Join, fixedBin: Option[Long]): Option[LogicalPlan] = {
     val (left, right) = (j.left, j.right)
     val cond = j.condition.get
-    val conjuncts = splitConjuncts(cond)
+    val conjuncts = splitConjunctivePredicates(cond)
     // a usable equi key means Spark already has a hash-join shape —
     // leave the join alone (and this also makes the rule idempotent:
     // the rewritten join carries a cell equi-conjunct). Both sides
@@ -340,7 +325,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
     candidates.headOption.flatMap { case (pt, lo, hi) =>
       val ptOnLeft = pt.references.subsetOf(left.outputSet)
       val (pointChild, ivChild) = if (ptOnLeft) (left, right) else (right, left)
-      val maxCells = math.max(1L, confLong(MaxCellsConf, DefaultMaxCells))
       val span = staticSpan(dealias(lo, ivChild), dealias(hi, ivChild))
       // bin choice: explicit conf > provable span (2 cells/interval)
       // > sampled median (2-3 cells for typical intervals)
@@ -350,11 +334,11 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
       bin.flatMap { b =>
         span match {
           case Some(s) if s < 0 => None // statically empty join; leave it
-          case Some(s) if s / b + 2 <= maxCells =>
+          case Some(s) if s / b + 2 <= MaxCells =>
             Some(pureGrid(j, pt, lo, hi, b, pointChild, ivChild, ptOnLeft))
           case Some(_) => None // provably over the cap for this bin: skip
           case None =>
-            Some(overflowGrid(j, pt, lo, hi, b, maxCells, pointChild,
+            Some(overflowGrid(j, pt, lo, hi, b, pointChild,
               ivChild, ptOnLeft))
         }
       }
@@ -401,7 +385,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
     * unclassifiable. Original predicates stay as the residual exact
     * filter, so the classification can only cost time, never rows. */
   private def overflowGrid(j: Join, pt: Expression, lo: Expression,
-      hi: Expression, bin: Long, maxCells: Long, pointChild: LogicalPlan,
+      hi: Expression, bin: Long, pointChild: LogicalPlan,
       ivChild: LogicalPlan, ptOnLeft: Boolean): LogicalPlan = {
     val cond = j.condition.get
     val ptCell = AttributeReference("__graft_pt_cell", LongType)()
@@ -431,11 +415,11 @@ object RangeJoinRewrite extends Rule[LogicalPlan] {
     val cLo = cellOf(lo, bin)
     val cHi = cellOf(hi, bin)
     // strict <: cHi-cLo = d enumerates d+1 cells, so the inclusive form
-    // admitted maxCells+1 — one over the documented cap and inconsistent
-    // with the static path's s/b+2 <= maxCells bound (r11 advice #3)
+    // admitted MaxCells+1 — one over the documented cap and inconsistent
+    // with the static path's s/b+2 <= MaxCells bound (r11 advice #3)
     val narrow = And(And(inRange(cLo), inRange(cHi)),
       And(GreaterThanOrEqual(cHi, cLo),
-        LessThan(Subtract(cHi, cLo), Literal(maxCells))))
+        LessThan(Subtract(cHi, cLo), Literal(MaxCells))))
     val narrowSeq = seqTz(Multiply(cLo, Literal(2L)),
       Multiply(cHi, Literal(2L)), Some(Literal(2L)))
     val wideSeq = seqTz(Literal(1L), Literal(2L * OverflowSalts - 1),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.IntegerType
 
 /** Auto top-k rewrite — the second whole-plan optimizer extension
@@ -59,37 +58,29 @@ import org.apache.spark.sql.types.IntegerType
   * rank() bound must keep every row order-equal to the k-th, a
   * dense_rank() bound the k smallest distinct keys, so the arbitrary-
   * subset heap would be wrong); the filter carries at least one UPPER
-  * bound by a positive integer literal ≤ `spark.graft.topkRewrite.maxK`
-  * (default [[DefaultMaxK]] — beyond that a per-group heap stops being
-  * obviously better than the sort); the plan is batch (streaming
-  * keeps Spark's stateful machinery). Pagination (`rank BETWEEN a AND
-  * b`, a > 1; `rank = n`) rewrites too: the heap is sized by the upper
-  * bound and the remaining rank predicate filters the rebuilt rank
-  * column — the exchange still carries O(groups·b·partitions) rows.
-  * Activation: `spark.graft.topkRewrite.enabled=true` — opt-in like
-  * the range-join hint, and inert otherwise.
+  * bound by a positive integer literal ≤ [[MaxK]] (beyond that a
+  * per-group heap stops being obviously better than the sort); the
+  * plan is batch (streaming keeps Spark's stateful machinery).
+  * Pagination (`rank BETWEEN a AND b`, a > 1; `rank = n`) rewrites
+  * too: the heap is sized by the upper bound and the remaining rank
+  * predicate filters the rebuilt rank column — the exchange still
+  * carries O(groups·b·partitions) rows.
+  * Activation: always on once registered ([[graft.GraftSession.get]] or
+  * `spark.sql.extensions=graft.GraftExtensions`); the kill switch is
+  * Spark's own `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite`
+  * (this rule's `ruleName`).
   */
-object TopKRewrite extends Rule[LogicalPlan] {
+object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  val EnabledConf = "spark.graft.topkRewrite.enabled"
-  val MaxKConf = "spark.graft.topkRewrite.maxK"
-  val DefaultMaxK = 1024L
+  val MaxK = 1024L
 
   def ensureRegistered(s: SparkSession): Unit =
     if (!s.experimental.extraOptimizations.contains(TopKRewrite))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ TopKRewrite
 
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(EnabledConf, "false").equalsIgnoreCase("true")
-
-  private def maxK: Long =
-    try SQLConf.get.getConfString(MaxKConf, DefaultMaxK.toString).toLong
-    catch { case _: NumberFormatException => DefaultMaxK }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) plan
-    else plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp {
       case f @ Filter(cond, w: Window) =>
         rewrite(cond, w).getOrElse(f)
       // `Filter(Project(Window))` — the shape a `.select(...)` between
@@ -101,7 +92,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
       // exprIds), and re-apply the Project on top. Catalyst's own
       // PushDownPredicates usually normalizes this shape away before
       // extraOptimizations run, but not always (non-deterministic
-      // sibling columns block the push; a standalone ensureRegistered
+      // sibling columns block the push; a direct `TopKRewrite(plan)`
       // caller may hand us an un-normalized plan) — a computing
       // Project keeps the Window untouched.
       case f @ Filter(cond, Project(projList, w: Window))
@@ -120,12 +111,6 @@ object TopKRewrite extends Rule[LogicalPlan] {
           .map(r => Project(projList, r))
           .getOrElse(f)
     }
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
-  }
 
   private def intLit(e: Expression): Option[Long] = e match {
     case Literal(v: Number, dt) if dt == IntegerType ||
@@ -206,7 +191,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
       val rankAttr = alias.toAttribute
       // trivially-true lower bounds (rank >= 1, the BETWEEN 1 AND k
       // spelling) drop out entirely — neither a bound nor a residual
-      val conjuncts = splitConjuncts(cond)
+      val conjuncts = splitConjunctivePredicates(cond)
         .filterNot(c => trivialRankLower(c, rankAttr))
       val bounds = conjuncts.flatMap(c => rankBound(c, rankAttr).map(_._1))
       val residual =
@@ -220,7 +205,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
       // filter exactly. Only an upper bound within the heap cap is
       // required.
       val kOpt = Some(bounds).filter(_.nonEmpty).map(_.min)
-        .filter(k => k >= 1 && k <= math.min(maxK, Int.MaxValue.toLong))
+        .filter(k => k >= 1 && k <= MaxK)
       kOpt.map(buildPlan(w, alias, rankAttr, residual, _, mode))
     }
   }

@@ -760,7 +760,6 @@ class ExtSpec extends SparkSpec {
       "domain: desc order, duplicate scores, nulls, small groups, " +
       "residual filter conjuncts") {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.TopKRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     // groups of very different sizes; v has nulls and heavy duplicates
@@ -778,44 +777,43 @@ class ExtSpec extends SparkSpec {
     def got() = q().collect()
       .map(r => (r.getInt(0), if (r.isNullAt(1)) -1 else r.getInt(1),
         r.getLong(2), r.getInt(3))).toSet
-    spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    // k = 1 via equality predicate
+    def q1() = df.withColumn("rank",
+        org.apache.spark.sql.functions.row_number().over(w))
+      .filter(col("rank") === 1).select("g", "id")
+    // ORDER BY includes the PARTITION column (constant per group →
+    // an extra heap slot, not a payload slot): equality must hold
+    val wp = Window.partitionBy("g")
+      .orderBy(col("g").desc, col("v").asc_nulls_last, col("id"))
+    def qp() = df.withColumn("rank",
+        org.apache.spark.sql.functions.row_number().over(wp))
+      .filter(col("rank") <= 2)
+    // degenerate shape: the window child is ONLY the partition column
+    val wg = Window.partitionBy("g").orderBy(col("g"))
+    def qg() = df.select("g").withColumn("rank",
+        org.apache.spark.sql.functions.row_number().over(wg))
+      .filter(col("rank") <= 2)
+    // pagination (r12): the heap is sized by the upper bound, the
+    // lower bound survives as a residual over the rebuilt rank
+    def page() = df.withColumn("rank",
+        org.apache.spark.sql.functions.row_number().over(w))
+      .filter(col("rank") <= 5 && col("rank") > 2)
+    // controls: every shape with the rule excluded
     val control = got()
     assert(control.nonEmpty)
-    try {
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
+    val c1 = q1().collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+    val cp = qp().collect().map(_.toSeq).toSet
+    val cg = qg().collect().map(_.toSeq).toSet
+    val pageControl = page().collect().map(_.toSeq).toSet
+    withRules(graft.plans.TopKRewrite) {
       val plan = q().queryExecution.optimizedPlan.toString
       assert(plan.contains("row_topk") && !plan.contains("window"),
         "rewrite must fire:\n" + plan.take(1200))
       assert(got() == control,
         s"missing=${(control -- got()).take(3)} extra=${(got() -- control).take(3)}")
-      // k = 1 via equality predicate
-      def q1() = df.withColumn("rank",
-          org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("rank") === 1).select("g", "id")
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val c1 = q1().collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
       assert(q1().collect().map(r => (r.getInt(0), r.getLong(1))).toSet == c1)
-      // ORDER BY includes the PARTITION column (constant per group →
-      // an extra heap slot, not a payload slot): equality must hold
-      val wp = Window.partitionBy("g")
-        .orderBy(col("g").desc, col("v").asc_nulls_last, col("id"))
-      def qp() = df.withColumn("rank",
-          org.apache.spark.sql.functions.row_number().over(wp))
-        .filter(col("rank") <= 2)
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val cp = qp().collect().map(_.toSeq).toSet
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
       assert(qp().queryExecution.optimizedPlan.toString.contains("row_topk"))
       assert(qp().collect().map(_.toSeq).toSet == cp)
-      // degenerate shape: the window child is ONLY the partition column
-      val wg = Window.partitionBy("g").orderBy(col("g"))
-      def qg() = df.select("g").withColumn("rank",
-          org.apache.spark.sql.functions.row_number().over(wg))
-        .filter(col("rank") <= 2)
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val cg = qg().collect().map(_.toSeq).toSet
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
       assert(qg().collect().map(_.toSeq).toSet == cg)
       // rank() routes to the TIE-KEEPING aggregate (r11), never the
       // arbitrary-subset heap — ties share ranks
@@ -824,32 +822,23 @@ class ExtSpec extends SparkSpec {
         .filter(col("rank") <= 3)
       assert(!rk.queryExecution.optimizedPlan.toString.contains("row_topk"),
         "rank() must take rank_topk, not the row_number heap")
-      // pagination (r12): the heap is sized by the upper bound, the
-      // lower bound survives as a residual over the rebuilt rank
-      def page() = df.withColumn("rank",
-          org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("rank") <= 5 && col("rank") > 2)
       val pStr = page().queryExecution.optimizedPlan.toString
       assert(pStr.contains("row_topk") && pStr.contains("rank") &&
         pStr.contains("> 2"), "pagination must rewrite with a residual:\n" +
         pStr.take(1200))
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val pageControl = page().collect().map(_.toSeq).toSet
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
       assert(page().collect().map(_.toSeq).toSet == pageControl)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    }
   }
 
   test("topk_cosine_auto (window form + rewrite) equals the hand-built " +
       "bounded-heap key") {
-    val auto = graft.ext.Similarity.topkCosineAuto.fn(spark, sf)
+    val auto = withRules(graft.plans.TopKRewrite)(
+      graft.ext.Similarity.topkCosineAuto.fn(spark, sf).collect()
+        .map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet)
+    val hand = graft.ext.Similarity.topkCosine.fn(spark, sf)
       .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
-    try {
-      val hand = graft.ext.Similarity.topkCosine.fn(spark, sf)
-        .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
-      assert(auto == hand)
-      assert(auto.nonEmpty)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    assert(auto == hand)
+    assert(auto.nonEmpty)
   }
 
   test("brute-force top-k: rank 1 of a reference vector vs itself is itself") {

@@ -113,6 +113,17 @@ class GuardSpec extends SparkSpec {
     val part = spark.read.parquet(s"$tmp/part.parquet")
     assert(Tables.estimateScanPartitions(
       part.filter(col("p") === 0)).isEmpty)
+    // the estimate is the planned scan's own partition count, for every
+    // sf0.001 table and the multi-file rewrite
+    def plannedScanPartitions(df: org.apache.spark.sql.DataFrame): Long =
+      df.queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.inputRDD.getNumPartitions.toLong
+      }.sum
+    (Tables.names.map(Tables(spark, sf, _)) :+ multi).foreach { df =>
+      assert(Tables.estimateScanPartitions(df)
+        .contains(plannedScanPartitions(df)), df.inputFiles.mkString(","))
+    }
   }
 
   test("knn_predict_udf refuses an over-cap reference collect, naming " +
@@ -473,10 +484,9 @@ class GuardSpec extends SparkSpec {
   test("range-join rewrite skips non-integral point types and joins " +
       "that already have an equi key") {
     import org.apache.spark.sql.functions.col
-    graft.plans.RangeJoinRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
-    try {
+    try withRules(graft.plans.RangeJoinRewrite) {
       spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
       // double-typed point: integer grid arithmetic doesn't apply —
       // the rule must leave the join alone (still correct, still BNLJ)
@@ -510,7 +520,6 @@ class GuardSpec extends SparkSpec {
     // intervals now route to the salted overflow bucket: same single
     // equi-join, exact results, no failure path.
     import org.apache.spark.sql.functions.col
-    graft.plans.RangeJoinRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     val pts = (-300L to 300L).map(i => i * 7L).toDF("pt")
@@ -522,10 +531,9 @@ class GuardSpec extends SparkSpec {
         .select("id", "pt").collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSet
     spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
-    spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
     val brute = run()
     assert(brute.count(_._1 == 3) == 601, "sentinel interval matches all")
-    try {
+    try withRules(graft.plans.RangeJoinRewrite) {
       // fixed bin, data-dependent span → runtime narrow/wide split
       spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
       val df = pts.join(ivs,
@@ -536,18 +544,13 @@ class GuardSpec extends SparkSpec {
       assert(run() == brute)
       // auto mode (no bin conf): sampled median drives the bin
       spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
-      spark.conf.set(graft.plans.RangeJoinRewrite.EnabledConf, "true")
       assert(run() == brute)
-    } finally {
-      spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
-      spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
-    }
+    } finally spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
   }
 
   test("range-join rewrite: a statically over-cap span skips the rewrite " +
       "instead of exploding cells") {
     import org.apache.spark.sql.functions.col
-    graft.plans.RangeJoinRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     val pts = Seq(5L, 500000L).toDF("pt")
@@ -561,7 +564,7 @@ class GuardSpec extends SparkSpec {
       (col("id") * 1000L).as("base"),
       (col("id") * 1000L - 1L).as("lo"),
       (col("id") * 1000L + 999999999L).as("hi"))
-    try {
+    try withRules(graft.plans.RangeJoinRewrite) {
       spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "1")
       val df = pts.join(ivs, col("pt") >= col("lo") && col("pt") < col("hi"))
       assert(!df.queryExecution.optimizedPlan.toString
@@ -629,40 +632,30 @@ class GuardSpec extends SparkSpec {
     graft.Work.clean(snap); graft.Work.clean(snap + ".old")
   }
 
-  test("withScopedConfs: opt-in rewrite confs are restored after the " +
-      "call, including on exception (r11 punch #4)") {
-    val tk = graft.plans.TopKRewrite.EnabledConf
-    val rj = graft.plans.RangeJoinRewrite.EnabledConf
-    spark.conf.unset(tk); spark.conf.unset(rj)
-    // the two auto keys call through withScopedConfs: after building
-    // the DataFrame the session conf must be back to unset, and the
-    // returned plan must still be the REWRITTEN one (optimized eagerly
-    // under the conf, baked into the returned logical plan)
-    val topk = graft.ext.Similarity.topkCosineAuto.fn(spark, sf)
-    assert(spark.conf.getOption(tk).isEmpty,
-      "topk_cosine_auto must not leave its enable conf set")
-    assert(topk.queryExecution.executedPlan.toString.contains("row_topk"))
-    val rng = graft.ops.RangeJoin.rangeCountAuto.fn(spark, sf)
-    assert(spark.conf.getOption(rj).isEmpty,
-      "range_join_auto must not leave its enable conf set")
-    val rs = rng.queryExecution.executedPlan.toString
-    assert(!rs.contains("BroadcastNestedLoopJoin") &&
-      !rs.contains("CartesianProduct"), rs.take(1500))
-    // exception path: the body throws -> conf still restored
-    intercept[RuntimeException] {
-      GraftSession.withScopedConfs(spark, tk -> "true") {
-        assert(spark.conf.get(tk) == "true")
-        throw new RuntimeException("boom")
-      }
+  test("auto keys leave the caller's session as they found it: " +
+      "building each *_auto key changes no conf and registers no rule") {
+    val autos = Seq(graft.ext.Similarity.topkCosineAuto,
+      graft.ext.Similarity.topkPagedAuto, graft.ops.Relational.topkRankAuto,
+      graft.ops.Relational.topkDenseRankAuto, graft.ops.RangeJoin.rangeCountAuto)
+    val confs0 = spark.conf.getAll
+    val rules0 = spark.experimental.extraOptimizations
+    // an unregistered session: a key must not register a rule itself
+    spark.experimental.extraOptimizations = Nil
+    try autos.foreach { q =>
+      q.fn(spark, sf)
+      assert(spark.conf.getAll == confs0, s"${q.name} changed a conf")
+      assert(spark.experimental.extraOptimizations.isEmpty,
+        s"${q.name} registered " + spark.experimental.extraOptimizations)
+    } finally spark.experimental.extraOptimizations = rules0
+    // where the session registered the rules, the plans rewrite
+    withRules(SparkSpec.graftRules: _*) {
+      val topk = graft.ext.Similarity.topkCosineAuto.fn(spark, sf)
+      assert(topk.queryExecution.executedPlan.toString.contains("row_topk"))
+      val rng = graft.ops.RangeJoin.rangeCountAuto.fn(spark, sf)
+      val rs = rng.queryExecution.executedPlan.toString
+      assert(!rs.contains("BroadcastNestedLoopJoin") &&
+        !rs.contains("CartesianProduct"), rs.take(1500))
     }
-    assert(spark.conf.getOption(tk).isEmpty,
-      "conf must be restored when the body throws")
-    // a PRE-EXISTING value is restored, not blown away
-    spark.conf.set(tk, "false")
-    GraftSession.withScopedConfs(spark, tk -> "true")(spark.range(1).toDF())
-    assert(spark.conf.get(tk) == "false",
-      "a caller's own conf value must be restored, not unset")
-    spark.conf.unset(tk)
   }
 
   test("Work.publish: a failed stage leaves only sweepable scr_ " +

@@ -373,7 +373,6 @@ class PlanSpec extends SparkSpec {
   test("range-join rewrite: hinted inequality join plans as an equi-join, " +
       "unhinted stays a nested loop") {
     import org.apache.spark.sql.functions.col
-    graft.plans.RangeJoinRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     val pts = (0L to 1000L).map(i => i * 7L).toDF("pt")
@@ -387,19 +386,21 @@ class PlanSpec extends SparkSpec {
     val unhinted = planOfJoin()
     assert(unhinted.contains("BroadcastNestedLoopJoin") ||
       unhinted.contains("CartesianProduct"),
-      "negative control: without the hint Spark has no equi key:\n" +
+      "negative control: without the rule Spark has no equi key:\n" +
         unhinted.take(1200))
-    try {
-      spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
-      val hinted = planOfJoin()
-      assert(!hinted.contains("BroadcastNestedLoopJoin") &&
-        !hinted.contains("CartesianProduct"),
-        "hinted range join must rewrite to the grid equi-join:\n" +
+    withRules(graft.plans.RangeJoinRewrite) {
+      try {
+        spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
+        val hinted = planOfJoin()
+        assert(!hinted.contains("BroadcastNestedLoopJoin") &&
+          !hinted.contains("CartesianProduct"),
+          "hinted range join must rewrite to the grid equi-join:\n" +
+            hinted.take(1200))
+        assert(hinted.contains("__graft_pt_cell") ||
+          hinted.contains("HashJoin") || hinted.contains("SortMergeJoin"),
           hinted.take(1200))
-      assert(hinted.contains("__graft_pt_cell") ||
-        hinted.contains("HashJoin") || hinted.contains("SortMergeJoin"),
-        hinted.take(1200))
-    } finally spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
+      } finally spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
+    }
   }
 
   test("auto range-join (no bin conf): static span drives the bin — grid " +
@@ -409,20 +410,18 @@ class PlanSpec extends SparkSpec {
     // time: the rule must take the pure-grid path (point side is a
     // plain projection; exactly ONE Generate — the interval side's
     // two-cell enumeration), not the runtime overflow classification.
-    val s = planString(graft.ops.RangeJoin.rangeCountAuto.fn(spark, sf))
-    try {
-      assert(!s.contains("BroadcastNestedLoopJoin") &&
-        !s.contains("CartesianProduct"),
-        "auto range join must rewrite to the grid equi-join:\n" + s.take(1500))
-      assert(s.contains("__graft_pt_cell"), s.take(1500))
-      // overflow-path fingerprint: the salted probe hashes the point —
-      // the static path must not pay it (point side stays a projection)
-      assert(!s.contains("pmod(hash("),
-        "static-span path must not add the overflow probes:\n" + s.take(2000))
-      assert(s.contains("BroadcastHashJoin") || s.contains("SortMergeJoin") ||
-        s.contains("ShuffledHashJoin"), s.take(2000))
-    } finally
-      spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
+    val s = withRules(graft.plans.RangeJoinRewrite)(
+      planString(graft.ops.RangeJoin.rangeCountAuto.fn(spark, sf)))
+    assert(!s.contains("BroadcastNestedLoopJoin") &&
+      !s.contains("CartesianProduct"),
+      "auto range join must rewrite to the grid equi-join:\n" + s.take(1500))
+    assert(s.contains("__graft_pt_cell"), s.take(1500))
+    // overflow-path fingerprint: the salted probe hashes the point —
+    // the static path must not pay it (point side stays a projection)
+    assert(!s.contains("pmod(hash("),
+      "static-span path must not add the overflow probes:\n" + s.take(2000))
+    assert(s.contains("BroadcastHashJoin") || s.contains("SortMergeJoin") ||
+      s.contains("ShuffledHashJoin"), s.take(2000))
   }
 
   test("auto top-k rewrite: the user's row_number window plan becomes the " +
@@ -432,22 +431,20 @@ class PlanSpec extends SparkSpec {
     // naive window form shuffles EVERY scored row to its group and
     // sorts; the rewritten plan partial-aggregates k rows per (group,
     // partition) before the exchange and never sorts a group.
-    val s = planString(graft.ext.Similarity.topkCosineAuto.fn(spark, sf))
-    try {
-      assert(!s.contains("Window"),
-        "rewritten plan must not contain a Window operator:\n" + s.take(2000))
-      assert(s.contains("partial_row_topk"),
-        "top-k must partial-aggregate map-side:\n" + s.take(2000))
-      assert(s.contains("row_topk"), s.take(2000))
-      // negative control: conf off → the Window (plus Spark's own
-      // WindowGroupLimit) executes as written
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val (q, r) = graft.ext.Similarity.split(spark, sf)
-      val c = planString(
-        graft.ext.Similarity.bruteForceTopKWindow(q, r, 10))
-      assert(c.contains("Window"), c.take(2000))
-      assert(!c.contains("row_topk"), c.take(2000))
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    val s = withRules(graft.plans.TopKRewrite)(
+      planString(graft.ext.Similarity.topkCosineAuto.fn(spark, sf)))
+    assert(!s.contains("Window"),
+      "rewritten plan must not contain a Window operator:\n" + s.take(2000))
+    assert(s.contains("partial_row_topk"),
+      "top-k must partial-aggregate map-side:\n" + s.take(2000))
+    assert(s.contains("row_topk"), s.take(2000))
+    // negative control: rule excluded → the Window (plus Spark's own
+    // WindowGroupLimit) executes as written
+    val (q, r) = graft.ext.Similarity.split(spark, sf)
+    val c = planString(
+      graft.ext.Similarity.bruteForceTopKWindow(q, r, 10))
+    assert(c.contains("Window"), c.take(2000))
+    assert(!c.contains("row_topk"), c.take(2000))
   }
 
   test("DSIR: the weight pass is map-only (no hash exchange, no join, " +
@@ -480,12 +477,8 @@ class PlanSpec extends SparkSpec {
     // pass (no join), and under the rewrite the row_number window
     // becomes the bounded per-group heap — ≤ sources×k rows per
     // partition into one exchange, never a corpus sort
-    graft.plans.TopKRewrite.ensureRegistered(spark)
-    val q = graft.GraftSession.withScopedConfs(spark,
-        graft.plans.TopKRewrite.EnabledConf -> "true") {
-      graft.ext.Dsir.dsirQuota.fn(spark, sf)
-    }
-    val qstr = planString(q)
+    val qstr = withRules(graft.plans.TopKRewrite)(
+      planString(graft.ext.Dsir.dsirQuota.fn(spark, sf)))
     assert(!qstr.contains("Join"),
       "quota must not join back to the corpus:\n" + qstr.take(2000))
     val qFinal = qstr.split("== Initial Plan ==").head
@@ -547,12 +540,11 @@ class PlanSpec extends SparkSpec {
       .partitionBy("g").orderBy(col("v").desc, col("id").asc)
     val ranked = df.withColumn("rank", row_number().over(w))
     def hasWindow(p: LogicalPlan) = p.exists(_.isInstanceOf[LWindow])
-    // control rows BEFORE the conf goes on (plain window execution)
+    // control rows with the rule excluded (plain window execution)
     val expect = ranked.filter(col("rank") <= 2)
       .select(col("g"), col("id")).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet
-    spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
-    try {
+    withRules(graft.plans.TopKRewrite) {
       // rename + reorder + drop: rnk aliases rank, v is dropped
       val aliased = ranked
         .select(col("rank").as("rnk"), col("id"), col("g").as("grp"))
@@ -577,12 +569,12 @@ class PlanSpec extends SparkSpec {
       val cshape = CollapseProject(computing.queryExecution.analyzed)
       assert(hasWindow(graft.plans.TopKRewrite(cshape)),
         "computing Project must not rewrite")
-      // end-to-end: the df-API spelling stays correct under the conf
+      // end-to-end: the df-API spelling stays correct under the rule
       // (whichever normalization path handles it first)
       val got = aliased.select(col("grp"), col("id")).collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSet
       assert(got == expect)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    }
   }
 
   test("top-k rewrite negative space: a CHAINED Project between the " +
@@ -610,8 +602,7 @@ class PlanSpec extends SparkSpec {
       .select(col("g"), col("id")).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet
     def hasWindow(p: LogicalPlan) = p.exists(_.isInstanceOf[LWindow])
-    spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
-    try {
+    withRules(graft.plans.TopKRewrite) {
       val chained = ranked
         .select(col("rank").as("rnk"), col("id"), col("g"))
         .select(col("rnk"), col("id"), col("g").as("grp"))
@@ -624,13 +615,13 @@ class PlanSpec extends SparkSpec {
       assert(hasWindow(graft.plans.TopKRewrite(shape)),
         "chained Project must NOT rewrite:\n" +
           graft.plans.TopKRewrite(shape).treeString.take(2000))
-      // and the spelling stays CORRECT end-to-end under the conf,
+      // and the spelling stays CORRECT end-to-end under the rule,
       // whichever normalization path (CollapseProject + one-deep match,
       // or plain window exec) handles it
       val got = chained.select(col("grp"), col("id")).collect()
         .map(r => (r.getInt(0), r.getLong(1))).toSet
       assert(got == expect)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    }
   }
 
   test("pagination top-k rewrite: rank BETWEEN a AND b (a > 1) becomes " +
@@ -639,8 +630,8 @@ class PlanSpec extends SparkSpec {
     // rank-referencing residual); now the heap keeps the top b rows per
     // group and the page filter runs over the rebuilt rank column — the
     // exchange carries O(groups·b·partitions) rows either way.
-    val s = planString(graft.ext.Similarity.topkPagedAuto.fn(spark, sf))
-    try {
+    withRules(graft.plans.TopKRewrite) {
+      val s = planString(graft.ext.Similarity.topkPagedAuto.fn(spark, sf))
       assert(!s.contains("Window"),
         "paged plan must not contain a Window operator:\n" + s.take(2000))
       assert(s.contains("partial_row_topk"),
@@ -655,7 +646,7 @@ class PlanSpec extends SparkSpec {
       assert(ks.nonEmpty && ks.forall(r =>
         r >= graft.ext.Similarity.K + 1 && r <= 2 * graft.ext.Similarity.K),
         s"ranks out of page: ${ks.distinct.sorted.mkString(",")}")
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    }
   }
 
   test("rank-family top-k rewrite: rank()/dense_rank() bounds become the " +
@@ -663,14 +654,13 @@ class PlanSpec extends SparkSpec {
     // r11 punch #1: the rank spelling of top-k-per-group previously
     // executed as the full window (Spark's InferWindowGroupLimit bounds
     // the sort but every scored row still crosses the exchange)
-    val sRank = planString(
-      graft.ops.Relational.topkRankAuto.fn(spark, sf))
+    val (sRank, sDense) = withRules(graft.plans.TopKRewrite)((
+      planString(graft.ops.Relational.topkRankAuto.fn(spark, sf)),
+      planString(graft.ops.Relational.topkDenseRankAuto.fn(spark, sf))))
     assert(!sRank.contains("Window"),
       "rank() bound must rewrite away the Window:\n" + sRank.take(2000))
     assert(sRank.contains("partial_rank_topk"),
       "rank top-k must partial-aggregate map-side:\n" + sRank.take(2000))
-    val sDense = planString(
-      graft.ops.Relational.topkDenseRankAuto.fn(spark, sf))
     assert(!sDense.contains("Window"), sDense.take(2000))
     assert(sDense.contains("dense_rank_topk"), sDense.take(2000))
     // tie semantics visible in cardinality: with integer quantities,
@@ -684,9 +674,9 @@ class PlanSpec extends SparkSpec {
     val rowNum2 = Tables(spark, sf, "lineitem")
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
       .count()
-    val rank2 = graft.ops.Relational.topkRankAuto.fn(spark, sf).count()
-    val dense2 =
-      graft.ops.Relational.topkDenseRankAuto.fn(spark, sf).count()
+    val (rank2, dense2) = withRules(graft.plans.TopKRewrite)((
+      graft.ops.Relational.topkRankAuto.fn(spark, sf).count(),
+      graft.ops.Relational.topkDenseRankAuto.fn(spark, sf).count()))
     assert(rank2 > rowNum2,
       s"ties must survive the rank bound: rank2=$rank2 rowNum2=$rowNum2")
     assert(dense2 >= rank2, s"dense2=$dense2 rank2=$rank2")
@@ -697,7 +687,6 @@ class PlanSpec extends SparkSpec {
     // the engine claim: a user writing plain SQL top-k-per-group gets
     // the bounded-heap plan too — and PARTITION BY an expression (not a
     // column) groups correctly through the Aggregate
-    graft.plans.TopKRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     (0 until 200).map(i => (i % 10, (i * 7) % 23, i.toLong))
@@ -708,16 +697,14 @@ class PlanSpec extends SparkSpec {
       WHERE rn <= 2"""
     def got() = spark.sql(sql).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-    try {
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val control = got()
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
+    val control = got()
+    withRules(graft.plans.TopKRewrite) {
       val s = planString(spark.sql(sql))
       assert(s.contains("row_topk") && !s.contains("Window"),
         "SQL-form top-k must rewrite:\n" + s.take(1500))
       assert(got() == control)
       assert(control.map(_._4).max == 2 && control.nonEmpty)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    }
   }
 
   test("dist_drift_ks: per-value counts combine map-side before the " +
@@ -743,7 +730,6 @@ class PlanSpec extends SparkSpec {
       "re-optimizing the same query launches no new sample job " +
       "(r11 advice #1)") {
     import org.apache.spark.sql.functions.col
-    graft.plans.RangeJoinRewrite.ensureRegistered(spark)
     graft.plans.RangeJoinRewrite.clearSampleCache()
     val sp = spark
     import sp.implicits._
@@ -754,8 +740,7 @@ class PlanSpec extends SparkSpec {
       .toDF("lo", "hi", "id")
     def q() = pts.join(ivs,
       col("pt") >= col("lo") && col("pt") < col("hi"))
-    try {
-      spark.conf.set(graft.plans.RangeJoinRewrite.EnabledConf, "true")
+    try withRules(graft.plans.RangeJoinRewrite) {
       val df1 = q()
       df1.queryExecution.optimizedPlan
       // the fixed-point optimizer batch visits the matching join
@@ -775,17 +760,13 @@ class PlanSpec extends SparkSpec {
         "sampled-bin path must rewrite to the grid equi-join:\n" +
           s1.take(1200))
       assert(df1.count() == 450L)
-    } finally {
-      spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
-      graft.plans.RangeJoinRewrite.clearSampleCache()
-    }
+    } finally graft.plans.RangeJoinRewrite.clearSampleCache()
   }
 
   test("rank-family rewrite fires on the SQL text form and keeps SQL " +
       "tie semantics") {
     // the user-facing claim: plain SQL "top 2 per group WITH TIES"
     // (rank() <= 2) gets the tie-keeping aggregate plan too
-    graft.plans.TopKRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     (0 until 300).map(i => (i % 10, (i * 7) % 5, i.toLong))
@@ -796,10 +777,8 @@ class PlanSpec extends SparkSpec {
       WHERE rnk <= 2"""
     def got() = spark.sql(sql).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-    try {
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val control = got()
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
+    val control = got()
+    withRules(graft.plans.TopKRewrite) {
       val pstr = planString(spark.sql(sql))
       assert(pstr.contains("rank_topk") && !pstr.contains("Window"),
         "SQL-form rank top-k must rewrite:\n" + pstr.take(1500))
@@ -807,12 +786,11 @@ class PlanSpec extends SparkSpec {
       // a 5-value domain over 30 rows/group ties constantly: every
       // boundary tie group must survive whole (> 2 rows per group)
       assert(control.groupBy(_._1).values.forall(_.size > 2))
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    }
   }
 
   test("top-k rewrite: BETWEEN 1 AND k rewrites (trivial lower bound " +
       "dropped); BETWEEN 2 AND 4 pagination rewrites with a residual") {
-    graft.plans.TopKRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     (0 until 200).map(i => (i % 8, (i * 11) % 31, i.toLong))
@@ -823,11 +801,10 @@ class PlanSpec extends SparkSpec {
       WHERE $pred"""
     def rows(pred: String) = spark.sql(sql(pred)).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-    try {
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val control = rows("rn BETWEEN 1 AND 3")
-      val pagiControl = rows("rn BETWEEN 2 AND 4")
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
+    val control = rows("rn BETWEEN 1 AND 3")
+    val pagiControl = rows("rn BETWEEN 2 AND 4")
+    val eqControl = rows("rn = 3")
+    withRules(graft.plans.TopKRewrite) {
       val pTop = planString(spark.sql(sql("rn BETWEEN 1 AND 3")))
       assert(pTop.contains("row_topk") && !pTop.contains("Window"),
         "BETWEEN 1 AND k must rewrite:\n" + pTop.take(1500))
@@ -843,11 +820,8 @@ class PlanSpec extends SparkSpec {
       val pEq = planString(spark.sql(sql("rn = 3")))
       assert(pEq.contains("row_topk") && !pEq.contains("Window"),
         "rank-equality must rewrite via the bound:\n" + pEq.take(1500))
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      val eqControl = rows("rn = 3")
-      spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
       assert(rows("rn = 3") == eqControl)
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    }
   }
 
   test("GraftExtensions (the spark.sql.extensions cluster path) injects " +
@@ -858,6 +832,25 @@ class PlanSpec extends SparkSpec {
       .optimizerRules(ext, spark)
     assert(rules.contains(graft.plans.RangeJoinRewrite), rules.toString)
     assert(rules.contains(graft.plans.TopKRewrite), rules.toString)
+    // the injected rules rewrite with no conf set: applied to the
+    // rules-excluded optimized plans of the two user-spelled shapes,
+    // they remove the Window and give the join its grid cell key
+    val (topk, join) = userSpelledRewriteShapes()
+    def applied(df: DataFrame) =
+      rules.foldLeft(df.queryExecution.optimizedPlan)((p, r) => r(p))
+    assert(!applied(topk).exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]),
+      applied(topk).treeString.take(1500))
+    assert(applied(join).toString.contains("__graft_pt_cell"),
+      applied(join).treeString.take(1500))
+    // their ruleNames are the names the docs give for the kill switch
+    val killSwitch = "graft.plans.TopKRewrite,graft.plans.RangeJoinRewrite"
+    assert(rules.map(_.ruleName).toSet == killSwitch.split(",").toSet)
+    val readme = {
+      val src = scala.io.Source.fromFile("README.md", "UTF-8")
+      try src.mkString finally src.close()
+    }
+    assert(readme.contains(s"spark.sql.optimizer.excludedRules=$killSwitch"))
     val reg = org.apache.spark.sql.graftbridge.ExtensionsBridge
       .registerFunctions(ext,
         new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry)
@@ -992,9 +985,8 @@ class PlanSpec extends SparkSpec {
     } finally {
       graft.ops.JobCounter.uninstall(spark, counter)
       // Profile applies the harness conf policy (rewrites on); restore
-      // the suite's scoped posture for the tests that follow
-      spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-      spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
+      // the suite's rules-excluded posture for the tests that follow
+      SparkSpec.excludeGraftRules(spark)
     }
   }
 
@@ -1185,26 +1177,81 @@ class PlanSpec extends SparkSpec {
       "doc rebuild must aggregate, not window-sort:\n" + s.take(2000))
   }
 
-  test("rules-on ambient default (r15): applyQueryConfPolicy restores " +
-      "both rewrite confs after resetting the tuning confs") {
-    val tk = graft.plans.TopKRewrite.EnabledConf
-    val rj = graft.plans.RangeJoinRewrite.EnabledConf
+  test("harness conf policy: after applyQueryConfPolicy binSize and " +
+      "excludedRules are unset and both rules fire") {
+    val excluded = org.apache.spark.sql.internal.SQLConf
+      .OPTIMIZER_EXCLUDED_RULES.key
     try {
-      // simulate a key leaving tuning + enablement state behind
-      spark.conf.set(graft.plans.TopKRewrite.MaxKConf, "7")
-      spark.conf.set(tk, "false")
+      // simulate a key leaving a forced bin behind, in the suite's
+      // rules-excluded posture
+      spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "7")
       GraftSession.applyQueryConfPolicy(spark)
-      // ambient default: both rules ON (the SOAK_r14-adjudicated
-      // deployment posture), tuning confs back to defaults
-      assert(spark.conf.get(tk) == "true")
-      assert(spark.conf.get(rj) == "true")
-      assert(spark.conf.getOption(graft.plans.TopKRewrite.MaxKConf).isEmpty)
-    } finally {
-      // restore the suite's scoped posture: every other PlanSpec test
-      // pins the rules-off plan unless it opts in explicitly
-      spark.conf.unset(tk)
-      spark.conf.unset(rj)
+      assert(spark.conf.getOption(graft.plans.RangeJoinRewrite.BinConf)
+        .isEmpty)
+      assert(spark.conf.getOption(excluded).isEmpty)
+      // rules-on (the SOAK_r14-adjudicated deployment posture): the
+      // user-spelled top-k window and inequality join both rewrite
+      val (topk, join) = userSpelledRewriteShapes()
+      assertRewritten(planString(topk), planString(join))
+    } finally SparkSpec.excludeGraftRules(spark)
+  }
+
+  /** A user-spelled `row_number() <= k` window and a plain inequality
+    * join — the two shapes the whole-plan rewrites exist for. */
+  private def userSpelledRewriteShapes(): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.{col, row_number}
+    val sp = spark
+    import sp.implicits._
+    val df = (0 until 60).map(i => (i % 5, (i * 7) % 13, i.toLong))
+      .toDF("g", "v", "id")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("g").orderBy(col("v").desc, col("id"))
+    val topk = df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+    val pts = (0L to 300L).map(i => i * 7L).toDF("pt")
+    val ivs = Seq((0L, 50L, 1), (40L, 200L, 2), (600L, 700L, 3))
+      .toDF("lo", "hi", "id")
+    (topk, pts.join(ivs, col("pt") >= col("lo") && col("pt") < col("hi")))
+  }
+
+  private def assertRewritten(topk: String, join: String): Unit = {
+    assert(!topk.contains("Window") && topk.contains("row_topk"),
+      "top-k window must rewrite:\n" + topk.take(1500))
+    assert(!join.contains("BroadcastNestedLoopJoin") &&
+      !join.contains("CartesianProduct"),
+      "inequality join must rewrite:\n" + join.take(1500))
+  }
+
+  test("always-on rewrites: registered rules rewrite with no graft conf " +
+      "set; listing them in excludedRules removes them from the " +
+      "optimizer and both plans keep their Window and nested loop") {
+    val names = SparkSpec.graftRules.map(_.ruleName)
+    def batchRuleNames(): Seq[String] = {
+      // Batch is a protected inner class of RuleExecutor: read its
+      // rules through the case-class accessor reflectively
+      val batches = spark.sessionState.optimizer.batches
+      batches.flatMap { b =>
+        b.getClass.getMethod("rules").invoke(b)
+          .asInstanceOf[Seq[org.apache.spark.sql.catalyst.rules.Rule[_]]]
+          .map(_.ruleName)
+      }
     }
+    withRules(SparkSpec.graftRules: _*) {
+      val (topk, join) = userSpelledRewriteShapes()
+      assert(spark.conf.getAll.keys.forall(!_.startsWith("spark.graft.")),
+        spark.conf.getAll.keys.filter(_.startsWith("spark.graft.")))
+      assert(names.forall(batchRuleNames().contains), batchRuleNames())
+      assertRewritten(planString(topk), planString(join))
+    }
+    // the suite posture lists both names in excludedRules
+    assert(!names.exists(batchRuleNames().contains),
+      batchRuleNames())
+    val (topk, join) = userSpelledRewriteShapes()
+    val t = planString(topk)
+    val j = planString(join)
+    assert(t.contains("Window") && !t.contains("row_topk"), t.take(1500))
+    assert(j.contains("BroadcastNestedLoopJoin") ||
+      j.contains("CartesianProduct"), j.take(1500))
   }
 
   test("bounded global windows: exactly the four documented " +

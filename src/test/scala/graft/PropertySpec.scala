@@ -130,8 +130,7 @@ class PropertySpec extends SparkSpec {
     // the whole-plan rewrite must be semantics-preserving for EVERY
     // total-ordered row_number window filter, not just the cosine key:
     // random groups/values (nulls, heavy ties), random k, both
-    // directions — conf-on vs conf-off row sets must be identical
-    graft.plans.TopKRewrite.ensureRegistered(spark)
+    // directions — rule-on vs rule-off row sets must be identical
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.{col, row_number}
@@ -140,32 +139,28 @@ class PropertySpec extends SparkSpec {
       Gen.option(Gen.chooseNum(0, 4)))) // few distinct values → ties
     val cases = samples(Gen.zip(rowsGen, Gen.chooseNum(1, 5),
       Gen.oneOf(true, false), Gen.oneOf(true, false)), 6)
-    try {
-      cases.foreach { case (rows, k, asc, nullsFirst) =>
-        val df = rows.zipWithIndex
-          .map { case ((g, v), i) => (g, v, i.toLong) }
-          .toDF("g", "v", "id")
-        val vOrd = (asc, nullsFirst) match {
-          case (true, true) => col("v").asc_nulls_first
-          case (true, false) => col("v").asc_nulls_last
-          case (false, true) => col("v").desc_nulls_first
-          case (false, false) => col("v").desc_nulls_last
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("g").orderBy(vOrd, col("id").asc)
-        def run() = df.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k).collect()
-          .map(r => (r.getInt(0), if (r.isNullAt(1)) -99 else r.getInt(1),
-            r.getLong(2), r.getInt(3))).toSet
-        spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-        val control = run()
-        spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
-        val rewritten = run()
-        assert(rewritten == control,
-          s"k=$k asc=$asc nf=$nullsFirst missing=${(control -- rewritten).take(3)} " +
-            s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
+    cases.foreach { case (rows, k, asc, nullsFirst) =>
+      val df = rows.zipWithIndex
+        .map { case ((g, v), i) => (g, v, i.toLong) }
+        .toDF("g", "v", "id")
+      val vOrd = (asc, nullsFirst) match {
+        case (true, true) => col("v").asc_nulls_first
+        case (true, false) => col("v").asc_nulls_last
+        case (false, true) => col("v").desc_nulls_first
+        case (false, false) => col("v").desc_nulls_last
       }
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("g").orderBy(vOrd, col("id").asc)
+      def run() = df.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k).collect()
+        .map(r => (r.getInt(0), if (r.isNullAt(1)) -99 else r.getInt(1),
+          r.getLong(2), r.getInt(3))).toSet
+      val control = run()
+      val rewritten = withRules(graft.plans.TopKRewrite)(run())
+      assert(rewritten == control,
+        s"k=$k asc=$asc nf=$nullsFirst missing=${(control -- rewritten).take(3)} " +
+          s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
+    }
   }
 
   test("top-k rewrite with an alias-only select between window and " +
@@ -174,33 +169,28 @@ class PropertySpec extends SparkSpec {
     // between the window and the rank bound — must stay semantics-
     // preserving whichever normalization (Catalyst pushdown or the
     // rule's own Project matcher) fires first
-    graft.plans.TopKRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.{col, row_number}
     val rowsGen = Gen.nonEmptyListOf(Gen.zip(
       Gen.chooseNum(0, 6), Gen.option(Gen.chooseNum(0, 4))))
     val cases = samples(Gen.zip(rowsGen, Gen.chooseNum(1, 5)), 5)
-    try {
-      cases.foreach { case (rows, k) =>
-        val df = rows.zipWithIndex
-          .map { case ((g, v), i) => (g, v, i.toLong) }
-          .toDF("g", "v", "id")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("g").orderBy(col("v").asc_nulls_last, col("id"))
-        def run() = df.withColumn("rank", row_number().over(w))
-          .select(col("rank").as("rnk"), col("id"), col("g").as("grp"))
-          .filter(col("rnk") <= k).collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
-        spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-        val control = run()
-        spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
-        val rewritten = run()
-        assert(rewritten == control,
-          s"k=$k missing=${(control -- rewritten).take(3)} " +
-            s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
-      }
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+    cases.foreach { case (rows, k) =>
+      val df = rows.zipWithIndex
+        .map { case ((g, v), i) => (g, v, i.toLong) }
+        .toDF("g", "v", "id")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("g").orderBy(col("v").asc_nulls_last, col("id"))
+      def run() = df.withColumn("rank", row_number().over(w))
+        .select(col("rank").as("rnk"), col("id"), col("g").as("grp"))
+        .filter(col("rnk") <= k).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSet
+      val control = run()
+      val rewritten = withRules(graft.plans.TopKRewrite)(run())
+      assert(rewritten == control,
+        s"k=$k missing=${(control -- rewritten).take(3)} " +
+          s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
+    }
   }
 
   test("RankRowsBuffer invariants: insert/trim/merge equal the brute " +
@@ -273,9 +263,8 @@ class PropertySpec extends SparkSpec {
     // order-equal to the k-th (boundary tie groups survive whole),
     // dense_rank() <= k the k smallest distinct keys — over data built
     // to tie constantly (values from a 3-element domain plus nulls),
-    // conf-on vs conf-off row sets must match exactly in both sort
+    // rule-on vs rule-off row sets must match exactly in both sort
     // directions and both null orderings
-    graft.plans.TopKRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.{col, rank, dense_rank}
@@ -285,35 +274,31 @@ class PropertySpec extends SparkSpec {
     val cases = samples(Gen.zip(rowsGen, Gen.chooseNum(1, 4),
       Gen.oneOf(true, false), Gen.oneOf(true, false),
       Gen.oneOf(true, false)), 8)
-    try {
-      cases.foreach { case (rows, k, asc, nullsFirst, dense) =>
-        val df = rows.zipWithIndex
-          .map { case ((g, v), i) => (g, v, i.toLong) }
-          .toDF("g", "v", "id")
-        val vOrd = (asc, nullsFirst) match {
-          case (true, true) => col("v").asc_nulls_first
-          case (true, false) => col("v").asc_nulls_last
-          case (false, true) => col("v").desc_nulls_first
-          case (false, false) => col("v").desc_nulls_last
-        }
-        // NO id tiebreak: ties must be real so whole tie groups cross k
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("g").orderBy(vOrd)
-        val rk = if (dense) dense_rank().over(w) else rank().over(w)
-        def run() = df.withColumn("rnk", rk)
-          .filter(col("rnk") <= k).collect()
-          .map(r => (r.getInt(0), if (r.isNullAt(1)) -99 else r.getInt(1),
-            r.getLong(2), r.getInt(3))).toSet
-        spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-        val control = run()
-        spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
-        val rewritten = run()
-        assert(rewritten == control,
-          s"k=$k asc=$asc nf=$nullsFirst dense=$dense " +
-            s"missing=${(control -- rewritten).take(3)} " +
-            s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
+    cases.foreach { case (rows, k, asc, nullsFirst, dense) =>
+      val df = rows.zipWithIndex
+        .map { case ((g, v), i) => (g, v, i.toLong) }
+        .toDF("g", "v", "id")
+      val vOrd = (asc, nullsFirst) match {
+        case (true, true) => col("v").asc_nulls_first
+        case (true, false) => col("v").asc_nulls_last
+        case (false, true) => col("v").desc_nulls_first
+        case (false, false) => col("v").desc_nulls_last
       }
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+      // NO id tiebreak: ties must be real so whole tie groups cross k
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("g").orderBy(vOrd)
+      val rk = if (dense) dense_rank().over(w) else rank().over(w)
+      def run() = df.withColumn("rnk", rk)
+        .filter(col("rnk") <= k).collect()
+        .map(r => (r.getInt(0), if (r.isNullAt(1)) -99 else r.getInt(1),
+          r.getLong(2), r.getInt(3))).toSet
+      val control = run()
+      val rewritten = withRules(graft.plans.TopKRewrite)(run())
+      assert(rewritten == control,
+        s"k=$k asc=$asc nf=$nullsFirst dense=$dense " +
+          s"missing=${(control -- rewritten).take(3)} " +
+          s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
+    }
   }
 
   test("pagination top-k rewrite equals the unrewritten plan for " +
@@ -325,7 +310,6 @@ class PropertySpec extends SparkSpec {
     // BETWEEN), and the tie-keeping modes. row_number uses a total
     // order (id tiebreak) so pages are deterministic; rank/dense_rank
     // run over heavy ties with no tiebreak.
-    graft.plans.TopKRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.{col, row_number, rank, dense_rank}
@@ -335,37 +319,33 @@ class PropertySpec extends SparkSpec {
     val cases = samples(Gen.zip(rowsGen,
       Gen.chooseNum(1, 4), Gen.chooseNum(0, 3), // lo, extra (hi = lo+extra)
       Gen.oneOf(true, false), Gen.oneOf(0, 1, 2)), 8)
-    try {
-      cases.foreach { case (rows, lo, extra, asc, mode) =>
-        val hi = lo + extra
-        val df = rows.zipWithIndex
-          .map { case ((g, v), i) => (g, v, i.toLong) }
-          .toDF("g", "v", "id")
-        val vOrd = if (asc) col("v").asc_nulls_first
-          else col("v").desc_nulls_last
-        val w0 = org.apache.spark.sql.expressions.Window.partitionBy("g")
-        // row_number needs a total order for a deterministic page
-        val w = if (mode == 0) w0.orderBy(vOrd, col("id").asc)
-          else w0.orderBy(vOrd)
-        val rk = mode match {
-          case 0 => row_number().over(w)
-          case 1 => rank().over(w)
-          case _ => dense_rank().over(w)
-        }
-        def run() = df.withColumn("rnk", rk)
-          .filter(col("rnk").between(lo, hi)).collect()
-          .map(r => (r.getInt(0), if (r.isNullAt(1)) -99 else r.getInt(1),
-            r.getLong(2), r.getInt(3))).toSet
-        spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
-        val control = run()
-        spark.conf.set(graft.plans.TopKRewrite.EnabledConf, "true")
-        val rewritten = run()
-        assert(rewritten == control,
-          s"page=[$lo,$hi] asc=$asc mode=$mode " +
-            s"missing=${(control -- rewritten).take(3)} " +
-            s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
+    cases.foreach { case (rows, lo, extra, asc, mode) =>
+      val hi = lo + extra
+      val df = rows.zipWithIndex
+        .map { case ((g, v), i) => (g, v, i.toLong) }
+        .toDF("g", "v", "id")
+      val vOrd = if (asc) col("v").asc_nulls_first
+        else col("v").desc_nulls_last
+      val w0 = org.apache.spark.sql.expressions.Window.partitionBy("g")
+      // row_number needs a total order for a deterministic page
+      val w = if (mode == 0) w0.orderBy(vOrd, col("id").asc)
+        else w0.orderBy(vOrd)
+      val rk = mode match {
+        case 0 => row_number().over(w)
+        case 1 => rank().over(w)
+        case _ => dense_rank().over(w)
       }
-    } finally spark.conf.unset(graft.plans.TopKRewrite.EnabledConf)
+      def run() = df.withColumn("rnk", rk)
+        .filter(col("rnk").between(lo, hi)).collect()
+        .map(r => (r.getInt(0), if (r.isNullAt(1)) -99 else r.getInt(1),
+          r.getLong(2), r.getInt(3))).toSet
+      val control = run()
+      val rewritten = withRules(graft.plans.TopKRewrite)(run())
+      assert(rewritten == control,
+        s"page=[$lo,$hi] asc=$asc mode=$mode " +
+          s"missing=${(control -- rewritten).take(3)} " +
+          s"extra=${(rewritten -- control).take(3)} rows=${rows.take(12)}")
+    }
   }
 
   test("URL canonicalization equals a direct JVM reference over " +
@@ -442,7 +422,6 @@ class PropertySpec extends SparkSpec {
 
   test("range-join rewrite equals brute force for arbitrary intervals " +
       "incl. sentinel, empty, null, and extreme bounds") {
-    graft.plans.RangeJoinRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.col
@@ -465,22 +444,19 @@ class PropertySpec extends SparkSpec {
             .select("id", "pt").collect()
             .map(r => (r.getInt(0), r.getLong(1))).toSet
         spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
-        spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
         val brute = run()
-        spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
-        val fixed = run()
+        val fixed = withRules(graft.plans.RangeJoinRewrite) {
+          spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
+          try run()
+          finally spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
+        }
         assert(fixed == brute, s"case $ci (fixed bin): " +
           s"missing=${(brute -- fixed).take(3)} extra=${(fixed -- brute).take(3)}")
-        spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
-        spark.conf.set(graft.plans.RangeJoinRewrite.EnabledConf, "true")
-        val auto = run()
+        val auto = withRules(graft.plans.RangeJoinRewrite)(run())
         assert(auto == brute, s"case $ci (auto bin): " +
           s"missing=${(brute -- auto).take(3)} extra=${(auto -- brute).take(3)}")
       }
-    } finally {
-      spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
-      spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledConf)
-    }
+    } finally spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
   }
 
   test("top-k heap treats NaN as worse than every finite score") {

@@ -111,7 +111,6 @@ class RelationalSpec extends SparkSpec {
   test("auto range-join rewrite equals the unrewritten join on a signed " +
       "domain, including empty and point-sized intervals") {
     import org.apache.spark.sql.functions.col
-    graft.plans.RangeJoinRewrite.ensureRegistered(spark)
     val sp = spark
     import sp.implicits._
     // signed points: truncating cell division must stay monotone and
@@ -125,7 +124,13 @@ class RelationalSpec extends SparkSpec {
         .map(r => (r.getInt(0), r.getLong(1))).toSet
     spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
     val brute = run()
-    try {
+    // REVERSED orientation control: intervals on the LEFT, points on
+    // the RIGHT
+    val revBrute =
+      ivs.join(pts, col("pt") >= col("lo") && col("pt") < col("hi"))
+        .select("id", "pt").collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSet
+    try withRules(graft.plans.RangeJoinRewrite) {
       spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
       val rewritten = run()
       assert(rewritten == brute,
@@ -133,16 +138,8 @@ class RelationalSpec extends SparkSpec {
       assert(brute.nonEmpty)
       // empty interval (4) matches nothing under either plan
       assert(!brute.exists(_._1 == 4))
-      // REVERSED orientation: intervals on the LEFT, points on the
-      // RIGHT — exercises the rule's ptOnLeft=false branch and pins
-      // that output column order survives the rewrite
-      val revBrute = {
-        spark.conf.unset(graft.plans.RangeJoinRewrite.BinConf)
-        ivs.join(pts, col("pt") >= col("lo") && col("pt") < col("hi"))
-          .select("id", "pt").collect()
-          .map(r => (r.getInt(0), r.getLong(1))).toSet
-      }
-      spark.conf.set(graft.plans.RangeJoinRewrite.BinConf, "64")
+      // REVERSED orientation — exercises the rule's ptOnLeft=false
+      // branch and pins that output column order survives the rewrite
       val revRewritten =
         ivs.join(pts, col("pt") >= col("lo") && col("pt") < col("hi"))
           .select("id", "pt").collect()
