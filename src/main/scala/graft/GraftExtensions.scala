@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{AdcLookup, BpeEncode, CosineArgmax, CosineSim, CountMinAgg, JlProject, L2Argmin, L2ArgminTopK, L2Squared, MisraGriesSketch, TermCounts, TopKSmallest}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
@@ -24,10 +24,11 @@ import org.apache.spark.sql.types.IntegerType
   *   count_min(key, d, w)              — Count-Min frequency-sketch aggregate
   *   term_counts(tokens)               — per-row (term, tf) postings fold
   *
-  * Two deployment paths share one registration list:
-  *   - cluster config: `spark.sql.extensions=graft.GraftExtensions`
-  *     (applied at session build — the standard library pattern)
-  *   - live session: `GraftFunctions.register(spark)` (tests, REPLs)
+  * One wiring path: extensions apply at session build, either from a
+  * cluster's `spark.sql.extensions=graft.GraftExtensions` or from
+  * [[GraftSession.builder]] (every graft main, the benchmark and the
+  * test suite). Both put the two rewrites in Spark's operator-
+  * optimization batches, so every session optimizes to the same plans.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -126,12 +127,4 @@ object GraftFunctions {
         CountMinAgg(args(0), intLit(args(1), "d"), intLit(args(2), "w"))
           .toAggregateExpression()
       }))
-
-  /** Register on a live session (idempotent — replaces existing). */
-  def register(spark: SparkSession): Unit = {
-    val reg = org.apache.spark.sql.graftbridge.FunctionBridge.registry(spark)
-    all.foreach { case (ident, inf, builder) =>
-      reg.registerFunction(ident, inf, builder)
-    }
-  }
 }

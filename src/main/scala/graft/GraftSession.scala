@@ -9,18 +9,18 @@ import org.apache.spark.sql.SparkSession
   * for and reads as long; current testdata is timestamp[us] and
   * Tables.normalize re-derives the canonical long-nanos column), shuffle
   * partitions sized to the core count (local mode; a cluster deployment
-  * overrides to ~2-3× total cores and lets AQE coalesce), and graft's
-  * SQL functions registered.
+  * sets `spark.sql.shuffle.partitions` to ~2-3× total cores and lets
+  * AQE coalesce), and [[GraftExtensions]] — graft's SQL functions and
+  * both whole-plan rewrites, wired the way a cluster's
+  * `spark.sql.extensions=graft.GraftExtensions` wires them.
   */
 object GraftSession {
 
   def builder(cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
-      // override for scale experiments: at N× data a cluster raises
-      // partition count with the data; fixed-at-cores is the local default
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cores.toString))
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
@@ -39,8 +39,7 @@ object GraftSession {
       // Sized for the whole suite's stages; class metadata is a few MB,
       // noise against the JVM heap. A production session with a bounded
       // query set wants the same.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
 
   /** Silence the benign `WindowExec: No Partition Defined` warning in
     * HARNESS mains only (Bench/Verify/StressMain/Profile — r15 verdict
@@ -60,19 +59,26 @@ object GraftSession {
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)
 
-  /** Build (or reuse) the session and register graft's SQL functions. */
+  /** Build (or reuse) the session. Rules are always on (SOAK_r14's
+    * paired A/B adjudicated the rules-on posture safe — geomean ratio
+    * 0.96, no key loses beyond noise, 197/197 oracle-green); the kill
+    * switch is Spark's own spark.sql.optimizer.excludedRules=
+    * graft.plans.TopKRewrite,graft.plans.RangeJoinRewrite. */
   def get(cores: Int): SparkSession = {
-    val s = builder(cores).getOrCreate()
+    val s = requireWired(builder(cores).getOrCreate())
     s.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(s)
-    // whole-plan optimizer extensions: always on once registered
-    // (SOAK_r14's paired A/B adjudicated the rules-on posture safe —
-    // geomean ratio 0.96, no key loses beyond noise, 197/197
-    // oracle-green, 12/12 intended plan matches, zero unintended). The
-    // kill switch is Spark's own spark.sql.optimizer.excludedRules=
-    // graft.plans.TopKRewrite,graft.plans.RangeJoinRewrite.
-    graft.plans.RangeJoinRewrite.ensureRegistered(s)
-    graft.plans.TopKRewrite.ensureRegistered(s)
+    s
+  }
+
+  /** `getOrCreate` applies no extensions to a session that already
+    * exists, so a session built elsewhere would come back with no graft
+    * functions and no rewrites: fail instead of running other plans. */
+  private[graft] def requireWired(s: SparkSession): SparkSession = {
+    if (!s.catalog.functionExists("cosine_sim"))
+      throw new IllegalStateException(
+        "the active Spark session was built without graft's functions " +
+          "and rewrites; build it with spark.sql.extensions=" +
+          "graft.GraftExtensions (GraftSession.builder does)")
     s
   }
 

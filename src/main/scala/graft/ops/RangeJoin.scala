@@ -73,9 +73,9 @@ object RangeJoin {
     * that the rewrite actually fires (no nested-loop join in the
     * physical plan); this key proves it end-to-end against the same
     * DuckDB IEJoin oracle. The key sets no conf and registers no rule:
-    * the rewrite fires wherever the session registered it
-    * ([[graft.GraftSession.get]], `GraftExtensions`), and the plain
-    * join answers correctly where it did not. Always-on is safe by
+    * the rewrite fires in every session `GraftExtensions` wired
+    * ([[graft.GraftSession.builder]], `spark.sql.extensions`), and the
+    * plain join answers correctly where the rule is excluded. Always-on is safe by
     * design (the rule only touches inner joins with NO equi key and
     * BOTH range bounds, every path bounded: static cap / skip /
     * overflow bucket) — the rules-on soak proves that suite-wide.

@@ -21,9 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * residual exact filter. Same rewrite class as the range-join
   * optimization commercial Spark platforms apply under a hint.
   *
-  * Activation: always on once registered ([[graft.GraftSession.get]]
-  * or `spark.sql.extensions=graft.GraftExtensions`); the kill switch
-  * is Spark's own
+  * Activation: always on in every session [[graft.GraftExtensions]]
+  * wired (`spark.sql.extensions=graft.GraftExtensions`, or
+  * [[graft.GraftSession.builder]]), where it runs in Spark's
+  * operator-optimization batches; the kill switch is Spark's own
   * `spark.sql.optimizer.excludedRules=graft.plans.RangeJoinRewrite`
   * (this rule's `ruleName`). The cell width:
   *   - `spark.graft.rangeJoin.binSize` > 0 — fixed cell width in the
@@ -96,11 +97,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * `2·cell` key encoding and the ±MaxCells span arithmetic can never
     * overflow a Long (ANSI mode would throw). */
   private val MaxAbsCell = 1L << 61
-
-  def ensureRegistered(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(RangeJoinRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ RangeJoinRewrite
 
   /** Re-entrance guard: the auto-bin sample is itself a Spark query
     * whose optimization runs this rule; without the guard a sample
@@ -222,7 +218,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Memoized sample outcomes (r11 advice #1): the sample is a
     * driver-side Spark job launched DURING logical optimization, and the
-    * fixed-point operator batch re-runs this rule several times per
+    * fixed-point operator batches re-run this rule several times per
     * query (plus once more per re-optimization and per .explain()) — so
     * each outcome, INCLUDING None, is cached keyed on the canonicalized
     * sample plan (exprIds normalized positionally, so re-instantiations
@@ -264,7 +260,18 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     // data. Price: a side whose first SampleRows rows happen to carry
     // no positive span skips the rewrite (None) — correct, unrewritten.
     val samplePlan = Project(Seq(span), Limit(Literal(SampleRows), ivChild))
-    val key = samplePlan.canonicalized
+    // the key leaves out not-null filters: the second operator batch
+    // infers them and pushes them into an interval side the first batch
+    // already sampled, and a skipped join (no positive span, so no
+    // rewrite that would stop the rule matching it) must not sample
+    // again for them. (A skip tag on the Join would not survive:
+    // RemoveRedundantAliases copies every Join, without its tags, on
+    // each pass of the batch.)
+    val key = samplePlan.transformUp {
+      case Filter(c, child)
+          if splitConjunctivePredicates(c).forall(_.isInstanceOf[IsNotNull]) =>
+        child
+    }.canonicalized
     val cached = sampleCache.synchronized(Option(sampleCache.get(key)))
     cached.getOrElse {
       sampling.set(true)

@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.functions.RowTopK
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -65,19 +64,16 @@ import org.apache.spark.sql.types.IntegerType
   * too: the heap is sized by the upper bound and the remaining rank
   * predicate filters the rebuilt rank column — the exchange still
   * carries O(groups·b·partitions) rows.
-  * Activation: always on once registered ([[graft.GraftSession.get]] or
-  * `spark.sql.extensions=graft.GraftExtensions`); the kill switch is
-  * Spark's own `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite`
-  * (this rule's `ruleName`).
+  * Activation: always on in every session [[graft.GraftExtensions]]
+  * wired (`spark.sql.extensions=graft.GraftExtensions`, or
+  * [[graft.GraftSession.builder]]), where it runs in Spark's
+  * operator-optimization batches; the kill switch is Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite` (this
+  * rule's `ruleName`).
   */
 object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   val MaxK = 1024L
-
-  def ensureRegistered(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(TopKRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ TopKRewrite
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
@@ -90,11 +86,12 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
       // aliases into the condition, rewrite the inner window exactly
       // as above (it rebuilds the window's output under the original
       // exprIds), and re-apply the Project on top. Catalyst's own
-      // PushDownPredicates usually normalizes this shape away before
-      // extraOptimizations run, but not always (non-deterministic
-      // sibling columns block the push; a direct `TopKRewrite(plan)`
-      // caller may hand us an un-normalized plan) — a computing
-      // Project keeps the Window untouched.
+      // PushDownPredicates, which runs ahead of this rule in each pass
+      // of the operator batches, usually normalizes this shape away,
+      // but not always (non-deterministic sibling columns block the
+      // push; a direct `TopKRewrite(plan)` caller may hand us an
+      // un-normalized plan) — a computing Project keeps the Window
+      // untouched.
       case f @ Filter(cond, Project(projList, w: Window))
           if projList.forall {
             case a: Attribute => w.outputSet.contains(a)

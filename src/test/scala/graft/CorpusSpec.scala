@@ -313,7 +313,6 @@ class CorpusSpec extends SparkSpec {
   test("count_min is SQL-registered and matches the library column") {
     val sp = spark
     import sp.implicits._
-    GraftFunctions.register(sp)
     val df = (0L until 500L).map(k => k % 17).toDF("k")
     df.createOrReplaceTempView("cm_in")
     val viaSql = sp.sql(

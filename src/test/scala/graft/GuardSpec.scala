@@ -638,16 +638,15 @@ class GuardSpec extends SparkSpec {
       graft.ext.Similarity.topkPagedAuto, graft.ops.Relational.topkRankAuto,
       graft.ops.Relational.topkDenseRankAuto, graft.ops.RangeJoin.rangeCountAuto)
     val confs0 = spark.conf.getAll
-    val rules0 = spark.experimental.extraOptimizations
-    // an unregistered session: a key must not register a rule itself
-    spark.experimental.extraOptimizations = Nil
-    try autos.foreach { q =>
+    // the session wires its rules as extensions: a key must not register
+    // a rule of its own
+    autos.foreach { q =>
       q.fn(spark, sf)
       assert(spark.conf.getAll == confs0, s"${q.name} changed a conf")
       assert(spark.experimental.extraOptimizations.isEmpty,
         s"${q.name} registered " + spark.experimental.extraOptimizations)
-    } finally spark.experimental.extraOptimizations = rules0
-    // where the session registered the rules, the plans rewrite
+    }
+    // where the session's rules are not excluded, the plans rewrite
     withRules(SparkSpec.graftRules: _*) {
       val topk = graft.ext.Similarity.topkCosineAuto.fn(spark, sf)
       assert(topk.queryExecution.executedPlan.toString.contains("row_topk"))

@@ -763,6 +763,31 @@ class PlanSpec extends SparkSpec {
     } finally graft.plans.RangeJoinRewrite.clearSampleCache()
   }
 
+  test("range-join auto-bin: a join whose sample shows no positive span " +
+      "is skipped after ONE sample job per optimization") {
+    import org.apache.spark.sql.functions.col
+    graft.plans.RangeJoinRewrite.clearSampleCache()
+    // hi = lo - (iid % 2) - 1: no shared base with lo, so the span is
+    // sampled, and every sampled span is negative
+    val pts = spark.range(0, 500).select((col("id") * 3).as("pt"))
+    val ivs = spark.range(0, 50)
+      .select((col("id") * 30).as("lo"), col("id").as("iid"))
+      .withColumn("hi", col("lo") - col("iid") % 2 - 1)
+    def q() = pts.join(ivs, col("pt") >= col("lo") && col("pt") < col("hi"))
+    val counter = graft.ops.JobCounter.install(spark)
+    try withRules(graft.plans.RangeJoinRewrite) {
+      val c0 = counter.snapshot()
+      val plan = q().queryExecution.optimizedPlan
+      val jobs = (counter.snapshot() - c0).jobs
+      assert(jobs == 1, s"expected 1 sample job, got $jobs")
+      assert(!plan.toString.contains("__graft_pt_cell"),
+        plan.treeString.take(1200))
+    } finally {
+      graft.ops.JobCounter.uninstall(spark, counter)
+      graft.plans.RangeJoinRewrite.clearSampleCache()
+    }
+  }
+
   test("rank-family rewrite fires on the SQL text form and keeps SQL " +
       "tie semantics") {
     // the user-facing claim: plain SQL "top 2 per group WITH TIES"
@@ -824,39 +849,88 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("GraftExtensions (the spark.sql.extensions cluster path) injects " +
-      "both whole-plan rules and every SQL function") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val rules = org.apache.spark.sql.graftbridge.ExtensionsBridge
-      .optimizerRules(ext, spark)
-    assert(rules.contains(graft.plans.RangeJoinRewrite), rules.toString)
-    assert(rules.contains(graft.plans.TopKRewrite), rules.toString)
-    // the injected rules rewrite with no conf set: applied to the
-    // rules-excluded optimized plans of the two user-spelled shapes,
-    // they remove the Window and give the join its grid cell key
-    val (topk, join) = userSpelledRewriteShapes()
-    def applied(df: DataFrame) =
-      rules.foldLeft(df.queryExecution.optimizedPlan)((p, r) => r(p))
-    assert(!applied(topk).exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]),
-      applied(topk).treeString.take(1500))
-    assert(applied(join).toString.contains("__graft_pt_cell"),
-      applied(join).treeString.take(1500))
-    // their ruleNames are the names the docs give for the kill switch
-    val killSwitch = "graft.plans.TopKRewrite,graft.plans.RangeJoinRewrite"
-    assert(rules.map(_.ruleName).toSet == killSwitch.split(",").toSet)
-    val readme = {
-      val src = scala.io.Source.fromFile("README.md", "UTF-8")
-      try src.mkString finally src.close()
+  /** (batch name, rule name) of every rule in the session optimizer's
+    * batches. Batch is a protected inner class of RuleExecutor: its
+    * fields are read through the case-class accessors reflectively. */
+  private def optimizerRules(): Seq[(String, String)] =
+    spark.sessionState.optimizer.batches.flatMap { b =>
+      val name = b.getClass.getMethod("name").invoke(b).asInstanceOf[String]
+      b.getClass.getMethod("rules").invoke(b)
+        .asInstanceOf[Seq[org.apache.spark.sql.catalyst.rules.Rule[_]]]
+        .map(r => (name, r.ruleName))
     }
-    assert(readme.contains(s"spark.sql.optimizer.excludedRules=$killSwitch"))
-    val reg = org.apache.spark.sql.graftbridge.ExtensionsBridge
-      .registerFunctions(ext,
-        new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry)
+
+  test("GraftExtensions wires the live session: both whole-plan rules " +
+      "and every SQL function") {
+    withRules(SparkSpec.graftRules: _*) {
+      val graftRules = optimizerRules().map(_._2)
+        .filter(_.startsWith("graft.")).toSet
+      assert(graftRules.contains(graft.plans.RangeJoinRewrite.ruleName),
+        optimizerRules())
+      assert(graftRules.contains(graft.plans.TopKRewrite.ruleName),
+        optimizerRules())
+      // the rules rewrite with no conf set: the two user-spelled shapes
+      // lose the Window and give the join its grid cell key
+      assert(spark.conf.getAll.keys.forall(!_.startsWith("spark.graft.")))
+      val (topk, join) = userSpelledRewriteShapes()
+      val tp = topk.queryExecution.optimizedPlan
+      assert(!tp.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window]),
+        tp.treeString.take(1500))
+      val jp = join.queryExecution.optimizedPlan
+      assert(jp.toString.contains("__graft_pt_cell"), jp.treeString.take(1500))
+      // their ruleNames are the names the docs give for the kill switch
+      val killSwitch = "graft.plans.TopKRewrite,graft.plans.RangeJoinRewrite"
+      assert(graftRules == killSwitch.split(",").toSet)
+      val readme = {
+        val src = scala.io.Source.fromFile("README.md", "UTF-8")
+        try src.mkString finally src.close()
+      }
+      assert(readme.contains(s"spark.sql.optimizer.excludedRules=$killSwitch"))
+    }
     GraftFunctions.all.foreach { case (ident, _, _) =>
-      assert(reg.functionExists(ident), s"missing SQL function: $ident")
+      assert(spark.catalog.functionExists(ident.funcName),
+        s"missing SQL function: $ident")
     }
+  }
+
+  test("graft's rules run in the two operator-optimization batches, " +
+      "never in the last user-provided batch") {
+    withRules(SparkSpec.graftRules: _*) {
+      val batches = optimizerRules().collect {
+        case (batch, rule) if rule.startsWith("graft.") => batch
+      }
+      assert(batches.sorted == Seq(
+        "Operator Optimization after Inferring Filters",
+        "Operator Optimization after Inferring Filters",
+        "Operator Optimization before Inferring Filters",
+        "Operator Optimization before Inferring Filters"), batches)
+    }
+  }
+
+  test("the top-k rewrite is tidied by the operator batch: posexplode " +
+      "drops the heap array from its output") {
+    withRules(graft.plans.TopKRewrite) {
+      val (topk, _) = userSpelledRewriteShapes()
+      val plan = topk.queryExecution.optimizedPlan
+      val gens = plan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+      }
+      assert(gens.nonEmpty && gens.forall(_.unrequiredChildIndex.nonEmpty),
+        plan.treeString.take(1500))
+    }
+  }
+
+  test("a session built without GraftExtensions fails loudly, naming " +
+      "the extension") {
+    val bare = spark.newSession()
+    bare.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"))
+    val e = intercept[IllegalStateException](GraftSession.requireWired(bare))
+    assert(e.getMessage.contains("spark.sql.extensions=graft.GraftExtensions"),
+      e.getMessage)
+    assert(GraftSession.requireWired(spark) eq spark)
   }
 
   test("build_vocab: bounded top-N plans as TakeOrderedAndProject") {
@@ -1226,16 +1300,7 @@ class PlanSpec extends SparkSpec {
       "set; listing them in excludedRules removes them from the " +
       "optimizer and both plans keep their Window and nested loop") {
     val names = SparkSpec.graftRules.map(_.ruleName)
-    def batchRuleNames(): Seq[String] = {
-      // Batch is a protected inner class of RuleExecutor: read its
-      // rules through the case-class accessor reflectively
-      val batches = spark.sessionState.optimizer.batches
-      batches.flatMap { b =>
-        b.getClass.getMethod("rules").invoke(b)
-          .asInstanceOf[Seq[org.apache.spark.sql.catalyst.rules.Rule[_]]]
-          .map(_.ruleName)
-      }
-    }
+    def batchRuleNames(): Seq[String] = optimizerRules().map(_._2)
     withRules(SparkSpec.graftRules: _*) {
       val (topk, join) = userSpelledRewriteShapes()
       assert(spark.conf.getAll.keys.forall(!_.startsWith("spark.graft.")),

@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session (one per suite, lazily created) configured like the
-  * driver's Verify session, except for the whole-plan rewrites: both
-  * are registered (as [[GraftSession.get]] registers them) but listed
-  * in `spark.sql.optimizer.excludedRules`, so every test pins the
+/** Shared session (one per suite, lazily created) built by the same
+  * [[GraftSession.builder]] as every graft main — so `GraftExtensions`
+  * wires its functions and rewrites where a cluster runs them — except
+  * that both whole-plan rewrites are listed in
+  * `spark.sql.optimizer.excludedRules`, so every test pins the
   * rules-off plan unless it opts in with [[withRules]].
   */
 trait SparkSpec extends AnyFunSuite {
@@ -42,18 +43,8 @@ object SparkSpec {
       graftRules.map(_.ruleName).mkString(","))
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKRewrite.ensureRegistered(s)
-    graft.plans.RangeJoinRewrite.ensureRegistered(s)
     excludeGraftRules(s)
     s
   }

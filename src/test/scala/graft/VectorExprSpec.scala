@@ -123,7 +123,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("SQL-name registration: cosine_sim/l2_sq/topk_smallest usable in spark.sql") {
-    GraftFunctions.register(spark)
     Tables(spark, sf, "embeddings")
       .selectExpr("vec_id", "CAST(embedding AS array<double>) AS e")
       .createOrReplaceTempView("emb_sql")
