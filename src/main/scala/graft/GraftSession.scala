@@ -42,7 +42,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
 
   /** Silence the benign `WindowExec: No Partition Defined` warning in
-    * HARNESS mains only (Bench/Verify/StressMain/Profile — r15 verdict
+    * HARNESS mains only (Bench/Verify/Profile — r15 verdict
     * #7). The suite's four unpartitioned windows are all value-domain-
     * or k-bounded by construction (Quality KS cumulative, Dedup span
     * windows, Embeddings quantile frame, Corpus tercile cumulative —
@@ -98,7 +98,7 @@ object GraftSession {
 
   /** Drop everything any query cached and didn't free — SQL cache and
     * persistent RDDs (incl. localCheckpoint blocks). Multi-query
-    * sessions (Bench/Verify/StressMain) call this between queries so
+    * sessions (Bench/Verify, GrowthSpec) call this between queries so
     * leaked blocks cannot accumulate GC pressure across the session
     * (the round-3 bench tail inflated up to 30× from exactly that).
     */

@@ -510,8 +510,8 @@ object Corpus {
     * global-window class as the KS statistic, ops/Quality.scala). The
     * two thresholds broadcast back onto a map-only bucket projection —
     * the corpus itself never sorts. */
-  /** df-in core of [[ccnetBuckets]] — the QueryDef and the StressMain
-    * growth harness both bind it. */
+  /** df-in core of [[ccnetBuckets]] — the QueryDef and the GrowthSpec
+    * `ccnet_buckets` pin both bind it. */
   def ccnetBucketsOf(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
       // materialize the (doc_id, fluency_milli) projection ONCE: it

@@ -452,8 +452,8 @@ object Dedup {
     // produces for it anyway. Past the cap — the 100 TB regime — the
     // distributed fixed point below runs unchanged; the probe cost is
     // one early-stopping CollectLimit over cap+1 rows.
-    // spark.graft.cc.driverEdges: 0 disables (StressMain's CC growth
-    // rows do, so they keep measuring the distributed path).
+    // spark.graft.cc.driverEdges: 0 disables (GrowthSpec's clusters_cc
+    // pins do, so they keep measuring the distributed path).
     val driverCap =
       if (driverEdgeCap >= 0) driverEdgeCap else ccDriverEdges(spark)
     if (driverCap > 0 && driverCap < Int.MaxValue) {
@@ -658,7 +658,7 @@ object Dedup {
       FROM reach GROUP BY 1"""))
 
   /** df-in core of dedup_keep_best over any (doc_id, text) corpus —
-    * the QueryDef and the StressMain growth harness both bind it.
+    * the QueryDef and the GrowthSpec `keep_best*` pins both bind it.
     * Canonical-per-cluster selection by QUALITY: production dedup
     * keeps the BEST document of each duplicate cluster, not the
     * lowest id — the quality scorer decides which near-copy survives
@@ -1040,8 +1040,8 @@ object Dedup {
     * history-ingest time, [[incrementalAgainstSegmentedIndex]] joins
     * each increment against the stored tables, so per-increment compute is
     * ∝ increment, not corpus (witnessed by `dedup_incremental_pub` and
-    * the StressMain flat-jobs growth row). The in-query spelling here
-    * computes both sides in one union-tagged shingle pass (ONE
+    * GrowthSpec's flat-jobs `incremental_pub_hist` pin). The in-query
+    * spelling here computes both sides in one union-tagged shingle pass (ONE
     * persist+count barrier and ONE corpus scan via
     * [[incrementalPairsFused]] — r14 verdict: the two serial
     * materializations and double corpus scan were its #5 cost center);
@@ -1538,8 +1538,8 @@ object Dedup {
     * chain, which keeps a scan node (and its jobs) per segment: the
     * chained spelling measured +2 jobs per folded day in the
     * steady-state growth row; the multi-path scan reads N segments
-    * exactly like one N-times-larger table (jobs flat, StressMain
-    * row). */
+    * exactly like one N-times-larger table (jobs flat: GrowthSpec's
+    * `incremental_seg_*` pins). */
   def segmentedIndexFrames(s: SparkSession,
       indexDir: String): (DataFrame, DataFrame) = {
     val segs = activeSegments(indexDir)
@@ -1558,9 +1558,9 @@ object Dedup {
     * history index — the production entry point: history is never
     * re-shingled or re-hashed; the increment shingles/bands only ITSELF
     * and joins the stored bucket tables of every ACTIVE segment, so
-    * per-increment compute is ∝ increment (StressMain's
-    * `incremental_pub_hist` row pins increment-side jobs FLAT as
-    * history scales 8×). Bit-identical output to [[incrementalPairs]]
+    * per-increment compute is ∝ increment (GrowthSpec's
+    * `incremental_pub_hist` pin holds increment-side jobs FLAT as
+    * history scales 4×). Bit-identical output to [[incrementalPairs]]
     * over the concatenated history (ExtSpec pins set equality), with
     * per-day ingest ∝ batch instead of ∝ history. Flavor-aware
     * ([[probeFlavors]]): plain segments are one multi-path
@@ -2159,8 +2159,9 @@ object Dedup {
   }
 
   /** Declarative compaction cadence for a segmented index — the
-    * measured StressMain orchestrations (SCALE.md r17: daily append,
-    * weekly fold, tiered minor/major) as default production behavior
+    * measured growth orchestrations (SCALE.md r17: daily append,
+    * weekly fold, tiered minor/major; pinned by GrowthSpec's
+    * `incremental_seg_*` rows) as default production behavior
     * instead of hand-called compact steps (r17 verdict #8). Consulted
     * after each fold by [[graft.streaming.StreamingDedup
     * .segmentedFoldBatch]] (or any caller, via [[maybeCompact]]):
@@ -2182,7 +2183,7 @@ object Dedup {
     *    PER MAJOR from the victims' total sh row count, read from
     *    parquet FOOTERS (no Spark job): the rewrite below
     *    `concatRowsMin`, the byte copy above it (measured crossover
-    *    ~100k rows — StressMain major_concat: −10% at 41k, +10% at
+    *    ~100k rows — SCALE.md r19 major_concat: −10% at 41k, +10% at
     *    125k, +54% at 485k).
     *  - `concatRowsMin`: the auto crossover, in sh rows. Deployments
     *    re-measure on their storage and carry the value through the
@@ -3152,8 +3153,9 @@ object Dedup {
     val dim = 64
     // CHANCE collisions of dissimilar vectors grow ∝ n²/2^planes, so
     // the plane count must grow with log2(n) to hold the candidate
-    // volume linear (StressMain: ratio 6.2× at 8× data with fixed 12
-    // planes, ~linear with 12+log2(N)). Deliberately a config, not an
+    // volume linear (SCALE.md: ratio 6.2× at 8× data with fixed 12
+    // planes, ~linear with 12+log2(N); GrowthSpec's
+    // `embedding_cosine_logplanes` pin). Deliberately a config, not an
     // inferred count: recall on scaled-copy near-dups is EXACTLY 1 at
     // any plane count (positive scaling preserves every sign), so
     // raising it never costs planted-pair recall — the oracle holds at
@@ -3316,7 +3318,7 @@ object Dedup {
     * levels, so planted-copy recall stays exactly 1 and the prune set
     * is deterministic (witnessed in ExtSpec, oracled end-to-end).
     *
-    * Measured (StressMain semantic_ksweep: 64k-vector corpus, noop
+    * Measured (SCALE.md semantic_ksweep: 64k-vector corpus, noop
     * sink, native argmax): flat 5.5 / 7.4 / 12.2 / 20.0 s at
     * k = 2000 / 8000 / 16000 / 32000 — linear in k as modeled — vs
     * two-level ≈3 s flat across the sweep; crossover ≈ k 4000, 6× at

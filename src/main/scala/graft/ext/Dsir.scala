@@ -78,14 +78,6 @@ object Dsir {
 
   private val bucketsUdf = udf { (text: String) => featureBuckets(text) }
 
-  /** (bucket, cnt) over a corpus — explode of the per-doc feature
-    * buckets into one map-side-combined aggregate; output ≤ Buckets
-    * rows regardless of corpus size. */
-  def bucketCounts(docs: DataFrame): DataFrame =
-    graft.Tables.spread(docs.select(col("text")))
-      .select(explode(bucketsUdf(col("text"))).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("cnt"))
-
   /** Dense fixed-point log-ratio table over all buckets:
     * lr_fp(b) = round(1e6 · (ln((p_b+1)/(P+B)) − ln((q_b+1)/(Q+B)))).
     * Computed driver-side from the two ≤4096-row count collections

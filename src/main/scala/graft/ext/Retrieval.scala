@@ -100,10 +100,11 @@ object Retrieval {
     * platforms; the publish pins one result).
     */
   /** (term, df, idf_fp, ndocs, toks) computed in-plan — the frame
-    * [[ensureIdf]] materializes, and the df-in form StressMain scales
-    * directly. ndocs/toks (avgdl's exact integer inputs) ride on every
-    * row so the SCORING path needs no second corpus pass for stats —
-    * at 100 TB that deletes a full table scan from every query. */
+    * [[ensureIdf]] materializes, and the df-in form GrowthSpec's
+    * `bm25_topk` pin scales directly. ndocs/toks (avgdl's exact integer
+    * inputs) ride on every row so the SCORING path needs no second
+    * corpus pass for stats — at 100 TB that deletes a full table scan
+    * from every query. */
   def idfOf(docs: DataFrame): DataFrame = {
     postingsOf(docs).groupBy("term").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(statsOf(docs)))
@@ -289,8 +290,8 @@ object Retrieval {
         .withColumn("e", col("embedding").cast("array<double>")))
 
   /** df-in core: fuse a sparse (qid, did, rank, …) channel with the
-    * dense cosine channel over `emb` (vec_id, e) — the form StressMain
-    * scales directly. */
+    * dense cosine channel over `emb` (vec_id, e) — the form GrowthSpec's
+    * `hybrid_rrf` pin scales directly. */
   def hybridRrfOf(sparseTopK: DataFrame, emb: DataFrame): DataFrame = {
     val sparse = sparseTopK
       .select(col("qid"), col("did"), col("rank").as("rs"))

@@ -157,7 +157,7 @@ object UrlOps {
 
   /** df-in core: per-doc canonicalized frame over any frame with a
     * doc_id column (the planted URL derives from it) — the library
-    * API; QueryDefs and the StressMain growth harness both bind it. */
+    * API; QueryDefs and the GrowthSpec `url_dedup` pin both bind it. */
   def canonicalized(docs: DataFrame): DataFrame = {
     val raw = plantedUrl(col("doc_id"))
     docs.select(col("doc_id"), raw.as("raw_url"),

@@ -36,19 +36,6 @@ final class GraftMetrics private () extends QueryExecutionListener {
 
   private val buf = new ConcurrentLinkedQueue[QueryMetric]
 
-  /** The final physical tree: AQE hides the live plan behind
-    * AdaptiveSparkPlanExec; unwrap it (and any nested adaptive
-    * subtrees) so metric collection sees the executed operators. */
-  private def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-    // materialized AQE stages are leaves wrapping their real subtree
-    case q: QueryStageExec => q +: unwrap(q.plan)
-    // a reused exchange POINTS at a subtree that executed once and
-    // shares its metric objects — descending would double-count it
-    case r: ReusedExchangeExec => Seq(r)
-    case other => other +: other.children.flatMap(unwrap)
-  }
-
   private def metricSum(plans: Seq[SparkPlan], nodeContains: String,
       metricKeys: Set[String]): Long =
     plans.filter(_.nodeName.contains(nodeContains))
@@ -59,7 +46,7 @@ final class GraftMetrics private () extends QueryExecutionListener {
 
   override def onSuccess(funcName: String, qe: QueryExecution,
       durationNs: Long): Unit = {
-    val plans = unwrap(qe.executedPlan)
+    val plans = GraftMetrics.operators(qe.executedPlan)
     buf.add(QueryMetric(
       action = funcName,
       durationMs = durationNs / 1000000L,
@@ -83,6 +70,19 @@ final class GraftMetrics private () extends QueryExecutionListener {
 }
 
 object GraftMetrics {
+  /** The final physical tree: AQE hides the live plan behind
+    * AdaptiveSparkPlanExec; unwrap it (and any nested adaptive
+    * subtrees) so metric collection sees the executed operators. */
+  private[graft] def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+    // materialized AQE stages are leaves wrapping their real subtree
+    case q: QueryStageExec => q +: operators(q.plan)
+    // a reused exchange POINTS at a subtree that executed once and
+    // shares its metric objects — descending would double-count it
+    case r: ReusedExchangeExec => Seq(r)
+    case other => other +: other.children.flatMap(operators)
+  }
+
   /** Install a fresh listener on the session and return it. */
   def install(spark: SparkSession): GraftMetrics = {
     val m = new GraftMetrics

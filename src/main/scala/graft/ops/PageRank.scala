@@ -59,7 +59,7 @@ object PageRank {
     pagerankOnEdges(tradeEdges(s, dir), rounds)
 
   /** df-in core over a symmetric (src, dst) edge list — the form
-    * StressMain scales directly. */
+    * GrowthSpec's `graph_pagerank` pin scales directly. */
   def pagerankOnEdges(edgesIn: DataFrame,
       rounds: Int = Rounds): DataFrame = {
     // edges + outdeg computed once; persist through the rounds, then

@@ -38,9 +38,9 @@ object Triangles {
     * an order. The driver-verified witness restricts to every 3rd order
     * (a scan-pushed filter): the sf0.1 full graph is dense enough
     * (~1.9M triangles, 14.5 s) to make the BENCH key about raw triangle
-    * volume rather than plan shape — the full-graph growth row lives in
-    * StressMain (8× measured at 5.5×, sub-linear) where volume IS the
-    * question. */
+    * volume rather than plan shape — the full-graph growth pin lives in
+    * GrowthSpec (`graph_triangles`: flat jobs, linear triangles and
+    * join rows), where volume IS the question. */
   def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     coPurchaseEdgesOf(
       Tables(s, dir, "lineitem").filter(col("l_orderkey") % 3 === 0))

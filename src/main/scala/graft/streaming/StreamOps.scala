@@ -116,8 +116,8 @@ object StreamOps {
     * file sink is [[windowAggStream]], witnessed in StreamingSpec.
     */
   /** The windowed-aggregate plan shared by the QueryDef and the
-    * StressMain growth row: one shuffle on (window, event_type) with
-    * map-side partial aggregation. */
+    * GrowthSpec `stream_window_agg` pin: one shuffle on (window,
+    * event_type) with map-side partial aggregation. */
   def windowAggOf(events: DataFrame): DataFrame =
     events
       .withColumn("ts_t", timestamp_micros(expr("ts div 1000")))

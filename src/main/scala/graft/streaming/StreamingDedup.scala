@@ -210,91 +210,69 @@ object StreamingDedup {
     // only state older than wm - retention can never pair again — the
     // safe prune bound (not this batch's max: a late-but-valid arrival
     // can be older)
-    var seen = state.getOption.getOrElse(Seq.empty).toVector
+    val seen0 = state.getOption.getOrElse(Seq.empty).toVector
       .filter(_.tsMs >= wm - retentionMs)
-    // O(1) replay check (r11 advice #4): the linear exists() scan made
-    // each state update O(bucket²) per batch on top of the pair scan
-    val seenIds = scala.collection.mutable.HashSet.empty[Long]
-    seen.foreach(s => seenIds += s.doc_id)
-    val out = scala.collection.mutable.ArrayBuffer.empty[PhashPair]
-    def hamming(x: Array[Int], y: Array[Int]): Int = {
-      var h = 0; var i = 0
-      while (i < 4) { h += java.lang.Integer.bitCount(x(i) ^ y(i)); i += 1 }
-      h
-    }
-    fresh.foreach { d =>
-      // replayed doc_id → no-op (same contract as verifyPhashBucket)
-      if (seenIds.add(d.doc_id)) {
-      val db = d.bands
-      seen.foreach { s =>
-        if (s.doc_id != d.doc_id &&
-            math.abs(d.tsMs - s.tsMs) <= retentionMs) {
-          val sb = s.bands
-          val h = hamming(sb, db)
-          if (h <= maxHamming) {
-            val firstShared = (0 until 4).find(k => sb(k) == db(k))
-            if (firstShared.contains(key._1)) {
-              val (a, b) = if (s.doc_id < d.doc_id) (s.doc_id, d.doc_id)
-                else (d.doc_id, s.doc_id)
-              out += PhashPair(a, b, h.toLong)
-            }
-          }
-        }
-      }
-      seen :+= d
-      }
-    }
+    val (seen, out) = verifyPhashFold[PhashBucketedTs](fresh, seen0,
+      key._1, maxHamming, _.doc_id, _.bands,
+      pairOk = (s, d) => math.abs(d.tsMs - s.tsMs) <= retentionMs)
     state.update(seen)
     // GC armed from retained state's max event time (arming from this
     // batch alone could regress the timeout on a late-only batch)
     state.setTimeoutTimestamp(
       math.max(seen.map(_.tsMs).max + retentionMs, wm + 1))
-    out.iterator
+    out
   }
 
   private[streaming] def verifyPhashBucket(maxHamming: Int)(
       key: (Int, Int), rows: Iterator[PhashBucketed],
       state: GroupState[Seq[PhashBucketed]]): Iterator[PhashPair] = {
-    var seen = state.getOption.getOrElse(Seq.empty).toVector
+    val (seen, out) = verifyPhashFold[PhashBucketed](
+      rows.toArray.sortBy(_.doc_id),
+      state.getOption.getOrElse(Seq.empty).toVector,
+      key._1, maxHamming, _.doc_id, _.bands, pairOk = (_, _) => true)
+    state.update(seen)
+    out
+  }
+
+  /** Shared hamming verify-and-fold of both perceptual variants, the
+    * twin of [[verifyFold]]: arrivals (pre-sorted by doc_id) are
+    * compared against the folded set under `pairOk`; a pair within
+    * `maxHamming` is emitted only by the bucket of its FIRST shared
+    * band (`band`) — both sides' full signatures are local, so every
+    * sharing bucket computes the same answer. A re-delivered doc_id
+    * (upstream replay / duplicate ingest) is a no-op: appending it
+    * again would double bucket state and re-emit every pair involving
+    * the doc on later matches.
+    */
+  private def verifyPhashFold[T](fresh: Array[T], seen0: Vector[T],
+      band: Int, maxHamming: Int, id: T => Long, bands: T => Array[Int],
+      pairOk: (T, T) => Boolean): (Vector[T], Iterator[PhashPair]) = {
+    var seen = seen0
     // O(1) replay check (r11 advice #4): the linear exists() scan made
     // each state update O(bucket²) per batch on top of the pair scan
     val seenIds = scala.collection.mutable.HashSet.empty[Long]
-    seen.foreach(s => seenIds += s.doc_id)
-    val out = scala.collection.mutable.ArrayBuffer.empty[PhashPair]
-    def hamming(x: Array[Int], y: Array[Int]): Int = {
-      var h = 0; var i = 0
-      while (i < 4) { h += java.lang.Integer.bitCount(x(i) ^ y(i)); i += 1 }
-      h
-    }
-    rows.toArray.sortBy(_.doc_id).foreach { d =>
-      // a re-delivered signature (upstream replay / duplicate ingest)
-      // must be a no-op: appending it again would double bucket state
-      // and re-emit every pair involving this doc on later matches —
-      // seenIds.add returns false exactly for those replays
-      if (seenIds.add(d.doc_id)) {
-      val db = d.bands
-      seen.foreach { s =>
-        if (s.doc_id != d.doc_id) {
-          val sb = s.bands
-          val h = hamming(sb, db)
-          if (h <= maxHamming) {
-            // first shared band decides the emitting bucket — both
-            // sides' full signatures are local, so every sharing
-            // bucket computes the same answer
-            val firstShared = (0 until 4).find(k => sb(k) == db(k))
-            if (firstShared.contains(key._1)) {
-              val (a, b) = if (s.doc_id < d.doc_id) (s.doc_id, d.doc_id)
-                else (d.doc_id, s.doc_id)
-              out += PhashPair(a, b, h.toLong)
+    seen.foreach(s => seenIds += id(s))
+    val out = Vector.newBuilder[PhashPair]
+    fresh.foreach { d =>
+      if (seenIds.add(id(d))) {
+        val db = bands(d)
+        seen.foreach { s =>
+          if (id(s) != id(d) && pairOk(s, d)) {
+            val sb = bands(s)
+            var h = 0; var i = 0
+            while (i < 4) {
+              h += java.lang.Integer.bitCount(sb(i) ^ db(i)); i += 1
             }
+            if (h <= maxHamming &&
+                (0 until 4).find(k => sb(k) == db(k)).contains(band))
+              out += (if (id(s) < id(d)) PhashPair(id(s), id(d), h.toLong)
+                else PhashPair(id(d), id(s), h.toLong))
           }
         }
-      }
-      seen :+= d
+        seen :+= d
       }
     }
-    state.update(seen)
-    out.iterator
+    (seen, out.result().iterator)
   }
 
   /** Retention-bounded variant — "dedup within the last N days", the

@@ -2336,9 +2336,12 @@ class ExtSpec extends SparkSpec {
     Dedup.compactSegments(spark, a, "m", adoptAligned = false)
     Dedup.compactSegments(spark, b, "m", adoptAligned = false,
       concatAligned = true)
-    // ROW identity vs the rewrite, both subtables, full rows
+    // ROW identity vs the rewrite, both subtables, full rows — as sets
+    // and in count, so a duplicated row cannot hide
     assert(shRows(b) == shRows(a), "concat sh rows must equal the rewrite")
     assert(bbRows(b) == bbRows(a), "concat bb rows must equal the rewrite")
+    def shCount(p: String) = Dedup.segmentedIndexFrames(spark, p)._1.count()
+    assert(shCount(b) == shCount(a), "concat sh row count must equal the rewrite")
     // file-count collapse: 3 aligned victims concat to ONE file per
     // bucket; the plain tail rewrites to one more — 2/bucket, under
     // the dial (the rewrite side lands 1/bucket)
@@ -2478,6 +2481,9 @@ class ExtSpec extends SparkSpec {
       "auto below the crossover must have rewritten (sorted layout)")
     assert(shRows(lo) == shRows(hi),
       "both auto modes must produce identical rows")
+    assert(Dedup.segmentedIndexFrames(spark, lo)._1.count() ==
+      Dedup.segmentedIndexFrames(spark, hi)._1.count(),
+      "both auto modes must produce the same row count")
     Seq(lo, hi).foreach(Work.clean)
   }
 
