@@ -899,38 +899,28 @@ object Dedup {
   }
   private val minhashSigUdf = minhashSigUdfN(NumHashes)
 
-  def minhashSignatures(shingled: DataFrame): DataFrame = {
+  /** `plan.hashes` MinHash columns `mh_0..` — every plan draws from
+    * the same seeded permutation family (a plan's first k hashes are
+    * the default plan's first k). */
+  def minhashSignatures(shingled: DataFrame,
+      plan: BandPlan = DefaultBandPlan): DataFrame = {
     // input columns (shs, n, any event-time the streaming dedup
     // carries) ride along; batch consumers never select them, so
     // Catalyst prunes them before any shuffle
-    val sig = shingled.withColumn("mhsig", minhashSigUdf(col("shs")))
-    val sigCols = (0 until NumHashes).map(i => col("mhsig")(i).as(s"mh_$i"))
-    sig.select((col("*") +: sigCols): _*).drop("mhsig")
-  }
-
-  /** [[minhashSignatures]] under an explicit [[BandPlan]] — the same
-    * seeded permutation family (a plan's first k hashes are the fixed
-    * path's first k), just `plan.hashes` of it. */
-  def minhashSignaturesPlanned(shingled: DataFrame,
-      plan: BandPlan): DataFrame = {
-    val sig = shingled.withColumn("mhsig",
-      minhashSigUdfN(plan.hashes)(col("shs")))
-    val sigCols = (0 until plan.hashes)
-      .map(i => col("mhsig")(i).as(s"mh_$i"))
+    val sigUdf = if (plan.hashes == NumHashes) minhashSigUdf
+      else minhashSigUdfN(plan.hashes)
+    val sig = shingled.withColumn("mhsig", sigUdf(col("shs")))
+    val sigCols = (0 until plan.hashes).map(i => col("mhsig")(i).as(s"mh_$i"))
     sig.select((col("*") +: sigCols): _*).drop("mhsig")
   }
 
   /** (doc_id [, extras...], band, bucket) rows: each doc in each of its
-    * 16 LSH band buckets — the shared banding stage of the batch
-    * candidate join and the streaming incremental dedup. */
-  def bandBuckets(sigs: DataFrame, extras: Seq[String] = Nil): DataFrame =
-    bandBucketsPlanned(sigs, DefaultBandPlan, extras)
-
-  /** [[bandBuckets]] under an explicit [[BandPlan]]: band `i` hashes
-    * signature rows `[i·r, (i+1)·r)` — the default plan reproduces
-    * the historical 16×4 banding bit-for-bit. */
-  def bandBucketsPlanned(sigs: DataFrame, plan: BandPlan,
-      extras: Seq[String] = Nil): DataFrame = {
+    * LSH band buckets — the shared banding stage of the batch
+    * candidate join and the streaming incremental dedup. Band `i`
+    * hashes signature rows `[i·r, (i+1)·r)`; the default plan is the
+    * historical 16×4 banding. */
+  def bandBuckets(sigs: DataFrame, extras: Seq[String] = Nil,
+      plan: BandPlan = DefaultBandPlan): DataFrame = {
     val bandCols = (0 until plan.bands).map { bnd =>
       val cols = (0 until plan.rowsPerBand)
         .map(r => col(s"mh_${bnd * plan.rowsPerBand + r}"))
@@ -964,9 +954,14 @@ object Dedup {
 
   /** Full MinHash-LSH near-dup: signatures → banded candidates → exact
     * Jaccard verification (so precision is 1.0; the LSH only bounds
-    * recall, P(miss | J=0.9) ≈ 4e-8 at 16×4).
+    * recall, P(miss | J=0.9) ≈ 4e-8 at the default 16×4). Under an
+    * auto-derived or explicit [[BandPlan]] (r19 verdict #7) the
+    * pipeline and the verification are identical — precision is 1.0
+    * under ANY plan; the plan only moves the recall floor and the
+    * candidate cost, which is exactly what [[planBands]] trades off.
     */
-  def minhashDedup(corpus: DataFrame): DataFrame = {
+  def minhashDedup(corpus: DataFrame,
+      plan: BandPlan = DefaultBandPlan): DataFrame = {
     // scanned three times (signatures + both verification sides);
     // populate the cache once up front so the branches don't race to
     // compute the same partitions concurrently
@@ -975,29 +970,11 @@ object Dedup {
     // persist the banded buckets: the candidate self-join broadcasts
     // one side when small, so without the cache the 64-hash signature
     // UDF runs once per side (r13; see lshCandidates scaladoc)
-    val buckets = bandBuckets(minhashSignatures(shingled)).persist()
+    val buckets = bandBuckets(minhashSignatures(shingled, plan),
+      plan = plan).persist()
     buckets.count(): Unit
     val result = verifyJaccard(lshCandidatesOn(buckets), shingled)
     val out = Work.materialize("minhash_dedup", result)
-    buckets.unpersist()
-    shingled.unpersist()
-    out
-  }
-
-  /** [[minhashDedup]] under an auto-derived or explicit [[BandPlan]]
-    * (r19 verdict #7): identical pipeline, identical exact-Jaccard
-    * verification — precision is 1.0 under ANY plan; the plan only
-    * moves the recall floor and the candidate cost, which is exactly
-    * what [[planBands]] trades off. */
-  def minhashDedupPlanned(corpus: DataFrame,
-      plan: BandPlan): DataFrame = {
-    val shingled = shingleSets(corpus).persist()
-    shingled.count(): Unit
-    val buckets = bandBucketsPlanned(
-      minhashSignaturesPlanned(shingled, plan), plan).persist()
-    buckets.count(): Unit
-    val result = verifyJaccard(lshCandidatesOn(buckets), shingled)
-    val out = Work.materialize("minhash_dedup_planned", result)
     buckets.unpersist()
     shingled.unpersist()
     out

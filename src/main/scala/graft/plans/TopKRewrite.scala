@@ -16,11 +16,11 @@ import org.apache.spark.sql.types.IntegerType
   *     .filter($"rank" <= k)
   * }}}
   *
-  * executes as written: EVERY scored row shuffles to its group's
-  * window partition and the whole group sorts, even though only k rows
-  * survive the filter. Spark's own InferWindowGroupLimit bounds the
-  * per-partition sort, but the full |group| row set still flows
-  * through the exchange. This rule rewrites the
+  * executes as a Window. Spark 4.1's window group limit
+  * (InferWindowGroupLimit) already ships only k rows per (group,
+  * input partition) through the exchange, but to find them each
+  * partition SORTS every scored row it holds, and the window then
+  * sorts each group again after the exchange. This rule rewrites the
   * `Filter(rank <= k, Window(row_number over (P order O)))` shape into
   * the bounded-heap aggregate plan the engine's library functions
   * already hand-build ([[graft.functions.TopKSmallest]],
@@ -32,14 +32,14 @@ import org.apache.spark.sql.types.IntegerType
   * }}}
   *
   * Map-side partial aggregation keeps ≤ k rows per (group, input
-  * partition), so the exchange carries O(groups·k·partitions) rows
-  * instead of the full score set, and the per-group sort disappears
-  * entirely (a k-sized heap per group replaces it). For a brute-force
-  * cosine top-k over |Q| queries × |R| references, that is the
-  * difference between shuffling |Q|·|R| scored pairs and shuffling
-  * |Q|·k·partitions rows — the one scale-killer a user could still
-  * reach by hand (the Window form; pinned equal to the aggregate form
-  * in ExtSpec).
+  * partition) in a k-sized heap, so the per-partition sort of all
+  * scored rows disappears — for a brute-force cosine top-k over |Q|
+  * queries × |R| references, a sort of |Q|·|R| scored pairs — and so
+  * does the per-group sort. The exchange is k-fold smaller in rows
+  * too: one heap row per (group, partition) instead of k rows
+  * (GrowthSpec `topk_window_rewrite` measured 1,001 exchanged rows
+  * with the rule off against 201 with it on). The Window form is
+  * pinned equal to the aggregate form in ExtSpec.
   *
   * Semantics: row_number() over a non-total ORDER BY breaks ties
   * arbitrarily; the heap keeps an equally-arbitrary (but valid)

@@ -624,30 +624,13 @@ object StreamOps {
     * no row for a user who never viewed. (Round-9 advice: the old
     * mapGroupsWithState form emitted an all-null chain per such user,
     * a row set the batch contract never produces.)
+    *
+    * State API: flatMapGroupsWithState on the default state store. A
+    * transformWithState spelling (typed ValueState, RocksDB store
+    * required) was measured against it on the StreamingSpec funnel
+    * input and was not faster; [[sessionizeTwsStream]] is the
+    * transformWithState operator, for its event-time timers.
     */
-  /** The funnel fold shared by BOTH streaming twins (the
-    * flatMapGroupsWithState form and the transformWithState form) —
-    * one definition so the stage rules (strict `>` precedence, the
-    * in-batch (ts, event_id) total-order sort) cannot diverge. */
-  private def advanceChain(start: FunnelChain,
-      batch: Iterator[Ev]): FunnelChain = {
-    var s = start
-    batch.toArray.sortBy(e => (e.ts, e.event_id)).foreach { e =>
-      e.event_type match {
-        case "view" if s.t_view.isEmpty =>
-          s = s.copy(t_view = Some(e.ts))
-        case "click" if s.t_view.isDefined && s.t_click.isEmpty &&
-            e.ts > s.t_view.get =>
-          s = s.copy(t_click = Some(e.ts))
-        case "purchase" if s.t_click.isDefined &&
-            s.t_purchase.isEmpty && e.ts > s.t_click.get =>
-          s = s.copy(t_purchase = Some(e.ts))
-        case _ => ()
-      }
-    }
-    s
-  }
-
   def funnelStream(events: org.apache.spark.sql.Dataset[Ev])
       : org.apache.spark.sql.Dataset[FunnelChain] = {
     import events.sparkSession.implicits._
@@ -655,49 +638,27 @@ object StreamOps {
       .flatMapGroupsWithState[FunnelChain, FunnelChain](
         org.apache.spark.sql.streaming.OutputMode.Update,
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        case (uid, it, state) =>
-          val s = advanceChain(
-            state.getOption.getOrElse(FunnelChain(uid, None, None, None)), it)
+        case (uid, batch, state) =>
+          var s =
+            state.getOption.getOrElse(FunnelChain(uid, None, None, None))
+          batch.toArray.sortBy(e => (e.ts, e.event_id)).foreach { e =>
+            e.event_type match {
+              case "view" if s.t_view.isEmpty =>
+                s = s.copy(t_view = Some(e.ts))
+              case "click" if s.t_view.isDefined && s.t_click.isEmpty &&
+                  e.ts > s.t_view.get =>
+                s = s.copy(t_click = Some(e.ts))
+              case "purchase" if s.t_click.isDefined &&
+                  s.t_purchase.isEmpty && e.ts > s.t_click.get =>
+                s = s.copy(t_purchase = Some(e.ts))
+              case _ => ()
+            }
+          }
           if (s.t_view.isDefined) {
             state.update(s)
             Iterator.single(s)
           } else Iterator.empty
       }
-  }
-
-  /** The [[funnelStream]] state machine on Spark 4's transformWithState
-    * API (r12) — the successor to flatMapGroupsWithState: typed named
-    * state ([[org.apache.spark.sql.streaming.ValueState]]) obtained
-    * from the processor handle instead of the single GroupState blob,
-    * per-state TTL available, timers decoupled from output mode, and
-    * the RocksDB state store required underneath (the provider conf is
-    * set by the caller/test; the checkpoint carries the store). Same
-    * fold, same in-order arrival contract, same row-set contract as
-    * the flatMapGroupsWithState twin — StreamingSpec pins both equal
-    * to the batch min-fold across a mid-stream split.
-    */
-  final class FunnelProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Ev, FunnelChain] {
-    @transient private var chain:
-      org.apache.spark.sql.streaming.ValueState[FunnelChain] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      chain = getHandle.getValueState[FunnelChain]("chain",
-        org.apache.spark.sql.Encoders.product[FunnelChain],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(uid: Long, it: Iterator[Ev],
-        tv: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[FunnelChain] = {
-      val s = advanceChain(
-        if (chain.exists()) chain.get()
-        else FunnelChain(uid, None, None, None), it)
-      if (s.t_view.isDefined) {
-        chain.update(s)
-        Iterator.single(s)
-      } else Iterator.empty
-    }
   }
 
   /** Input row for the timer-based sessionizer: [[Ev]] plus the
@@ -721,7 +682,7 @@ object StreamOps {
       n: Long, deadlineMs: Long)
 
   /** Idle-gap sessionizer on transformWithState with EVENT-TIME TIMERS
-    * (r12) — the capability the funnel twin doesn't exercise and the
+    * (r12) — the capability no data-driven fold exercises and the
     * reason the new API exists beyond typed state: a departed user's
     * LAST session can only close when the watermark passes
     * last + gap, which a data-driven fold (mapGroupsWithState without
@@ -734,7 +695,7 @@ object StreamOps {
     * the open session when event time really has moved past it.
     * State per key: one OpenSession (4 longs) + one timer.
     *
-    * IN-ORDER CONTRACT (same as the funnel twin): events for a key
+    * IN-ORDER CONTRACT (same as [[funnelStream]]): events for a key
     * must arrive in batches no older than that key's last timer-closed
     * session — an event behind a closed boundary starts a FRESH
     * session (closed state is gone), so append mode would emit a
@@ -810,17 +771,6 @@ object StreamOps {
       .transformWithState(new SessionTimerProcessor(gapUs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         org.apache.spark.sql.streaming.OutputMode.Append())
-  }
-
-  /** [[funnelStream]] through [[FunnelProcessor]]. */
-  def funnelStreamTws(events: org.apache.spark.sql.Dataset[Ev])
-      : org.apache.spark.sql.Dataset[FunnelChain] = {
-    implicit val chainEnc: org.apache.spark.sql.Encoder[FunnelChain] =
-      org.apache.spark.sql.Encoders.product[FunnelChain]
-    events.groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
-      .transformWithState(new FunnelProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
   }
 
   /** Streaming last-touch attribution — the real-time face of

@@ -12,19 +12,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * checkpoint size — 8 bytes beats a shingle string. The Jaccard
   * count over hashes equals the count over strings except under a
   * cross-doc 64-bit collision (~m_a·m_b/2^64 per pair — negligible).
+  * `ts_t` is the doc's event time under a [[Retention]] and null
+  * without one.
   */
 final case class BandedDoc(band: Int, bucket: Long, doc_id: Long,
-    shl: Seq[Long])
-
-/** [[BandedDoc]] plus the doc's event time — the retention-bounded
-  * variant's clock. The TIMESTAMP column itself rides through to the
-  * stateful operator (not a precomputed epoch), because Spark requires
-  * the watermarked attribute in the stateful operator's child output
-  * to allow event-time timeouts. */
-final case class BandedDocTs(band: Int, bucket: Long, doc_id: Long,
-    shl: Seq[Long], ts_t: java.sql.Timestamp) {
-  def tsMs: Long = ts_t.getTime
-}
+    shl: Seq[Long], ts_t: java.sql.Timestamp)
 
 /** A verified near-dup pair (same contract as Dedup.jaccardPairs). */
 final case class NearDupPair(a: Long, b: Long, n_common: Int,
@@ -33,9 +25,9 @@ final case class NearDupPair(a: Long, b: Long, n_common: Int,
 /** One perceptual-hash signature in one pigeonhole band bucket —
   * the full 4-band signature rides along so the in-state verify can
   * compute exact hamming (16 bytes/occupant; a doc occupies ≤4
-  * buckets). */
+  * buckets). `ts_t` as in [[BandedDoc]]. */
 final case class PhashBucketed(band: Int, bval: Int, doc_id: Long,
-    b0: Int, b1: Int, b2: Int, b3: Int) {
+    b0: Int, b1: Int, b2: Int, b3: Int, ts_t: java.sql.Timestamp) {
   def bands: Array[Int] = Array(b0, b1, b2, b3)
 }
 
@@ -43,14 +35,11 @@ final case class PhashBucketed(band: Int, bval: Int, doc_id: Long,
   * Multimodal.phashPairs row). */
 final case class PhashPair(a: Long, b: Long, hamming: Long)
 
-/** [[PhashBucketed]] plus the doc's event time — the retention-bounded
-  * perceptual variant's clock (the watermarked TIMESTAMP itself rides
-  * through, as in [[BandedDocTs]]). */
-final case class PhashBucketedTs(band: Int, bval: Int, doc_id: Long,
-    b0: Int, b1: Int, b2: Int, b3: Int, ts_t: java.sql.Timestamp) {
-  def bands: Array[Int] = Array(b0, b1, b2, b3)
-  def tsMs: Long = ts_t.getTime
-}
+/** Event-time retention of a stateful pair stream — "near-dups within
+  * the last `ms` milliseconds", the C4/CCNet regime that keeps state
+  * finite on an infinite stream. `tsCol` is the input's TIMESTAMP
+  * column, with `withWatermark(tsCol, ...)` applied by the caller. */
+final case class Retention(tsCol: String, ms: Long)
 
 /** One cluster-assigned vector flowing into the semantic-dedup
   * stateful prune. */
@@ -63,10 +52,13 @@ final case class KeptVec(vec_id: Long, e: Array[Double])
   * batch face's output). */
 final case class SemanticDecision(vec_id: Long, cid: Long, kept: Boolean)
 
-/** One event-timed key routed to its rotating-Bloom shard. */
+/** One event-timed key routed to its Bloom shard (`ts_us` is 0 when
+  * the dedup does not rotate). */
 final case class TsKey(g: Int, key: Long, ts_us: Long)
 
-/** Two-generation rotating-Bloom shard state (epoch in retention units). */
+/** Bloom shard state: the active bit array and, when the dedup
+  * rotates, the previous generation and the epoch (in retention units)
+  * — `prev` is empty and `epoch` unused otherwise. */
 final case class BloomEpochState(epoch: Long, active: Seq[Long],
     prev: Seq[Long])
 
@@ -92,26 +84,38 @@ final case class BloomEpochState(epoch: Long, active: Seq[Long],
   *   batch path's `.distinct()`; the spec collects to a set).
   * - State grows with the corpus — that is the operator's contract
   *   ("dedup against everything seen"). Production deployments bound
-  *   it with a retention policy: swap NoTimeout for event-time timeout
-  *   so buckets idle past the retention watermark are evicted ("dedup
-  *   within N days" — the C4/CCNet regime).
+  *   it by passing `retention = Some(Retention(tsCol, ms))`: buckets
+  *   idle past the retention watermark are evicted by event-time
+  *   timeout ("dedup within N days" — the C4/CCNet regime).
   * - Pairs are ordered (min, max) so emission order never affects the
   *   pair identity.
   */
 object StreamingDedup {
 
   /** docs: streaming DataFrame with (doc_id LONG, text STRING). Returns
-    * a streaming Dataset of verified pairs (append mode). */
-  def nearDupPairsStream(docs: DataFrame): Dataset[NearDupPair] = {
+    * a streaming Dataset of verified pairs (append mode).
+    *
+    * With `retention`, docs also carry the retention's watermarked
+    * TIMESTAMP column: a pair is reported iff the two docs' event times
+    * are within `retention.ms`, each bucket's state is kept alive
+    * `retention.ms` past its newest doc's event time, and buckets idle
+    * longer are EVICTED by the engine when the watermark passes (a doc
+    * arriving later simply starts the bucket fresh — near-dups of
+    * evicted docs are no longer reported, by design). State is bounded
+    * by stream rate × retention instead of corpus lifetime. Without
+    * it, state is kept forever (NoTimeout).
+    */
+  def nearDupPairsStream(docs: DataFrame,
+      retention: Option[Retention] = None): Dataset[NearDupPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    banded(docs, extras = Seq("shl"))
+    banded(withEventTime(docs, retention), extras = Seq("shl", "ts_t"))
       .select(col("band").cast("int").as("band"), col("bucket"),
-        col("doc_id"), col("shl"))
+        col("doc_id"), col("shl"), col("ts_t"))
       .as[BandedDoc]
       .groupByKey(d => (d.band, d.bucket))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(verifyAgainstState)
+      .flatMapGroupsWithState(OutputMode.Append, timeout(retention))(
+        verifyBucket(retention.map(_.ms)))
   }
 
   /** Streaming perceptual near-dup pairs — the real-time face of
@@ -131,18 +135,19 @@ object StreamingDedup {
     * and only the bucket whose band index equals it emits. No
     * cross-bucket coordination, no duplicate emission, no loss.
     *
-    * State contract matches [[nearDupPairsStream]]: NoTimeout base
-    * form (state ∝ bucket occupancy forever — bounded by the corpus,
-    * the right default for a bounded backfill), with the
-    * retention-eviction pattern of [[nearDupPairsStreamWithRetention]]
-    * composing the same way when an infinite stream needs it.
-    * In-batch arrivals process in doc_id order, so replay after a
-    * crash reproduces identical pair sets.
+    * State contract matches [[nearDupPairsStream]]: without
+    * `retention`, NoTimeout (state ∝ bucket occupancy forever —
+    * bounded by the corpus, the right default for a bounded backfill);
+    * with it, the same "near-dups within the last N days" contract,
+    * state bounded by stream rate × retention. In-batch arrivals
+    * process in doc_id order, so replay after a crash reproduces
+    * identical pair sets.
     *
-    * sigs: streaming DataFrame with (doc_id LONG, b0..b3 INT).
+    * sigs: streaming DataFrame with (doc_id LONG, b0..b3 INT), plus the
+    * retention's watermarked TIMESTAMP column when one is given.
     */
-  def phashPairsStream(sigs: DataFrame,
-      maxHamming: Int = 3): Dataset[PhashPair] = {
+  def phashPairsStream(sigs: DataFrame, maxHamming: Int = 3,
+      retention: Option[Retention] = None): Dataset[PhashPair] = {
     // same guard as the batch phashPairs: beyond hamming 3 the 4-band
     // pigeonhole no longer guarantees a shared band, so recall silently
     // drops AND the first-shared-band exactly-once rule stops covering
@@ -150,203 +155,131 @@ object StreamingDedup {
     require(maxHamming < 4, "pigeonhole over 4 bands covers hamming <= 3")
     val spark = sigs.sparkSession
     import spark.implicits._
-    sigs
+    withEventTime(sigs, retention)
       .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"),
-        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
-      .toDF("doc_id", "b0", "b1", "b2", "b3", "band", "bval")
-      .select(col("band").cast("int"), col("bval").cast("int"),
-        col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"))
-      .as[PhashBucketed]
-      .groupByKey(d => (d.band, d.bval))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(verifyPhashBucket(maxHamming))
-  }
-
-  /** Retention-bounded perceptual variant — the same "near-dups within
-    * the last N days" contract as [[nearDupPairsStreamWithRetention]],
-    * for the aHash signature streams: pairs are reported iff the two
-    * docs' event times are within `retentionMs` (enforced in the
-    * predicate — timeouts only fire for idle groups, so a
-    * batch-boundary race could otherwise resurrect expired pairs),
-    * bucket state prunes against the WATERMARK's retention window, and
-    * idle buckets are evicted by event-time timeout. State is bounded
-    * by stream rate × retention instead of corpus lifetime.
-    *
-    * sigs: streaming DataFrame with (doc_id LONG, b0..b3 INT,
-    * <tsCol> TIMESTAMP) and `withWatermark(tsCol, ...)` applied.
-    */
-  def phashPairsStreamWithRetention(sigs: DataFrame, tsCol: String,
-      retentionMs: Long, maxHamming: Int = 3): Dataset[PhashPair] = {
-    require(maxHamming < 4, "pigeonhole over 4 bands covers hamming <= 3")
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    sigs
-      .filter(col(tsCol).isNotNull)
-      .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"),
-        col(tsCol).as("ts_t"),
+        col("ts_t"),
         posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
       .toDF("doc_id", "b0", "b1", "b2", "b3", "ts_t", "band", "bval")
       .select(col("band").cast("int"), col("bval").cast("int"),
         col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3"),
         col("ts_t"))
-      .as[PhashBucketedTs]
+      .as[PhashBucketed]
       .groupByKey(d => (d.band, d.bval))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        verifyPhashWithRetention(maxHamming, retentionMs))
+      .flatMapGroupsWithState(OutputMode.Append, timeout(retention))(
+        verifyPhashBucket(maxHamming, retention.map(_.ms)))
   }
 
-  private[streaming] def verifyPhashWithRetention(maxHamming: Int,
-      retentionMs: Long)(
-      key: (Int, Int), rows: Iterator[PhashBucketedTs],
-      state: GroupState[Seq[PhashBucketedTs]]): Iterator[PhashPair] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val fresh = rows.filter(_.ts_t != null).toArray.sortBy(_.doc_id)
-    if (fresh.isEmpty) return Iterator.empty
-    val wm = state.getCurrentWatermarkMs()
-    // only state older than wm - retention can never pair again — the
-    // safe prune bound (not this batch's max: a late-but-valid arrival
-    // can be older)
-    val seen0 = state.getOption.getOrElse(Seq.empty).toVector
-      .filter(_.tsMs >= wm - retentionMs)
-    val (seen, out) = verifyPhashFold[PhashBucketedTs](fresh, seen0,
-      key._1, maxHamming, _.doc_id, _.bands,
-      pairOk = (s, d) => math.abs(d.tsMs - s.tsMs) <= retentionMs)
-    state.update(seen)
-    // GC armed from retained state's max event time (arming from this
-    // batch alone could regress the timeout on a late-only batch)
-    state.setTimeoutTimestamp(
-      math.max(seen.map(_.tsMs).max + retentionMs, wm + 1))
-    out
+  /** The `ts_t` column both pair families carry: the retention's
+    * event time, or a null TIMESTAMP without one. The TIMESTAMP column
+    * itself rides through to the stateful operator (not a precomputed
+    * epoch), because Spark requires the watermarked attribute in the
+    * stateful operator's child output to allow event-time timeouts.
+    * Null event times cannot participate in retention math (and the
+    * watermark ignores rather than filters them) — they are dropped at
+    * the plan level before the stateful operator. */
+  private def withEventTime(df: DataFrame,
+      retention: Option[Retention]): DataFrame = retention match {
+    case Some(r) =>
+      df.filter(col(r.tsCol).isNotNull).withColumn("ts_t", col(r.tsCol))
+    case None => df.withColumn("ts_t", lit(null).cast("timestamp"))
   }
 
-  private[streaming] def verifyPhashBucket(maxHamming: Int)(
-      key: (Int, Int), rows: Iterator[PhashBucketed],
-      state: GroupState[Seq[PhashBucketed]]): Iterator[PhashPair] = {
-    val (seen, out) = verifyPhashFold[PhashBucketed](
-      rows.toArray.sortBy(_.doc_id),
-      state.getOption.getOrElse(Seq.empty).toVector,
-      key._1, maxHamming, _.doc_id, _.bands, pairOk = (_, _) => true)
-    state.update(seen)
-    out
-  }
+  private def timeout(retention: Option[Retention]): GroupStateTimeout =
+    if (retention.isEmpty) GroupStateTimeout.NoTimeout
+    else GroupStateTimeout.EventTimeTimeout
 
-  /** Shared hamming verify-and-fold of both perceptual variants, the
-    * twin of [[verifyFold]]: arrivals (pre-sorted by doc_id) are
-    * compared against the folded set under `pairOk`; a pair within
-    * `maxHamming` is emitted only by the bucket of its FIRST shared
-    * band (`band`) — both sides' full signatures are local, so every
-    * sharing bucket computes the same answer. A re-delivered doc_id
-    * (upstream replay / duplicate ingest) is a no-op: appending it
-    * again would double bucket state and re-emit every pair involving
-    * the doc on later matches.
-    */
-  private def verifyPhashFold[T](fresh: Array[T], seen0: Vector[T],
-      band: Int, maxHamming: Int, id: T => Long, bands: T => Array[Int],
-      pairOk: (T, T) => Boolean): (Vector[T], Iterator[PhashPair]) = {
-    var seen = seen0
-    // O(1) replay check (r11 advice #4): the linear exists() scan made
-    // each state update O(bucket²) per batch on top of the pair scan
-    val seenIds = scala.collection.mutable.HashSet.empty[Long]
-    seen.foreach(s => seenIds += id(s))
-    val out = Vector.newBuilder[PhashPair]
-    fresh.foreach { d =>
-      if (seenIds.add(id(d))) {
-        val db = bands(d)
-        seen.foreach { s =>
-          if (id(s) != id(d) && pairOk(s, d)) {
-            val sb = bands(s)
-            var h = 0; var i = 0
-            while (i < 4) {
-              h += java.lang.Integer.bitCount(sb(i) ^ db(i)); i += 1
-            }
-            if (h <= maxHamming &&
-                (0 until 4).find(k => sb(k) == db(k)).contains(band))
-              out += (if (id(s) < id(d)) PhashPair(id(s), id(d), h.toLong)
-                else PhashPair(id(d), id(s), h.toLong))
-          }
-        }
-        seen :+= d
-      }
-    }
-    (seen, out.result().iterator)
-  }
-
-  /** Retention-bounded variant — "dedup within the last N days", the
-    * C4/CCNet regime that keeps state finite on an infinite stream:
-    * docs carry an event-time column (already watermarked by the
-    * caller), each bucket's state is kept alive `retentionMs` past its
-    * newest doc's event time, and buckets idle longer are EVICTED by
-    * the engine when the watermark passes (a doc arriving later simply
-    * starts the bucket fresh — near-dups of evicted docs are no longer
-    * reported, by design). State is bounded by stream rate × retention
-    * instead of corpus lifetime.
+  /** The one state rule of both pair families: each new arrival
+    * (sorted by doc_id, so replay is deterministic) is verified by
+    * `verify(arrival)(peer)` against the bucket's seen docs and the
+    * earlier arrivals of the same batch, then folded into state.
     *
-    * docs: streaming DataFrame with (doc_id LONG, text STRING,
-    * <tsCol> TIMESTAMP) and `withWatermark(tsCol, ...)` applied.
-    */
-  def nearDupPairsStreamWithRetention(docs: DataFrame, tsCol: String,
-      retentionMs: Long): Dataset[NearDupPair] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // null event times cannot participate in retention math (and the
-    // watermark ignores rather than filters them) — drop them at the
-    // plan level before the stateful operator
-    banded(docs.filter(col(tsCol).isNotNull).withColumn("ts_t", col(tsCol)),
-        extras = Seq("shl", "ts_t"))
-      .select(col("band").cast("int").as("band"), col("bucket"),
-        col("doc_id"), col("shl"), col("ts_t"))
-      .as[BandedDocTs]
-      .groupByKey(d => (d.band, d.bucket))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        verifyWithRetention(retentionMs))
-  }
-
-  /** Retention verify: a pair is reported iff the two docs' event
-    * times are within `retentionMs` of each other — enforced in the
-    * PREDICATE, not via state timeout, because timeouts only fire for
-    * groups receiving NO data in a batch: a bucket whose expired state
-    * meets a new arrival in the same batch would otherwise resurrect
-    * pairs past retention (batch-boundary-dependent results). The
-    * event-time timeout is only garbage collection for idle buckets.
-    * Storage is pruned against the WATERMARK's retention window (not
-    * this batch's max event time — a late-but-valid future arrival can
-    * be older than the batch max, and pruning to the batch max would
-    * silently lose its in-retention pairs).
-    */
-  private[streaming] def verifyWithRetention(retentionMs: Long)(
-      key: (Int, Long), rows: Iterator[BandedDocTs],
-      state: GroupState[Seq[BandedDocTs]]): Iterator[NearDupPair] = {
+    * A re-delivered doc_id (upstream replay / duplicate ingest, across
+    * batches or within one) is a no-op: appending it again would
+    * double bucket state and re-emit every pair involving the doc on
+    * later matches. The id set makes the check O(1) — a linear
+    * exists() scan made each state update O(bucket²) per batch on top
+    * of the pair scan.
+    *
+    * Without retention every arrival pairs with everything seen and
+    * state is kept forever. With `retentionMs`, a pair is reported iff
+    * the two docs' event times are within `retentionMs` of each other
+    * — enforced in the PREDICATE, not via state timeout, because
+    * timeouts only fire for groups receiving NO data in a batch: a
+    * bucket whose expired state meets a new arrival in the same batch
+    * would otherwise resurrect pairs past retention
+    * (batch-boundary-dependent results). The event-time timeout is
+    * only garbage collection for idle buckets. Storage is pruned
+    * against the WATERMARK's retention window (not this batch's max
+    * event time — a late-but-valid future arrival can be older than
+    * the batch max, and pruning to the batch max would silently lose
+    * its in-retention pairs). */
+  private def foldRetained[T: scala.reflect.ClassTag, P](
+      retentionMs: Option[Long], id: T => Long, ts: T => java.sql.Timestamp,
+      rows: Iterator[T], state: GroupState[Seq[T]])(
+      verify: T => T => Option[P]): Iterator[P] = {
     if (state.hasTimedOut) {
       state.remove()
       return Iterator.empty
     }
     // defensive double of the plan-level null filter: a null event
     // time must never NPE the whole query from inside state code
-    val fresh = rows.filter(_.ts_t != null).toArray.sortBy(_.doc_id)
+    val fresh = rows.filter(d => retentionMs.isEmpty || ts(d) != null)
+      .toArray.sortBy(id)
     if (fresh.isEmpty) return Iterator.empty
-    val wm = state.getCurrentWatermarkMs()
+    def ms(d: T): Long = ts(d).getTime
+    lazy val wm = state.getCurrentWatermarkMs()
+    var seen = state.getOption.getOrElse(Seq.empty).toVector
     // no future row can carry ts < watermark, so only state older than
     // wm - retention can never pair again — the safe prune bound
-    val seen0 = state.getOption.getOrElse(Seq.empty).toVector
-      .filter(_.tsMs >= wm - retentionMs)
-    val (seen, out) = verifyFold[BandedDocTs](fresh, seen0,
-      _.doc_id, _.shl,
-      pairOk = (s, d) => math.abs(d.tsMs - s.tsMs) <= retentionMs)
+    retentionMs.foreach(r => seen = seen.filter(ms(_) >= wm - r))
+    val pairOk: (T, T) => Boolean = retentionMs match {
+      case None => (_, _) => true
+      case Some(r) => (s, d) => math.abs(ms(d) - ms(s)) <= r
+    }
+    val seenIds = scala.collection.mutable.HashSet.empty[Long]
+    seen.foreach(s => seenIds += id(s))
+    val out = Vector.newBuilder[P]
+    fresh.foreach { d =>
+      if (seenIds.add(id(d))) {
+        val pair = verify(d)
+        seen.foreach(s => if (pairOk(s, d)) pair(s).foreach(out += _))
+        seen :+= d
+      }
+    }
     state.update(seen)
     // GC armed from the max event time across RETAINED state — arming
     // from this batch alone would let a late-only batch regress the
     // timeout and evict a doc still within retention of future valid
     // arrivals (must also stay ahead of the current watermark or Spark
     // rejects the timestamp)
-    state.setTimeoutTimestamp(
-      math.max(seen.map(_.tsMs).max + retentionMs, wm + 1))
-    out
+    retentionMs.foreach(r =>
+      state.setTimeoutTimestamp(math.max(seen.map(ms).max + r, wm + 1)))
+    out.result().iterator
   }
+
+  /** Exact hamming verify: a pair within `maxHamming` is emitted only
+    * by the bucket of its FIRST shared band — both sides' full
+    * signatures are local, so every sharing bucket computes the same
+    * answer. */
+  private def verifyPhashBucket(maxHamming: Int,
+      retentionMs: Option[Long])(
+      key: (Int, Int), rows: Iterator[PhashBucketed],
+      state: GroupState[Seq[PhashBucketed]]): Iterator[PhashPair] =
+    foldRetained[PhashBucketed, PhashPair](retentionMs, _.doc_id, _.ts_t,
+        rows, state) { d =>
+      val db = d.bands
+      s => {
+        val sb = s.bands
+        var h = 0; var i = 0
+        while (i < 4) {
+          h += java.lang.Integer.bitCount(sb(i) ^ db(i)); i += 1
+        }
+        if (h > maxHamming ||
+            !(0 until 4).find(k => sb(k) == db(k)).contains(key._1)) None
+        else if (s.doc_id < d.doc_id) Some(PhashPair(s.doc_id, d.doc_id, h))
+        else Some(PhashPair(d.doc_id, s.doc_id, h))
+      }
+    }
 
   /** Shared stateless prefix: shingles → MinHash signatures → 64-bit
     * shingle hashes → band explode. `extras` columns ride through to
@@ -357,54 +290,26 @@ object StreamingDedup {
     Dedup.bandBuckets(sigs, extras = extras)
   }
 
-  /** Verify each newly arrived doc against the bucket's seen docs (and
-    * the earlier arrivals of the same batch), emit passing pairs, fold
-    * the arrivals into state. Deterministic: arrivals processed in
-    * doc_id order. */
-  private[streaming] def verifyAgainstState(
+  /** Exact shingle-Jaccard verify with the batch verify join's integer
+    * threshold (3*common >= nA+nB  ⟺  J >= 0.5); (a, b) ordered by id
+    * with n_a/n_b following the same order. */
+  private[graft] def verifyBucket(retentionMs: Option[Long] = None)(
       key: (Int, Long), rows: Iterator[BandedDoc],
-      state: GroupState[Seq[BandedDoc]]): Iterator[NearDupPair] = {
-    // state-timeout invocations deliver an empty iterator; with
-    // NoTimeout this is just a safe no-op
-    val fresh = rows.toArray.sortBy(_.doc_id)
-    if (fresh.isEmpty) return Iterator.empty
-    val (seen, out) = verifyFold[BandedDoc](fresh,
-      state.getOption.getOrElse(Seq.empty).toVector,
-      _.doc_id, _.shl, pairOk = (_, _) => true)
-    state.update(seen)
-    out
-  }
-
-  /** Shared verify-and-fold core of both stateful variants: arrivals
-    * (pre-sorted by doc_id) are compared against the folded set under
-    * `pairOk` with the batch verify join's exact integer threshold
-    * (3*common >= nA+nB  ⟺  J >= 0.5); (a, b) ordered by id with
-    * n_a/n_b following the same order. One implementation so a
-    * threshold or tie-break change cannot silently diverge the
-    * retention twin from the batch-equivalence-tested unbounded one.
-    */
-  private def verifyFold[T](fresh: Array[T], seen0: Vector[T],
-      id: T => Long, shl: T => Seq[Long],
-      pairOk: (T, T) => Boolean): (Vector[T], Iterator[NearDupPair]) = {
-    var seen = seen0
-    val out = Vector.newBuilder[NearDupPair]
-    fresh.foreach { d =>
-      val dSet = shl(d).toSet
-      seen.foreach { s =>
-        if (id(s) != id(d) && pairOk(s, d)) {
-          val common = shl(s).count(dSet.contains)
-          if (common * 3 >= shl(d).size + shl(s).size) {
-            out += (if (id(s) < id(d))
-              NearDupPair(id(s), id(d), common, shl(s).size, shl(d).size)
-            else
-              NearDupPair(id(d), id(s), common, shl(d).size, shl(s).size))
-          }
-        }
+      state: GroupState[Seq[BandedDoc]]): Iterator[NearDupPair] =
+    foldRetained[BandedDoc, NearDupPair](retentionMs, _.doc_id, _.ts_t,
+        rows, state) { d =>
+      val dSet = d.shl.toSet
+      s => {
+        val common = s.shl.count(dSet.contains)
+        if (common * 3 < d.shl.size + s.shl.size) None
+        else if (s.doc_id < d.doc_id)
+          Some(NearDupPair(s.doc_id, d.doc_id, common, s.shl.size,
+            d.shl.size))
+        else
+          Some(NearDupPair(d.doc_id, s.doc_id, common, d.shl.size,
+            s.shl.size))
       }
-      seen = seen :+ d
     }
-    (seen, out.result().iterator)
-  }
 
   /** Streaming decontamination — the eval-leakage check as documents
     * ARRIVE: incoming (doc_id, text) rows are shingled and joined
@@ -447,7 +352,7 @@ object StreamingDedup {
     * order so a single-batch stream reproduces batch keep-lowest-id.
     * State = the deduped corpus itself, the operator's contract;
     * bound it with event-time retention exactly like
-    * [[nearDupPairsStreamWithRetention]] ("dedup within N days").
+    * [[nearDupPairsStream]]'s `retention` ("dedup within N days").
     * Cluster-level state also keys the skew lever: a hot cid's state
     * is one group, so re-split hot clusters with a finer quantizer
     * upstream (same recursion as batch).
@@ -512,105 +417,100 @@ object StreamingDedup {
     * from the same portable 2-universal family as Count-Min
     * ([[graft.functions.CountMinSketch.bucket]]), k = 3 rows. A key
     * lives in exactly one shard, so the no-duplicates guarantee is
-    * global. Within a batch keys process in (key) sorted order —
+    * global. Within a batch keys process in (ts_us, key) sorted order —
     * deterministic replay after a crash.
+    *
+    * `retentionUs` completes the streaming dedup triangle: exact state
+    * (`dropDuplicates` + watermark) is bounded by the watermark but
+    * exact; without retention this dedup is fixed-size but remembers
+    * FOREVER (re-ingesting last year's crawl stays silent); with it,
+    * it remembers a sliding window. `keys` then also carries `ts_us`
+    * (event time, µs), and two generations of bit arrays rotate on
+    * EVENT-TIME epochs of length `retentionUs`: a key is "seen" if
+    * either generation knows it, and every arrival re-inserts into the
+    * active generation. Guarantees: a duplicate within `retentionUs` of
+    * its predecessor is ALWAYS suppressed (its bits live in active or
+    * previous); a key idle longer than 2·retention is forgotten and
+    * re-emitted — by design, the C4-style "dedup within N days"
+    * contract at 2·G·m bits of state forever. Epoch rotation is
+    * event-time arithmetic, so a checkpoint replay reproduces the same
+    * decisions.
+    *
+    * ARRIVAL-ORDER CONTRACT of the rotating form (same class as
+    * [[StreamOps.funnelStream]] / scd2Stream): the always-suppressed
+    * guarantee holds under per-shard event-time-ordered arrival across
+    * micro-batches, with disorder tolerated up to one epoch (within a
+    * batch, rows are sorted by event time before applying, so
+    * intra-batch disorder is free). If OTHER keys advance a shard's
+    * epoch by ≥2 before a late duplicate arrives, its predecessor's
+    * bits have rotated out and the late duplicate is re-emitted even
+    * though its own gap is < retention — bound cross-batch lateness
+    * with an upstream watermark ≤ retention to stay inside the
+    * contract. An event whose timestamp lags the shard epoch entirely
+    * (e < epoch) is checked/inserted against the current generations —
+    * it can only cause a re-emit, never a wrongly-suppressed unique
+    * beyond Bloom ε.
     */
-  def bloomDedupStream(keys: DataFrame, mBits: Int,
-      shards: Int): Dataset[Long] = {
+  def bloomDedupStream(keys: DataFrame, mBits: Int, shards: Int,
+      retentionUs: Option[Long] = None): Dataset[Long] = {
     require(mBits % 64 == 0 && mBits > 0,
       s"mBits must be a positive multiple of 64, got $mBits")
     require(shards > 0, s"shards must be positive, got $shards")
+    require(retentionUs.forall(_ > 0), "retention must be positive")
     val spark = keys.sparkSession
     import spark.implicits._
     keys
       .select(pmod(hash(col("key")), lit(shards)).cast("int").as("g"),
-        col("key"))
-      .as[ShardKey]
-      .groupByKey(_.g)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(updateBloomShard(mBits))
-  }
-
-  /** Retention-bounded rotating-Bloom dedup — completing the streaming
-    * dedup triangle: exact state (`dropDuplicates` + watermark) is
-    * bounded by the watermark but exact; [[bloomDedupStream]] is
-    * fixed-size but remembers FOREVER (re-ingesting last year's crawl
-    * stays silent); this one remembers a sliding window. Two
-    * generations of bit arrays rotate on EVENT-TIME epochs of length
-    * `retentionUs`: a key is "seen" if either generation knows it, and
-    * every arrival re-inserts into the active generation. Guarantees:
-    * a duplicate within `retentionUs` of its predecessor is ALWAYS
-    * suppressed (its bits live in active or previous); a key idle
-    * longer than 2·retention is forgotten and re-emitted — by design,
-    * the C4-style "dedup within N days" contract at 2·G·m bits of
-    * state forever. Epoch rotation is event-time arithmetic, so a
-    * checkpoint replay reproduces the same decisions.
-    *
-    * ARRIVAL-ORDER CONTRACT (same class as [[StreamOps.funnelStream]] /
-    * scd2Stream): the always-suppressed guarantee holds under per-shard
-    * event-time-ordered arrival across micro-batches, with disorder
-    * tolerated up to one epoch (within a batch, rows are sorted by
-    * event time before applying, so intra-batch disorder is free). If
-    * OTHER keys advance a shard's epoch by ≥2 before a late duplicate
-    * arrives, its predecessor's bits have rotated out and the late
-    * duplicate is re-emitted even though its own gap is < retention —
-    * bound cross-batch lateness with an upstream watermark ≤ retention
-    * to stay inside the contract. An event whose timestamp lags the
-    * shard epoch entirely (e < epoch) is checked/inserted against the
-    * current generations — it can only cause a re-emit, never a
-    * wrongly-suppressed unique beyond Bloom ε.
-    */
-  def bloomDedupStreamRotating(keys: DataFrame, mBits: Int, shards: Int,
-      retentionUs: Long): Dataset[Long] = {
-    require(mBits % 64 == 0 && mBits > 0,
-      s"mBits must be a positive multiple of 64, got $mBits")
-    require(shards > 0 && retentionUs > 0, "shards/retention must be positive")
-    val spark = keys.sparkSession
-    import spark.implicits._
-    keys
-      .select(pmod(hash(col("key")), lit(shards)).cast("int").as("g"),
-        col("key"), col("ts_us"))
+        col("key"),
+        (if (retentionUs.isEmpty) lit(0L) else col("ts_us")).as("ts_us"))
       .as[TsKey]
       .groupByKey(_.g)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(updateRotatingShard(mBits, retentionUs))
+        GroupStateTimeout.NoTimeout)(updateBloomShard(mBits, retentionUs))
   }
 
-  private[graft] def updateRotatingShard(mBits: Int, retentionUs: Long)(
+  private[graft] def updateBloomShard(mBits: Int,
+      retentionUs: Option[Long] = None)(
       g: Int, batch: Iterator[TsKey],
       state: GroupState[BloomEpochState]): Iterator[Long] = {
+    require(mBits % 64 == 0, "mBits must be a multiple of 64")
     val words = mBits / 64
-    var s = state.getOption.getOrElse(
-      BloomEpochState(Long.MinValue, Seq.fill(words)(0L), Seq.fill(words)(0L)))
+    // without retention there is no second generation: prev stays empty
+    val s = state.getOption.getOrElse(BloomEpochState(Long.MinValue,
+      Seq.fill(words)(0L),
+      if (retentionUs.isEmpty) Seq.empty else Seq.fill(words)(0L)))
     var active = s.active.toArray
     var prev = s.prev.toArray
     var epoch = s.epoch
+    def has(gen: Array[Long], b: Int): Boolean =
+      gen.nonEmpty && (gen(b >> 6) & (1L << (b & 63))) != 0L
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     batch.toArray.sortBy(t => (t.ts_us, t.key)).foreach { tk =>
-      val e = Math.floorDiv(tk.ts_us, retentionUs)
-      if (epoch == Long.MinValue) epoch = e
-      if (e == epoch + 1) {
-        // normal rotation: active ages into previous
-        prev = active
-        active = new Array[Long](words)
-        epoch = e
-      } else if (e > epoch) {
-        // gap ≥ 2 epochs: after two rotations both generations would be
-        // all-zero anyway, so jump directly (round-9 verdict #4: the old
-        // one-step `while` loop allocated a fresh array per elapsed epoch
-        // — a single corrupt far-future timestamp, e.g. ns parsed as µs,
-        // spun the task through millions of rotations and poisoned the
-        // checkpointed epoch via an effectively-hung state update).
-        // Semantically identical to stepping: every key is forgotten.
-        prev = new Array[Long](words)
-        active = new Array[Long](words)
-        epoch = e
+      retentionUs.foreach { r =>
+        val e = Math.floorDiv(tk.ts_us, r)
+        if (epoch == Long.MinValue) epoch = e
+        if (e == epoch + 1) {
+          // normal rotation: active ages into previous
+          prev = active
+          active = new Array[Long](words)
+          epoch = e
+        } else if (e > epoch) {
+          // gap ≥ 2 epochs: after two rotations both generations would
+          // be all-zero anyway, so jump directly (round-9 verdict #4:
+          // the old one-step `while` loop allocated a fresh array per
+          // elapsed epoch — a single corrupt far-future timestamp, e.g.
+          // ns parsed as µs, spun the task through millions of rotations
+          // and poisoned the checkpointed epoch via an effectively-hung
+          // state update). Semantically identical to stepping: every key
+          // is forgotten.
+          prev = new Array[Long](words)
+          active = new Array[Long](words)
+          epoch = e
+        }
       }
       val bits = (0 until 3).map(i =>
         graft.functions.CountMinSketch.bucket(tk.key, i, mBits))
-      val seen = bits.forall(b =>
-        ((active(b >> 6) | prev(b >> 6)) & (1L << (b & 63))) != 0L)
-      if (!seen) out += tk.key
+      if (!bits.forall(b => has(active, b) || has(prev, b))) out += tk.key
       // re-insert on every arrival: a continuously-seen key never ages out
       bits.foreach(b => active(b >> 6) |= 1L << (b & 63))
     }
@@ -642,24 +542,20 @@ object StreamingDedup {
     * history never re-shingled, and the index can carry LSM-compacted
     * bucketed segments ([[graft.ext.Dedup.compactSegments]]) under a
     * running stream: the fold filter swap is atomic for this reader
-    * too. */
-  def segmentedFoldBatch(indexDir: String, pairsDir: String)(
-      batch: DataFrame, batchId: Long): Unit =
-    segmentedFoldBatch(indexDir, pairsDir, None)(batch, batchId)
-
-  /** [[segmentedFoldBatch]] under a [[graft.ext.Dedup
-    * .CompactionPolicy]] (r17 verdict #8): after each batch folds,
-    * the policy is consulted and minor/major compactions fire
-    * AUTOMATICALLY at the measured cadence — the long-running stream
-    * maintains its own steady-state layout (bounded plain tail,
-    * bounded flavor count, dial-bounded files) with no manual compact
-    * calls. Replay-safe: a replayed batch short-circuits before the
-    * policy runs, and a compaction the crash skipped simply fires
-    * after the next fresh batch (the thresholds are level-based, not
-    * edge-based). Compaction under the live stream is the already-
-    * pinned atomic swap. */
+    * too.
+    *
+    * Under a [[graft.ext.Dedup.CompactionPolicy]] (r17 verdict #8),
+    * the policy is consulted after each batch folds and minor/major
+    * compactions fire AUTOMATICALLY at the measured cadence — the
+    * long-running stream maintains its own steady-state layout
+    * (bounded plain tail, bounded flavor count, dial-bounded files)
+    * with no manual compact calls. Replay-safe: a replayed batch
+    * short-circuits before the policy runs, and a compaction the crash
+    * skipped simply fires after the next fresh batch (the thresholds
+    * are level-based, not edge-based). Compaction under the live
+    * stream is the already-pinned atomic swap. */
   def segmentedFoldBatch(indexDir: String, pairsDir: String,
-      policy: Option[Dedup.CompactionPolicy])(
+      policy: Option[Dedup.CompactionPolicy] = None)(
       batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     val seg = f"b$batchId%09d"
@@ -893,25 +789,5 @@ object StreamingDedup {
       s"no kept batch sinks under $keptDir — has the curation stream " +
         "committed any batch yet?")
     s.read.parquet(dirs: _*)
-  }
-
-  private[graft] def updateBloomShard(mBits: Int)(
-      g: Int, batch: Iterator[ShardKey],
-      state: GroupState[Seq[Long]]): Iterator[Long] = {
-    require(mBits % 64 == 0, "mBits must be a multiple of 64")
-    val words = state.getOption.map(_.toArray)
-      .getOrElse(new Array[Long](mBits / 64))
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    batch.toArray.sortBy(_.key).foreach { sk =>
-      val bits = (0 until 3).map(i =>
-        graft.functions.CountMinSketch.bucket(sk.key, i, mBits))
-      val seen = bits.forall(b => (words(b >> 6) & (1L << (b & 63))) != 0L)
-      if (!seen) {
-        out += sk.key
-        bits.foreach(b => words(b >> 6) |= 1L << (b & 63))
-      }
-    }
-    state.update(words.toSeq)
-    out.iterator
   }
 }

@@ -227,7 +227,7 @@ class ExtSpec extends SparkSpec {
         s"${p.token} blew its budget")
       assert(p.candidateProb(0.5) >= 0.95,
         s"${p.token} misses the recall floor at J*")
-      val got = Dedup.minhashDedupPlanned(corpus, p)
+      val got = Dedup.minhashDedup(corpus, p)
         .select("a", "b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == want,

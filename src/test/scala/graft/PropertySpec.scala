@@ -622,19 +622,21 @@ class PropertySpec extends SparkSpec {
       // simulate the shard fold across an arbitrary 2-batch split with
       // carried state, exactly as flatMapGroupsWithState would drive it
       val cut = keys.length / 2
-      val s0 = org.apache.spark.sql.streaming.TestGroupState.create[Seq[Long]](
-        org.apache.spark.api.java.Optional.empty(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        0L, org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
+      val s0 = org.apache.spark.sql.streaming.TestGroupState
+        .create[graft.streaming.BloomEpochState](
+          org.apache.spark.api.java.Optional.empty(),
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
+          0L, org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
       val out1 = graft.streaming.StreamingDedup.updateBloomShard(mBits)(
-        0, keys.take(cut).map(k => graft.streaming.ShardKey(0, k)).iterator,
+        0, keys.take(cut).map(k => graft.streaming.TsKey(0, k, 0L)).iterator,
         s0).toList
-      val s1 = org.apache.spark.sql.streaming.TestGroupState.create[Seq[Long]](
-        org.apache.spark.api.java.Optional.of(s0.get),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        0L, org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
+      val s1 = org.apache.spark.sql.streaming.TestGroupState
+        .create[graft.streaming.BloomEpochState](
+          org.apache.spark.api.java.Optional.of(s0.get),
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
+          0L, org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
       val out2 = graft.streaming.StreamingDedup.updateBloomShard(mBits)(
-        0, keys.drop(cut).map(k => graft.streaming.ShardKey(0, k)).iterator,
+        0, keys.drop(cut).map(k => graft.streaming.TsKey(0, k, 0L)).iterator,
         s1).toList
       val all = out1 ++ out2
       assert(all.size == all.distinct.size,
@@ -657,41 +659,68 @@ class PropertySpec extends SparkSpec {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     val mBits = 4096
     val words = mBits / 64
-    // plain bloom: Seq[Long] state
-    var bState: Seq[Long] = null
-    Seq(10, 100, 1000, 10000).foldLeft(0L) { (base, n) =>
-      val st = TestGroupState.create[Seq[Long]](
-        if (bState == null) Optional.empty() else Optional.of(bState),
+    // plain bloom: ONE generation of exactly `words` longs, no second
+    // generation; rotating: epoch + two generations, each exactly
+    // `words` longs, across batches that also ROTATE epochs (ts
+    // advances past the retention) — rotation must swap arrays, never
+    // accumulate them
+    val R = 1000L
+    Seq(None, Some(R)).foreach { retention =>
+      var st0: graft.streaming.BloomEpochState = null
+      Seq(10, 100, 1000, 10000).zipWithIndex.foldLeft(0L) {
+        case (base, (n, i)) =>
+          val st = TestGroupState.create[graft.streaming.BloomEpochState](
+            if (st0 == null) Optional.empty() else Optional.of(st0),
+            GroupStateTimeout.NoTimeout, 0L, Optional.empty(),
+            hasTimedOut = false)
+          graft.streaming.StreamingDedup.updateBloomShard(mBits, retention)(
+            0, (base until base + n).map(k =>
+              graft.streaming.TsKey(0, k, i * R + 5L)).iterator, st)
+            .size: Unit
+          st0 = st.get
+          val prevWords = if (retention.isEmpty) 0 else words
+          assert(st0.active.length == words &&
+              st0.prev.length == prevWords,
+            s"bloom state (retention $retention) grew to " +
+              s"${st0.active.length}/${st0.prev.length} words after " +
+              s"${base + n} keys")
+          base + n
+      }: Unit
+    }
+  }
+
+  test("a replayed near-dup doc is a no-op: bucket state does not grow " +
+      "and no pair is re-emitted") {
+    // a re-delivered doc_id (upstream replay / duplicate ingest) must not
+    // re-enter bucket state, across batches or within one: appending it
+    // again would double the bucket and re-emit every later pair
+    // involving the doc. Drives the verify function the way
+    // flatMapGroupsWithState does, with carried state.
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    def doc(id: Long) =
+      graft.streaming.BandedDoc(0, 7L, id, Seq(1L, 2L, 3L, 4L), null)
+    var st0: Seq[graft.streaming.BandedDoc] = null
+    def batch(ids: Long*): Set[(Long, Long)] = {
+      val st = TestGroupState.create[Seq[graft.streaming.BandedDoc]](
+        if (st0 == null) Optional.empty() else Optional.of(st0),
         GroupStateTimeout.NoTimeout, 0L, Optional.empty(),
         hasTimedOut = false)
-      graft.streaming.StreamingDedup.updateBloomShard(mBits)(
-        0, (base until base + n).map(k =>
-          graft.streaming.ShardKey(0, k)).iterator, st).size: Unit
-      bState = st.get
-      assert(bState.length == words,
-        s"bloom state grew to ${bState.length} words after ${base + n} keys")
-      base + n
+      val out = graft.streaming.StreamingDedup.verifyBucket()(
+        (0, 7L), ids.map(doc).iterator, st).map(p => (p.a, p.b)).toList
+      assert(out.size == out.distinct.size, s"pair emitted twice: $out")
+      st0 = st.get
+      out.toSet
     }
-    // rotating: epoch + two generations, each exactly `words` longs,
-    // across batches that also ROTATE epochs (ts advances past the
-    // retention) — rotation must swap arrays, never accumulate them
-    val R = 1000L
-    var rState: graft.streaming.BloomEpochState = null
-    Seq(10, 100, 1000, 10000).zipWithIndex.foldLeft(0L) {
-      case (base, (n, i)) =>
-        val st = TestGroupState.create[graft.streaming.BloomEpochState](
-          if (rState == null) Optional.empty() else Optional.of(rState),
-          GroupStateTimeout.NoTimeout, 0L, Optional.empty(),
-          hasTimedOut = false)
-        graft.streaming.StreamingDedup.updateRotatingShard(mBits, R)(
-          0, (base until base + n).map(k =>
-            graft.streaming.TsKey(0, k, i * R + 5L)).iterator, st).size: Unit
-        rState = st.get
-        assert(rState.active.length == words && rState.prev.length == words,
-          s"rotating state grew (${rState.active.length}/" +
-            s"${rState.prev.length} words) after ${base + n} keys")
-        base + n
-    }: Unit
+    assert(batch(1L).isEmpty)
+    assert(batch(1L).isEmpty, "a replayed doc paired with itself")
+    assert(st0.map(_.doc_id) == Seq(1L), s"replay grew state: $st0")
+    // a match plus an in-batch duplicate of it: one pair, one state entry
+    assert(batch(2L, 2L) == Set((1L, 2L)))
+    assert(st0.map(_.doc_id) == Seq(1L, 2L), s"duplicate grew state: $st0")
+    // replaying the first doc after the match re-emits nothing
+    assert(batch(1L).isEmpty, "a replayed doc re-emitted its pair")
+    assert(st0.map(_.doc_id) == Seq(1L, 2L))
   }
 
   test("shinglesUdf equals the declarative shingles for arbitrary " +

@@ -497,24 +497,37 @@ class StreamingSpec extends SparkSpec {
     store.append(corpus.filter(org.apache.spark.sql.functions
       .col("doc_id") >= graft.ext.Dedup.PlantedOffset), "scope", "sd")
     val stream = store.readStream(spark, "scope", "sd", docSchema)
-    val q = graft.streaming.StreamingDedup.nearDupPairsStream(stream)
-      .writeStream.format("memory").queryName("t_streamdedup")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // at-least-once per shared bucket: dedupe to the pair set
-    val got = spark.table("t_streamdedup")
-      .select("a", "b", "n_common", "n_a", "n_b")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
-        r.getInt(4))).toSet
     val want = graft.ext.Dedup.minhashDedup(corpus)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
         r.getInt(4))).toSet
-    assert(got == want,
-      s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
-    assert(got.nonEmpty, "planted near-dups must be found")
+    assert(want.nonEmpty, "planted near-dups must be found")
+    // the same data without and with a retention: at one constant
+    // event time every pair is inside a 1-day retention, so the
+    // retention path must find exactly the batch pairs too
+    val dayMs = 24L * 3600 * 1000
+    Seq(
+      "t_streamdedup" -> graft.streaming.StreamingDedup
+        .nearDupPairsStream(stream),
+      "t_streamdedupday" -> graft.streaming.StreamingDedup.nearDupPairsStream(
+        stream.withColumn("ts_t", org.apache.spark.sql.functions
+            .lit("2026-01-01 00:00:00").cast("timestamp"))
+          .withWatermark("ts_t", "1 hour"),
+        Some(graft.streaming.Retention("ts_t", dayMs)))
+    ).foreach { case (name, pairs) =>
+      val q = pairs.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$base/ckpt_$name")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      // at-least-once per shared bucket: dedupe to the pair set
+      val got = spark.table(name)
+        .select("a", "b", "n_common", "n_a", "n_b")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
+          r.getInt(4))).toSet
+      assert(got == want, s"$name: " +
+        s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+    }
   }
 
   test("streaming semantic dedup equals the batch prune across micro-batches") {
@@ -627,8 +640,8 @@ class StreamingSpec extends SparkSpec {
       .withColumn("ts_t", col("ts").cast("timestamp"))
       .withWatermark("ts_t", "0 seconds")
     val q = graft.streaming.StreamingDedup
-      .nearDupPairsStreamWithRetention(stream, "ts_t",
-        retentionMs = 24L * 3600 * 1000)
+      .nearDupPairsStream(stream,
+        Some(graft.streaming.Retention("ts_t", 24L * 3600 * 1000)))
       .writeStream.format("memory").queryName("t_streamdedupret")
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow()).start()
@@ -642,7 +655,7 @@ class StreamingSpec extends SparkSpec {
       a < graft.ext.Dedup.PlantedOffset && b >= graft.ext.Dedup.PlantedOffset }
     assert(crossRetention.isEmpty,
       s"evicted-state pairs leaked: ${crossRetention.take(5)}")
-    // sanity: the unbounded twin DOES find those pairs on the same data
+    // sanity: without retention the same data DOES yield those pairs
     val unbounded = graft.streaming.StreamingDedup.nearDupPairsStream(
       store.readStream(spark, "scope", "sr", docSchema).drop("ts"))
     val q2 = unbounded.writeStream.format("memory")
@@ -655,7 +668,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(allPairs.exists { case (a, b) =>
       a < graft.ext.Dedup.PlantedOffset && b >= graft.ext.Dedup.PlantedOffset },
-      "unbounded twin must find the cross-batch pairs retention dropped")
+      "the unbounded form must find the cross-batch pairs retention dropped")
   }
 
   test("append-mode windowed agg emits finalized windows, evicts state") {
@@ -1042,6 +1055,34 @@ class StreamingSpec extends SparkSpec {
       .toSet
     assert(got == want,
       s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+    // mid-stream split: the second batch's folds resume from the first
+    // batch's checkpointed chains
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val evs = Tables(spark, sf, "events")
+      .orderBy("ts", "event_id")
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .as[Ev].collect().toSeq
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Ev]
+    val q2 = StreamOps.funnelStream(ms.toDS())
+      .toDF().writeStream
+      .format("memory").queryName("t_funnelsplit").outputMode("update")
+      .option("checkpointLocation", s"$base/ckpt_split")
+      .start()
+    val (b1, b2) = evs.splitAt(evs.size / 2)
+    ms.addData(b1)
+    q2.processAllAvailable()
+    ms.addData(b2)
+    q2.processAllAvailable()
+    q2.stop()
+    val split = spark.table("t_funnelsplit").collect()
+      .map(r => (r.getLong(0), opt(r, 1), opt(r, 2), opt(r, 3)))
+      .groupBy(_._1)
+      .map { case (_, rs) =>
+        rs.maxBy(t => t._2.size + t._3.size + t._4.size) }
+      .toSet
+    assert(split == want,
+      s"split: missing=${(want -- split).take(3)} extra=${(split -- want).take(3)}")
   }
 
   test("dropDuplicatesWithinWatermark: exact dedup with watermark-bounded " +
@@ -1051,7 +1092,7 @@ class StreamingSpec extends SparkSpec {
     // bloom): exact no-dup guarantee only within the watermark delay,
     // in exchange for state that the watermark evicts — keys older
     // than the delay are forgotten and a very-late duplicate re-emits
-    // BY DESIGN (the same contract as bloomDedupStreamRotating, with
+    // BY DESIGN (the same contract as bloomDedupStream's retentionUs, with
     // exactness instead of eps inside the window)
     val sp = spark
     import sp.implicits._
@@ -1088,57 +1129,6 @@ class StreamingSpec extends SparkSpec {
     assert(got == Set((1L, 100L), (2L, 101L), (3L, 107L), (9L, 1000L),
       (1L, 1001L)),
       s"got=$got — in-window dups must drop, evicted keys must re-emit")
-  }
-
-  test("transformWithState funnel equals the flatMapGroupsWithState twin " +
-      "and the batch min-fold (RocksDB store, mid-stream split)") {
-    // Spark 4's stateful successor API: typed named ValueState from the
-    // processor handle instead of the GroupState blob; requires the
-    // RocksDB state store provider. Same fold => same chains.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val sp = spark
-      import sp.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val evs = Tables(spark, sf, "events")
-        .orderBy("ts", "event_id")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .as[Ev].collect().toSeq
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Ev]
-      val q = StreamOps.funnelStreamTws(ms.toDS())
-        .toDF().writeStream
-        .format("memory").queryName("t_funneltws").outputMode("update")
-        .option("checkpointLocation", s"${freshDir("funneltws")}/ckpt")
-        .start()
-      // mid-stream split: batch-2 folds resume from RocksDB state
-      val (b1, b2) = evs.splitAt(evs.size / 2)
-      ms.addData(b1)
-      q.processAllAvailable()
-      ms.addData(b2)
-      q.processAllAvailable()
-      q.stop()
-      def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
-        if (r.isNullAt(i)) None else Some(r.getLong(i))
-      val got = spark.table("t_funneltws").collect()
-        .map(r => (r.getLong(0), opt(r, 1), opt(r, 2), opt(r, 3)))
-        .groupBy(_._1)
-        .map { case (_, rs) =>
-          rs.maxBy(t => t._2.size + t._3.size + t._4.size) }
-        .toSet
-      val want = graft.ops.Funnel.funnelOf(Tables(spark, sf, "events"))
-        .collect()
-        .map(r => (r.getLong(0), opt(r, 1), opt(r, 2), opt(r, 3)))
-        .toSet
-      assert(got == want,
-        s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
-    } finally prevProv match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
-    }
   }
 
   test("streaming last-touch attributions equal the batch window form") {
@@ -1699,8 +1689,8 @@ class StreamingSpec extends SparkSpec {
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long)]
     val q = graft.streaming.StreamingDedup
-      .bloomDedupStreamRotating(ms.toDF().toDF("key", "ts_us"),
-        mBits = 64 * 512, shards = 2, retentionUs = R)
+      .bloomDedupStream(ms.toDF().toDF("key", "ts_us"),
+        mBits = 64 * 512, shards = 2, retentionUs = Some(R))
       .writeStream.format("memory").queryName("t_rotbloom")
       .outputMode("append")
       .option("checkpointLocation", s"${freshDir("rotbloom")}/ckpt")
@@ -1749,8 +1739,8 @@ class StreamingSpec extends SparkSpec {
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long)]
     val q = graft.streaming.StreamingDedup
-      .bloomDedupStreamRotating(ms.toDF().toDF("key", "ts_us"),
-        mBits = 64 * 512, shards = 2, retentionUs = R)
+      .bloomDedupStream(ms.toDF().toDF("key", "ts_us"),
+        mBits = 64 * 512, shards = 2, retentionUs = Some(R))
       .writeStream.format("memory").queryName("t_rotbloomhostile")
       .outputMode("append")
       .option("checkpointLocation", s"${freshDir("rotbloomhostile")}/ckpt")
@@ -1796,35 +1786,50 @@ class StreamingSpec extends SparkSpec {
       graft.ext.Multimodal.phashPayloads(spark, sf)).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
         r.getInt(4)))
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Int, Int, Int, Int)]
-    val q = graft.streaming.StreamingDedup
-      .phashPairsStream(ms.toDF().toDF("doc_id", "b0", "b1", "b2", "b3"))
-      .toDF().writeStream
-      .format("memory").queryName("t_phashstream").outputMode("append")
-      .option("checkpointLocation", s"${freshDir("phashstream")}/ckpt")
-      .start()
-    // split so twin pairs straddle the batch boundary: state must carry
-    // batch 1's signatures into batch 2's verification
-    val (b1, b2) = sigs.sortBy(_._1).splitAt(sigs.length / 2)
-    ms.addData(b1.toSeq)
-    q.processAllAvailable()
-    ms.addData(b2.toSeq)
-    q.processAllAvailable()
-    q.stop()
-    val emitted = spark.table("t_phashstream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // no duplicate emissions: the first-shared-band rule must fire in
-    // exactly one bucket per pair
-    assert(emitted.length == emitted.distinct.length,
-      s"duplicate pair emissions: ${emitted.groupBy(identity).collect { case (k, v) if v.length > 1 => k }.take(3).toSeq}")
     val want = graft.ext.Multimodal.phashPairs(
       graft.ext.Multimodal.phashBandsOf(
         graft.ext.Multimodal.phashPayloads(spark, sf))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(emitted.toSet == want,
-      s"missing=${(want -- emitted.toSet).take(3)} extra=${(emitted.toSet -- want).take(3)}")
     assert(want.nonEmpty)
+    // the same signatures without and with a retention: at one
+    // constant event time every pair is inside a 1-day retention, so
+    // the retention path must emit exactly the batch pairs too
+    val day = Some(graft.streaming.Retention("ts", 24L * 3600 * 1000))
+    Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.Dataset[graft.streaming.PhashPair])](
+      "t_phashstream" -> (df => graft.streaming.StreamingDedup
+        .phashPairsStream(df)),
+      "t_phashstreamday" -> (df => graft.streaming.StreamingDedup
+        .phashPairsStream(
+          df.withColumn("ts", org.apache.spark.sql.functions
+              .lit("2026-01-01 00:00:00").cast("timestamp"))
+            .withWatermark("ts", "1 hour"),
+          retention = day))
+    ).foreach { case (name, pairs) =>
+      val ms = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, Int, Int, Int, Int)]
+      val q = pairs(ms.toDF().toDF("doc_id", "b0", "b1", "b2", "b3"))
+        .toDF().writeStream
+        .format("memory").queryName(name).outputMode("append")
+        .option("checkpointLocation", s"${freshDir(name)}/ckpt")
+        .start()
+      // split so twin pairs straddle the batch boundary: state must
+      // carry batch 1's signatures into batch 2's verification
+      val (b1, b2) = sigs.sortBy(_._1).splitAt(sigs.length / 2)
+      ms.addData(b1.toSeq)
+      q.processAllAvailable()
+      ms.addData(b2.toSeq)
+      q.processAllAvailable()
+      q.stop()
+      val emitted = spark.table(name).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      // no duplicate emissions: the first-shared-band rule must fire in
+      // exactly one bucket per pair
+      assert(emitted.length == emitted.distinct.length,
+        s"$name: duplicate pair emissions: ${emitted.groupBy(identity).collect { case (k, v) if v.length > 1 => k }.take(3).toSeq}")
+      assert(emitted.toSet == want,
+        s"$name: missing=${(want -- emitted.toSet).take(3)} extra=${(emitted.toSet -- want).take(3)}")
+    }
   }
 
   test("streaming token drift equals the windowed batch computation " +
@@ -2003,11 +2008,12 @@ class StreamingSpec extends SparkSpec {
       .phashPairsStream(
         ms.toDF().toDF("doc_id", "b0", "b1", "b2", "b3"), maxHamming = 4))
     intercept[IllegalArgumentException](graft.streaming.StreamingDedup
-      .phashPairsStreamWithRetention(
+      .phashPairsStream(
         ms.toDF().toDF("doc_id", "b0", "b1", "b2", "b3")
           .withColumn("ts", org.apache.spark.sql.functions
             .current_timestamp()).withWatermark("ts", "1 second"),
-        "ts", 60000L, maxHamming = 4))
+        maxHamming = 4,
+        retention = Some(graft.streaming.Retention("ts", 60000L))))
     val q = graft.streaming.StreamingDedup
       .phashPairsStream(ms.toDF().toDF("doc_id", "b0", "b1", "b2", "b3"))
       .toDF().writeStream
@@ -2043,10 +2049,10 @@ class StreamingSpec extends SparkSpec {
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Int, Int, Int, Int, java.sql.Timestamp)]
     val q = graft.streaming.StreamingDedup
-      .phashPairsStreamWithRetention(
+      .phashPairsStream(
         ms.toDF().toDF("doc_id", "b0", "b1", "b2", "b3", "ts")
           .withWatermark("ts", "1 second"),
-        "ts", retentionMs = R)
+        retention = Some(graft.streaming.Retention("ts", R)))
       .toDF().writeStream
       .format("memory").queryName("t_phashret").outputMode("append")
       .option("checkpointLocation", s"${freshDir("phashret")}/ckpt")
