@@ -1055,31 +1055,43 @@ class StreamingSpec extends SparkSpec {
       .toSet
     assert(got == want,
       s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
-    // mid-stream split: the second batch's folds resume from the first
-    // batch's checkpointed chains
+  }
+
+  test("funnelStream mid-stream split: two micro-batches equal the batch min-fold") {
+    // the second batch's folds resume from the first batch's checkpointed
+    // chains, so splitting the input mid-stream changes no final chain
+    val base = freshDir("funnelsplit")
+    val sp = spark
+    import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
     val evs = Tables(spark, sf, "events")
       .orderBy("ts", "event_id")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .as[Ev].collect().toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Ev]
-    val q2 = StreamOps.funnelStream(ms.toDS())
+    val q = StreamOps.funnelStream(ms.toDS())
       .toDF().writeStream
       .format("memory").queryName("t_funnelsplit").outputMode("update")
-      .option("checkpointLocation", s"$base/ckpt_split")
+      .option("checkpointLocation", s"$base/ckpt")
       .start()
     val (b1, b2) = evs.splitAt(evs.size / 2)
     ms.addData(b1)
-    q2.processAllAvailable()
+    q.processAllAvailable()
     ms.addData(b2)
-    q2.processAllAvailable()
-    q2.stop()
+    q.processAllAvailable()
+    q.stop()
     val split = spark.table("t_funnelsplit").collect()
       .map(r => (r.getLong(0), opt(r, 1), opt(r, 2), opt(r, 3)))
       .groupBy(_._1)
       .map { case (_, rs) =>
         rs.maxBy(t => t._2.size + t._3.size + t._4.size) }
+      .toSet
+    val want = graft.ops.Funnel.funnelOf(Tables(spark, sf, "events"))
+      .collect()
+      .map(r => (r.getLong(0), opt(r, 1), opt(r, 2), opt(r, 3)))
       .toSet
     assert(split == want,
       s"split: missing=${(want -- split).take(3)} extra=${(split -- want).take(3)}")
